@@ -3,17 +3,20 @@
 
     python3 perfbench/run.py --workload <name> --seed <n> --seconds <s> --trace <0|1>
 
-Run from the repository root. The first run builds graft and the JVM
-harness (perfbench/src) with sbt into .bench_build/; later runs reuse the
-build until a source changes. Inputs come from the seed: the open-loop
-arrival schedule, and the query order (the query tables are fixed, made by
-datagen.py). The last line of stdout is one JSON object:
+Run from the repository root. The first run builds graft (into target/) and
+the JVM harness (perfbench/src, into .bench_build/) with sbt; later runs
+reuse the build until a source changes. Inputs come from the seed: the
+open-loop arrival schedule, the failing sink calls and the query order (the
+query tables are fixed, made by datagen.py). The last line of stdout is one
+JSON object:
 
     {"correct": ..., "attempted": ..., "failed": ..., "metrics": {...}}
 
 with every end-to-end metric (--trace 0) or every per-layer metric
-(--trace 1; spans go to .bench_build/trace/). Workloads, metrics and bounds
-are described in BENCHMARK.json at the repository root.
+(--trace 1; spans go to .bench_build/trace/). --seconds sets the length of
+the open-loop ladder; the query workload's timed work is one cold and one
+rerun pass whatever it is. Workloads, metrics and bounds are described in
+BENCHMARK.json at the repository root.
 """
 import argparse
 import hashlib
@@ -39,26 +42,25 @@ RUN_TIMEOUT_S = 170
 WORKLOADS = ("ingest_steady", "query")
 # Open-loop ladder (items/s). On a 4-core host with 4 workers the knee is at
 # 45-60k items/s, and about half that while the host runs slow; the high
-# step stays below both.
+# step stays below both. A warm-up at the high rate comes first, then
+# ROUNDS rounds of the ladder; each rung reports its median over the rounds.
 LADDER = (("low", 3000.0), ("mid", 8000.0), ("high", 15000.0))
-WARMUP_S = 3.0
-TICK_MS = 20
-LATENCY_LIMIT_MS = 1100.0  # flushInterval + one trigger
+WARMUP_S = 5.0
+ROUNDS = 2
+LATENCY_LIMIT_MS = 1100.0  # flushInterval + 100 ms
 # Query tables: TPC-H-like fixtures at scale factor 0.01, made once.
 DATA_SCALE, DATA_SEED = 0.01, 42
-# Query workload: 16 relational q* queries, every second one of the 32
-# fastest (warm, on these tables), whose time is mostly fixed per-job cost
-# (table open, Catalyst, job launch) and which use no memo; and 4 dedup d*
-# queries: two memo builds (d05's MinHash cluster labels, which d16 then
-# replays; d11's GateMemo gate) and d04, which has no memo.
+# Query workload: 17 relational q* queries, every second one of the 32
+# fastest (warm, on these tables) plus q06, whose time is mostly fixed
+# per-job cost (table open, Catalyst, job launch) and which use no memo; and
+# 3 dedup d* queries: d05 builds the MinHash cluster-label memo, which d16
+# replays (whichever runs first builds it), and d04 has no memo.
 QUERIES = (
     "q10_topk_orders", "q62_bitwise", "q32_date_arith", "q21_json_extract",
     "q38_unnest_pos", "q57_array_funcs", "q72_edit_distance", "q13_except",
     "q43_hash_sample", "q18_having", "q16_case_arith", "q08_window_topn",
     "q17_rollup", "q51_scalar_subquery", "q68_unpivot", "q14_monthly_revenue",
-    "d04_embed_neardup", "d05_dedup_survivors", "d11_ivf_gate", "d16_dedup_keep_best")
-# Timed cold+rerun cycles per run: one per this many seconds of --seconds.
-SECONDS_PER_CYCLE = 20.0
+    "q06_anti_join", "d04_embed_neardup", "d05_dedup_survivors", "d16_dedup_keep_best")
 JAVA_OPTS = ["-Xmx3g", "-XX:+UseG1GC", "-Dspark.ui.enabled=false"] + [
     arg for p in (
         "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io", "java.net",
@@ -145,21 +147,24 @@ def build():
 # ---------------------------------------------------------------- inputs
 
 def schedule(seed, seconds):
-    """Poisson arrivals: a warm-up at the mid rate, then the ladder, each
-    step a third of `seconds`. Returns (due ms, step index per item; -1 =
-    warm-up)."""
+    """Poisson arrivals: a warm-up at the high rate, then ROUNDS rounds of
+    the ladder, each step `seconds` / (3 * ROUNDS). Returns, per item, the
+    due time (ms), the ladder step and the segment (round * 3 + step); both
+    are -1 in the warm-up."""
     rng = np.random.default_rng(seed)
-    steps = [("warmup", LADDER[1][1], WARMUP_S)] + [
-        (name, rate, seconds / len(LADDER)) for name, rate in LADDER]
-    due, step, t0 = [], [], 0.0
-    for i, (_, rate, dur) in enumerate(steps):
-        n = int(rate * dur * 1.3) + 100
+    dur = seconds / (len(LADDER) * ROUNDS)
+    steps = [(-1, LADDER[-1][1], WARMUP_S)] + [
+        (i, rate, dur) for _ in range(ROUNDS) for i, (_, rate) in enumerate(LADDER)]
+    due, step, seg, t0 = [], [], [], 0.0
+    for k, (i, rate, d) in enumerate(steps):
+        n = int(rate * d * 1.3) + 100
         t = t0 + np.cumsum(rng.exponential(1.0 / rate, n))
-        t = t[t < t0 + dur]
+        t = t[t < t0 + d]
         due.append(t * 1e3)
-        step.append(np.full(t.size, i - 1))
-        t0 += dur
-    return np.concatenate(due), np.concatenate(step)
+        step.append(np.full(t.size, i))
+        seg.append(np.full(t.size, k - 1))
+        t0 += d
+    return np.concatenate(due), np.concatenate(step), np.concatenate(seg)
 
 
 def query_order(seed):
@@ -187,60 +192,73 @@ def _git_commit():
         return "unknown"
 
 
-def ingest_metrics(r, out, due_ms, step, trace):
+def ingest_metrics(r, out, due_ms, step, seg, trace):
+    s, b = r["steady"], r["burst"]
     done = np.fromfile(os.path.join(out, "done_ms.f64"), dtype="<f8")
-    sent = np.fromfile(os.path.join(out, "sent_ms.f64"), dtype="<f8")
-    n = r["items"]
     lat = bl.open_loop_latency(due_ms, done)
-    failed, problems = bl.ledger_failures(n, r["stat"], r["ids_missing"])
+    failed, problems = 0, []
+    for phase, acc in (("steady", s), ("burst", b)):
+        f, p = bl.ledger_failures(acc["items"], acc["stat"], acc["ids_missing"])
+        failed += f
+        problems += [f"{phase}: {x}" for x in p]
     timed = step >= 0
     lt = lat[timed]
     delivered = lt[~np.isnan(lt)]
     # the sink calls, not the items, are the independent samples
-    tail_v, tail_q = bl.tail(delivered, n=len(r["sink_calls"]))
-    span_s = (np.nanmax(done[timed]) - due_ms[timed].min()) / 1e3
+    tail_v, tail_q = bl.tail(delivered, n=len(s["sink_calls"]))
     e2e = {
         "latency_p50_ms": bl.percentile(delivered, 0.5),
         "latency_tail_ms": tail_v,
-        "throughput_per_s": delivered.size / span_s,
+        "throughput_per_s": b["timed_items"] / b["timed_s"],
     }
     info = {"items": int(timed.sum()), "tail_quantile": tail_q, "problems": problems,
-            "sink_calls": len(r["sink_calls"])}
+            "sink_calls": len(s["sink_calls"])}
+    attempted = s["items"] + b["items"]
     if not trace:
-        return e2e, n, failed, info, {}
-    return e2e, n, failed, info, ingest_layers(r, out, due_ms, sent, done, lat, step)
+        return e2e, attempted, failed, info, {}
+    return e2e, attempted, failed, info, ingest_layers(r, out, due_ms, lat, step, seg)
 
 
-def ingest_layers(r, out, due_ms, sent, done, lat, step):
+def ingest_layers(r, out, due_ms, lat, step, seg):
+    s, b = r["steady"], r["burst"]
     m = {}
-    base = r["base_epoch_ms"]
-    origin_ms = r["origin_ns"] / 1e6
+    base = s["base_epoch_ms"]
+    origin_ms = s["origin_ns"] / 1e6
+    bt = (np.array([t for t, _ in s["backlog"]], dtype=float) - s["origin_ns"]) / 1e6
+    bp = np.array([p for _, p in s["backlog"]], dtype=float)
     sustained = 0.0
-    bt = (np.array([t for t, _ in r["backlog"]], dtype=float) - r["origin_ns"]) / 1e6
-    bp = np.array([p for _, p in r["backlog"]], dtype=float)
     for i, (name, rate) in enumerate(LADDER):
-        sel = step == i
-        d = lat[sel]
-        d = d[~np.isnan(d)]
-        p50 = bl.percentile(d, 0.5) if d.size else 0.0
-        p99 = bl.percentile(d, 0.99) if d.size else 0.0
-        m[f"item_latency_p50_ms.{name}"] = p50
-        m[f"item_latency_p99_ms.{name}"] = p99
-        if d.size:
+        p50s, p99s, ok, n, span_s = [], [], True, 0, 0.0
+        for k in np.unique(seg[step == i]):
+            sel = seg == k
+            d = lat[sel]
+            d = d[~np.isnan(d)]
+            if not d.size:
+                ok = False
+                continue
+            p50s.append(bl.percentile(d, 0.5))
+            p99s.append(bl.percentile(d, 0.99))
             t_lo, t_hi = due_ms[sel].min(), due_ms[sel].max()
             in_step = (bt >= t_lo) & (bt <= t_hi)
             growth = bl.slope(bt[in_step] / 1e3, bp[in_step])  # items/s
             # not sustained: p99 over the limit, or a backlog growing by
             # more than a tenth of the offered rate
-            if p99 <= LATENCY_LIMIT_MS and growth < 0.1 * rate:
-                sustained = d.size / ((t_hi - t_lo) / 1e3)
+            ok = ok and p99s[-1] <= LATENCY_LIMIT_MS and growth < 0.1 * rate
+            n += d.size
+            span_s += (t_hi - t_lo) / 1e3
+        m[f"item_latency_p50_ms.{name}"] = float(np.median(p50s)) if p50s else 0.0
+        m[f"item_latency_p99_ms.{name}"] = float(np.median(p99s)) if p99s else 0.0
+        if ok and span_s > 0:
+            sustained = n / span_s
     m["core.sustained_items_per_s"] = sustained
+    sent = np.fromfile(os.path.join(out, "sent_ms.f64"), dtype="<f8")
     late = bl.lateness(due_ms, sent)
     m["core.generator_lag_ms_p99"] = bl.percentile(late, 0.99)
     m["core.generator_lag_ms_max"] = float(np.max(late))
-    # micro-batches from StreamingQueryProgress (the measured pipeline's only)
-    progress = [p for p in r["trace"]["progress"] if p["rows"] > 0]
-    progress = [p for p in progress if p["start_ms"] >= base + origin_ms + WARMUP_S * 1e3 - 1]
+    # micro-batches of the steady pipeline after its warm-up, from
+    # StreamingQueryProgress
+    progress = [p for p in r["trace"]["progress"] if p["query"] == "steady" and p["rows"] > 0
+                and p["start_ms"] >= base + origin_ms + WARMUP_S * 1e3 - 1]
     dur = lambda p, *ks: sum(p["duration_ms"].get(k, 0) for k in ks)
     trig = [dur(p, "triggerExecution") for p in progress]
     m["core.microbatches"] = len(progress)
@@ -253,27 +271,35 @@ def ingest_layers(r, out, due_ms, sent, done, lat, step):
     m["core.addbatch_ms_p50"] = bl.percentile([dur(p, "addBatch") for p in progress], 0.5)
     start_of = {p["batch_id"]: p["start_ms"] - base - origin_ms for p in progress}
     batch_of = np.fromfile(os.path.join(out, "batch_of.f64"), dtype="<f8")
-    admit = np.array([start_of.get(int(b), np.nan) if not np.isnan(b) else np.nan
-                      for b in batch_of])
+    admit = np.array([start_of.get(int(x), np.nan) if not np.isnan(x) else np.nan
+                      for x in batch_of])
     qwait = admit - sent
     qwait = qwait[~np.isnan(qwait) & (step >= 0)]
     m["core.queue_wait_ms_p50"] = bl.percentile(qwait, 0.5) if qwait.size else 0.0
-    calls = r["sink_calls"]
+    calls = s["sink_calls"]
     ok = [c for c in calls if c[6] == 0]
     b2s = [c[0] / 1e6 - origin_ms - start_of[c[4]] for c in ok if c[4] in start_of]
     m["core.batch_to_sink_ms_p50"] = bl.percentile(b2s, 0.5) if b2s else 0.0
-    jobs = r["trace"]["jobs"]
-    stream_jobs = [j for j in jobs if j["batch_id"] != ""]
+    qid = {p["query_id"] for p in progress}
+    batches = {str(p["batch_id"]) for p in progress}
+    stream_jobs = [j for j in r["trace"]["jobs"]
+                   if j["query_id"] in qid and j["batch_id"] in batches]
     m["core.shard_shuffle_bytes"] = float(sum(j["shuffle_write"] for j in stream_jobs))
-    m["core.put_block_s"] = sum(e - s for s, e, _ in r["put_spans"]) / 1e9
-    m["core.backlog_max"] = float(bp.max()) if bp.size else 0.0
-    m["core.backlog_slope"] = bl.slope(bt / 1e3, bp)
-    m["core.sink_calls"] = float(len(calls))
-    m["core.items_per_sink_call"] = float(np.mean([c[2] for c in ok])) if ok else 0.0
-    m["core.sink_busy_s"] = sum(c[1] - c[0] for c in calls) / 1e9
-    m["core.sink_retries"] = float(sum(1 for c in calls if c[3] > 0))
-    m["core.items_dropped"] = float(r["stat"]["items_dropped"])
-    m["core.items_duplicated"] = float(r["items_duplicated"])
+    # the timed closed-loop round
+    t0 = b["timed_from_ns"]
+    bcalls = [c for c in b["sink_calls"] if c[0] >= t0]
+    bok = [c for c in bcalls if c[6] == 0]
+    backlog = [(t / 1e9, p) for t, p in b["backlog"] if t >= t0]
+    m["core.put_block_s"] = sum(e - x for x, e, _ in b["put_spans"] if x >= t0) / 1e9
+    m["core.backlog_max"] = float(max((p for _, p in backlog), default=0))
+    m["core.backlog_slope"] = bl.slope([t for t, _ in backlog], [p for _, p in backlog])
+    m["core.sink_calls"] = float(len(bcalls))
+    m["core.items_per_sink_call"] = float(np.mean([c[2] for c in bok])) if bok else 0.0
+    m["core.sink_busy_s"] = sum(c[1] - c[0] for c in bcalls) / 1e9
+    # retries and losses over both pipelines
+    m["core.sink_retries"] = float(sum(1 for c in calls + b["sink_calls"] if c[3] > 0))
+    m["core.items_dropped"] = float(s["stat"]["items_dropped"] + b["stat"]["items_dropped"])
+    m["core.items_duplicated"] = float(s["items_duplicated"] + b["items_duplicated"])
     # spans and self time per micro-batch: trigger = plan + log + addBatch + rest;
     # addBatch = orchestration + jobs; jobs = Spark + sink calls
     spans, selfs, err = [], {k: 0.0 for k in (
@@ -300,17 +326,19 @@ def ingest_layers(r, out, due_ms, sent, done, lat, step):
         rid = f"batch-{p['batch_id']}"
         spans.append({"name": "microbatch", "start_ms": s0, "end_ms": s0 + t,
                       "parent": None, "request": rid, "self_ms": part})
-        spans += [{"name": "job", "start_ms": a, "end_ms": b, "parent": "microbatch",
-                   "request": rid} for a, b in bj]
-        spans += [{"name": "sink", "start_ms": a, "end_ms": b, "parent": "job",
-                   "request": rid} for a, b in bs]
-    spans += [{"name": "put", "start_ms": base + s / 1e6, "end_ms": base + e / 1e6,
-               "parent": None, "request": f"put-{k}", "items": n}
-              for k, (s, e, n) in enumerate(r["put_spans"])]
+        spans += [{"name": "job", "start_ms": x0, "end_ms": x1, "parent": "microbatch",
+                   "request": rid} for x0, x1 in bj]
+        spans += [{"name": "sink", "start_ms": x0, "end_ms": x1, "parent": "job",
+                   "request": rid} for x0, x1 in bs]
+    for phase, acc in (("steady", s), ("burst", b)):
+        spans += [{"name": "put", "start_ms": acc["base_epoch_ms"] + x / 1e6,
+                   "end_ms": acc["base_epoch_ms"] + e / 1e6,
+                   "parent": None, "request": f"{phase}-put-{k}", "items": n}
+                  for k, (x, e, n) in enumerate(acc["put_spans"])]
     for k, v in selfs.items():
         m[f"self_s.{k}"] = v
     m["trace.self_sum_error_ms"] = err
-    return m, spans, jobs
+    return m, spans, stream_jobs
 
 
 def query_metrics(r, trace):
@@ -502,12 +530,11 @@ def main():
     os.makedirs(inp)
     os.makedirs(out)
     args = ["--workload", a.workload, "--in", inp, "--out", out, "--seed", str(a.seed),
-            "--trace", str(a.trace), "--cpus", str(cpus),
-            "--setups", "3", "--tick-ms", str(TICK_MS)]
-    due_ms = step = None
+            "--trace", str(a.trace), "--cpus", str(cpus)]
+    due_ms = step = seg = None
     data_dir = order = None
     if a.workload == "ingest_steady":
-        due_ms, step = schedule(a.seed, a.seconds)
+        due_ms, step, seg = schedule(a.seed, a.seconds)
         (due_ms * 1e6).astype("<f8").tofile(os.path.join(inp, "schedule_ns.f64"))
     else:
         data_dir = datagen.write(
@@ -516,8 +543,7 @@ def main():
         order = query_order(a.seed)
         with open(os.path.join(inp, "order.txt"), "w") as fh:
             fh.write("\n".join(order) + "\n")
-        cycles = max(1, round(a.seconds / SECONDS_PER_CYCLE))
-        args += ["--data", data_dir, "--cycles", str(cycles)]
+        args += ["--data", data_dir]
     log = os.path.join(run_dir, "jvm.log")
     budget = max(30.0, RUN_TIMEOUT_S - (time.monotonic() - started))
     with open(log, "w") as fh:
@@ -538,7 +564,7 @@ def main():
     trace = a.trace == 1
     layers, spans, jobs = {}, [], []
     if a.workload == "ingest_steady":
-        e2e, attempted, failed, info, tl = ingest_metrics(r, out, due_ms, step, trace)
+        e2e, attempted, failed, info, tl = ingest_metrics(r, out, due_ms, step, seg, trace)
         if trace:
             layers, spans, jobs = tl
     else:
@@ -565,11 +591,10 @@ def main():
         stamp["fixture_fingerprints"] = r["fingerprints"]
         stamp["data"] = f"sf{DATA_SCALE} seed {DATA_SEED}"
     if trace:
-        t_first = min((s["start_ms"] for s in spans), default=0.0)
-        t_last = max((s["end_ms"] for s in spans), default=0.0)
-        if a.workload == "ingest_steady":  # the measured pipeline's jobs
-            t0 = r["base_epoch_ms"] + r["origin_ns"] / 1e6 + WARMUP_S * 1e3
-            jobs = [j for j in jobs if j["batch_id"] != "" and j["start_ms"] >= t0]
+        # the timed queries, or the steady pipeline's micro-batches
+        top = [s for s in spans if s["name"] in ("query", "microbatch")]
+        t_first = min((s["start_ms"] for s in top), default=0.0)
+        t_last = max((s["end_ms"] for s in top), default=0.0)
         layers.update(exec_layers(jobs, (t_last - t_first) / 1e3, cpus, t_first, t_last))
         layers["jvm.gc_s"] = r["gc_s"]
         layers["setup.cold_s"] = r["setup_s"][0]

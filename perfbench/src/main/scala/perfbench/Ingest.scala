@@ -54,6 +54,20 @@ final class LedgerSink(sleepMs: Long, failPerMille: Int, seed: Long) extends Flu
 object Ingest {
   @volatile var ledger: Ledger = _
 
+  /** The open-loop generator admits the ids that are due at most this often. */
+  private val TickNs = 20L * 1000000
+  /** Micro-batch trigger: back to back. A trigger period makes a
+    * micro-batch take a whole number of periods, so item latency would
+    * jump by a period whenever the micro-batch time crosses a multiple. */
+  private val Trigger = Duration.Zero
+  /** Closed loop: an untimed round of `BurstWarmup` ids, then one timed
+    * round of `BurstTimed` ids, put `PutChunk` at a time. The timed round
+    * spans tens of micro-batches, so where the last one ends moves its
+    * time by a few percent at most. */
+  private val BurstWarmup = 131072
+  private val BurstTimed = 786432
+  private val PutChunk = 8192
+
   /** SplitMix64 finalizer: the seeded, order-free failure choice. */
   def mix(x: Long): Long = {
     var z = x + 0x9e3779b97f4a7c15L
@@ -62,11 +76,12 @@ object Ingest {
     z ^ (z >>> 31)
   }
 
-  /** The reference test's configuration (BASELINE.md), with a 100 ms trigger. */
-  def config(name: String, workers: Int, retryDelay: FiniteDuration): PipelineConfig =
+  /** The reference test's configuration (BASELINE.md), with back-to-back
+    * micro-batches and a 20 ms retry delay. */
+  def config(name: String, workers: Int): PipelineConfig =
     PipelineConfig(name = name, numWorkers = workers, maxBatchSize = 1024,
       maxConcurrency = 8, maxPendingRows = 65536, flushInterval = 1.second,
-      triggerInterval = Some(100.millis), maxRetryCount = 3, retryDelay = retryDelay)
+      triggerInterval = Some(Trigger), maxRetryCount = 3, retryDelay = 20.millis)
 
   def pipeline(spark: SparkSession, cfg: PipelineConfig, sleepMs: Long,
       failPerMille: Int, seed: Long): BatchPipeline[Long] = {
@@ -87,22 +102,14 @@ object Ingest {
     def finish(): Seq[Seq[Long]] = { running = false; join(); samples.asScala.map(_.toSeq).toSeq }
   }
 
-  /** Barrier-flush, read the ledger, write the per-item arrays. */
-  private def finish(p: BatchPipeline[Long], l: Ledger, n: Int, sentNs: Array[Long],
-      putSpans: ConcurrentLinkedQueue[Array[Long]], sampler: BacklogSampler,
-      originNs: Long, out: String): Map[String, Any] = {
-    val flushStart = System.nanoTime()
+  /** Barrier-flush, stop, and read the pipeline's and the ledger's accounts
+    * of the `n` ids put. */
+  private def settle(p: BatchPipeline[Long], l: Ledger, n: Int,
+      putSpans: ConcurrentLinkedQueue[Array[Long]], sampler: BacklogSampler): Map[String, Any] = {
     p.flush()
-    val flushS = (System.nanoTime() - flushStart) / 1e9
     val st = p.stat()
     val backlog = sampler.finish()
     p.stop()
-    val ms = (x: Long) => x / 1e6
-    Json.writeDoubles(s"$out/sent_ms.f64", Array.tabulate(n)(i => ms(sentNs(i))))
-    Json.writeDoubles(s"$out/done_ms.f64", Array.tabulate(n)(i =>
-      if (l.deliveries.get(i) > 0) ms(l.doneNs(i) - originNs) else Double.NaN))
-    Json.writeDoubles(s"$out/batch_of.f64", Array.tabulate(n)(i =>
-      if (l.deliveries.get(i) > 0) l.batchOf(i).toDouble else Double.NaN))
     var dup = 0L; var missing = 0L
     for (i <- 0 until n) {
       val d = l.deliveries.get(i)
@@ -110,9 +117,7 @@ object Ingest {
     }
     Map(
       "items" -> n,
-      "origin_ns" -> originNs,
       "base_epoch_ms" -> l.baseEpochMs,
-      "flush_s" -> flushS,
       "ids_missing" -> missing,
       "items_duplicated" -> dup,
       "stat" -> Map("items_in" -> st.itemsIn, "items_flushed" -> st.itemsFlushed,
@@ -126,18 +131,19 @@ object Ingest {
   /** Open loop: items are sent on the schedule in `schedule_ns.f64` (ns
     * offsets from the schedule start, ascending), whatever the pipeline
     * does. The sink takes 50 ms per batch and throws on 1% of first
-    * attempts, so the retry path runs. At most every `tickNs` the
+    * attempts, so the retry path runs. At most every `TickNs` the
     * generator admits every id whose due time has passed in one call (each
     * call is one MemoryStream block, so one put per item would cost a task
     * per item). A put that blocks makes the ids behind it late; latency is
     * taken from the due time, so that wait counts. */
   def steady(spark: SparkSession, in: String, out: String, seed: Long, workers: Int,
-      tickNs: Long, trace: Boolean): Map[String, Any] = {
+      trace: Boolean): Map[String, Any] = {
     val due = Json.readDoubles(s"$in/schedule_ns.f64").map(_.toLong)
     val n = due.length
     val l = new Ledger(n); ledger = l
-    val p = pipeline(spark, config("steady", workers, 20.millis), 50, 10, seed).start()
+    val p = pipeline(spark, config("steady", workers), 50, 10, seed).start()
     val sampler = new BacklogSampler(p, l); sampler.start()
+    System.gc()
     val sentNs = new Array[Long](n)
     val putSpans = new ConcurrentLinkedQueue[Array[Long]]()
     val start = System.nanoTime() - l.base + 20000000L // schedule origin, ns after base
@@ -145,7 +151,7 @@ object Ingest {
     var lastPut = Long.MinValue / 2
     while (i < n) {
       val now = System.nanoTime() - l.base
-      val wait = math.max(start + due(i), lastPut + tickNs) - now
+      val wait = math.max(start + due(i), lastPut + TickNs) - now
       if (wait > 0) LockSupport.parkNanos(wait)
       else {
         lastPut = now
@@ -158,6 +164,42 @@ object Ingest {
         i = j
       }
     }
-    finish(p, l, n, sentNs, putSpans, sampler, start, out)
+    val accounts = settle(p, l, n, putSpans, sampler)
+    val ms = (x: Long) => x / 1e6
+    Json.writeDoubles(s"$out/sent_ms.f64", Array.tabulate(n)(i => ms(sentNs(i))))
+    Json.writeDoubles(s"$out/done_ms.f64", Array.tabulate(n)(i =>
+      if (l.deliveries.get(i) > 0) ms(l.doneNs(i) - start) else Double.NaN))
+    Json.writeDoubles(s"$out/batch_of.f64", Array.tabulate(n)(i =>
+      if (l.deliveries.get(i) > 0) l.batchOf(i).toDouble else Double.NaN))
+    accounts ++ Map("origin_ns" -> start)
+  }
+
+  /** Closed loop: one producer puts ids through `putAll` as fast as
+    * admission allows, each round ended by `flush()`. The sink returns at
+    * once and throws on 1% of first attempts. Returns the accounts and the
+    * timed round's ids and seconds; `timed_from_ns` (ledger time) is where
+    * the untimed round ends. */
+  def burst(spark: SparkSession, seed: Long, workers: Int): Map[String, Any] = {
+    val n = BurstWarmup + BurstTimed
+    val l = new Ledger(n); ledger = l
+    val p = pipeline(spark, config("burst", workers), 0, 10, seed).start()
+    val sampler = new BacklogSampler(p, l); sampler.start()
+    val putSpans = new ConcurrentLinkedQueue[Array[Long]]()
+    def round(from: Int, until: Int): Double = {
+      val t0 = System.nanoTime()
+      for (i <- from until until by PutChunk) {
+        val s = System.nanoTime() - l.base
+        p.putAll((i until i + PutChunk).map(_.toLong))
+        putSpans.add(Array(s, System.nanoTime() - l.base, PutChunk))
+      }
+      p.flush()
+      (System.nanoTime() - t0) / 1e9
+    }
+    round(0, BurstWarmup)
+    System.gc()
+    val timedFromNs = System.nanoTime() - l.base
+    val timedS = round(BurstWarmup, n)
+    settle(p, l, n, putSpans, sampler) ++ Map(
+      "timed_items" -> BurstTimed, "timed_s" -> timedS, "timed_from_ns" -> timedFromNs)
   }
 }

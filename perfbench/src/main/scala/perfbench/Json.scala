@@ -3,58 +3,15 @@ package perfbench
 import java.io.{BufferedOutputStream, DataOutputStream, FileOutputStream}
 import java.nio.file.{Files, Paths}
 
-/** Minimal JSON writer for the harness's own result file (maps, sequences,
-  * strings, numbers, booleans), plus raw little-endian float64 arrays for
-  * the per-item data, which run.py reads with numpy. */
+import org.json4s.DefaultFormats
+import org.json4s.jackson.Serialization
+
+/** The harness's result file (json4s, from Spark's classpath), plus raw
+  * little-endian float64 arrays for the per-item data, which run.py reads
+  * with numpy. */
 object Json {
-  def apply(v: Any): String = {
-    val sb = new StringBuilder
-    write(sb, v)
-    sb.toString
-  }
-
-  private def write(sb: StringBuilder, v: Any): Unit = v match {
-    case null => sb ++= "null"
-    case s: String => str(sb, s)
-    case b: Boolean => sb ++= b.toString
-    case d: Double =>
-      if (d.isNaN || d.isInfinite) sb ++= "null" else sb ++= d.toString
-    case f: Float => write(sb, f.toDouble)
-    case n: Int => sb ++= n.toString
-    case n: Long => sb ++= n.toString
-    case m: scala.collection.Map[_, _] =>
-      sb += '{'
-      var first = true
-      m.foreach { case (k, x) =>
-        if (!first) sb += ','
-        first = false
-        str(sb, k.toString); sb += ':'; write(sb, x)
-      }
-      sb += '}'
-    case xs: Iterable[_] =>
-      sb += '['
-      var first = true
-      xs.foreach { x => if (!first) sb += ','; first = false; write(sb, x) }
-      sb += ']'
-    case other => str(sb, other.toString)
-  }
-
-  private def str(sb: StringBuilder, s: String): Unit = {
-    sb += '"'
-    s.foreach {
-      case '"' => sb ++= "\\\""
-      case '\\' => sb ++= "\\\\"
-      case '\n' => sb ++= "\\n"
-      case '\r' => sb ++= "\\r"
-      case '\t' => sb ++= "\\t"
-      case c if c < ' ' => sb ++= f"\\u${c.toInt}%04x"
-      case c => sb += c
-    }
-    sb += '"'
-  }
-
-  def writeFile(path: String, v: Any): Unit =
-    Files.writeString(Paths.get(path), apply(v))
+  def writeFile(path: String, v: Map[String, Any]): Unit =
+    Files.writeString(Paths.get(path), Serialization.write(v)(DefaultFormats))
 
   /** `xs` as little-endian float64 (numpy `fromfile(dtype="<f8")`). */
   def writeDoubles(path: String, xs: Array[Double]): Unit = {

@@ -2,7 +2,6 @@ package perfbench
 
 import java.lang.management.ManagementFactory
 
-import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
@@ -12,11 +11,14 @@ import graft.Tables
 /** JVM side of the benchmark; run.py prepares the inputs, launches this and
   * turns what it writes into metrics.
   *
-  * Args: --workload W --in DIR --out DIR --seed N --trace 0|1
-  *       --cpus N --setups K [--tick-ms T] [--data DIR --cycles C]
+  * Args: --workload W --in DIR --out DIR --seed N --trace 0|1 --cpus N
+  *       [--data DIR]
   *
   * Writes `<out>/result.json` (and, for ingest, per-item arrays). */
 object Main {
+  /** Set-ups per run; run.py reports their median. */
+  private val Setups = 5
+
   private def gcMs(): Long = ManagementFactory.getGarbageCollectorMXBeans.asScala
     .map(_.getCollectionTime.max(0L)).sum
 
@@ -47,9 +49,7 @@ object Main {
     val seed = o("seed").toLong
     val trace = o("trace") == "1"
     val cpus = o("cpus").toInt
-    val setups = o.getOrElse("setups", "3").toInt
     val data = o.getOrElse("data", "")
-    val cycles = o.getOrElse("cycles", "1").toInt
     val ingest = workload == "ingest_steady"
     val workers = math.max(2, cpus)
     val localDir = s"$out/spark-local"
@@ -60,8 +60,7 @@ object Main {
     def warmUp(spark: SparkSession): Unit =
       if (ingest) {
         Ingest.ledger = new Ledger(1024)
-        val p = Ingest.pipeline(spark, Ingest.config("setup", workers, 100.millis), 0, 0, seed)
-          .start()
+        val p = Ingest.pipeline(spark, Ingest.config("setup", workers), 0, 0, seed).start()
         p.putAll((0 until 1024).map(_.toLong)); p.flush(); p.stop()
       } else {
         val e = Queries.run(spark, data, "q01_pricing_summary", 0, "setup")
@@ -72,7 +71,7 @@ object Main {
     spark.sparkContext.setLogLevel("ERROR")
     warmUp(spark)
     val setupS = scala.collection.mutable.ArrayBuffer((Clock.ms() - jvmStartMs) / 1e3)
-    for (_ <- 2 to setups) {
+    for (_ <- 2 to Setups) {
       spark.stop()
       SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
       val t0 = Clock.ms()
@@ -87,13 +86,14 @@ object Main {
     val gc0 = gcMs()
     val t0 = Clock.ms()
     val body: Map[String, Any] = workload match {
-      case "ingest_steady" => Ingest.steady(spark, in, out, seed, workers,
-        (o.getOrElse("tick-ms", "5").toDouble * 1e6).toLong, trace)
+      case "ingest_steady" => Map(
+        "steady" -> Ingest.steady(spark, in, out, seed, workers, trace),
+        "burst" -> Ingest.burst(spark, seed, workers))
       case "query" =>
         val order = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(s"$in/order.txt"))
           .asScala.map(_.trim).filter(_.nonEmpty).toSeq
         val results = s"$out/results"
-        val execs = Queries.workload(spark, data, order, cycles, results,
+        val execs = Queries.workload(spark, data, order, results,
           s => recorder.foreach(_.watchPlans(s)))
         val oracle = graft.SparkEntry.oracleSql.filter(kv => order.contains(kv._1))
         Map("execs" -> execs.map(Queries.asMap), "oracle_sql" -> oracle,

@@ -45,19 +45,22 @@ object Queries {
     "exec_end_ms" -> e.execEndMs, "end_ms" -> e.endMs, "error" -> e.error)
 
   /** One untimed pass in its own session writes every result for the
-    * correctness check (and settles JIT). Then each timed cycle opens a
-    * fresh session (`newSession`, same SparkContext; memos are keyed by
-    * session) and runs a cold pass, which builds the memos, and a rerun
-    * pass, which replays them. `onSession` sees each timed session first. */
-  def workload(spark: SparkSession, dir: String, order: Seq[String], cycles: Int,
-      results: String, onSession: SparkSession => Unit): Seq[Exec] = {
+    * correctness check (and settles JIT). Then a fresh session
+    * (`newSession`, same SparkContext; memos are keyed by session) runs a
+    * timed cold pass, which builds the memos, and a timed rerun pass, which
+    * replays them. Each timed pass starts on a collected heap. `onSession`
+    * sees the timed session first. */
+  def workload(spark: SparkSession, dir: String, order: Seq[String], results: String,
+      onSession: SparkSession => Unit): Seq[Exec] = {
     val s0 = spark.newSession()
     val check = order.map(run(s0, dir, _, 0, "check", Some(results)))
-    check ++ (1 to cycles).flatMap { c =>
-      val s = spark.newSession()
-      onSession(s)
-      order.map(run(s, dir, _, c, "cold")) ++ order.map(run(s, dir, _, c, "rerun"))
+    val s = spark.newSession()
+    onSession(s)
+    def pass(phase: String): Seq[Exec] = {
+      System.gc()
+      order.map(run(s, dir, _, 1, phase))
     }
+    check ++ pass("cold") ++ pass("rerun")
   }
 }
 

@@ -16,7 +16,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * to run.py at exit. Times are epoch milliseconds. */
 final class Recorder {
   private final class Job(val id: Int, val startMs: Long, val stageIds: Seq[Int],
-      val name: String, val details: String, val batchId: String) {
+      val name: String, val details: String, val batchId: String, val queryId: String) {
     @volatile var endMs: Long = -1
   }
   private final class Stage(val id: Int, val tasks: Int, val runMs: Long, val cpuNs: Long,
@@ -30,10 +30,11 @@ final class Recorder {
   val sparkListener: SparkListener = new SparkListener {
     override def onJobStart(e: SparkListenerJobStart): Unit = {
       val first = e.stageInfos.sortBy(_.stageId).headOption
-      val props = Option(e.properties)
+      val prop = (k: String) =>
+        Option(e.properties).flatMap(p => Option(p.getProperty(k))).getOrElse("")
       jobs.put(e.jobId, new Job(e.jobId, e.time, e.stageIds,
         first.map(_.name).getOrElse(""), first.map(_.details).getOrElse(""),
-        props.flatMap(p => Option(p.getProperty("streaming.sql.batchId"))).getOrElse("")))
+        prop("streaming.sql.batchId"), prop("sql.streaming.queryId")))
     }
     override def onJobEnd(e: SparkListenerJobEnd): Unit =
       Option(jobs.get(e.jobId)).foreach(_.endMs = e.time)
@@ -53,6 +54,8 @@ final class Recorder {
     override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
       val p = e.progress
       progress.add(Map(
+        "query" -> p.name,
+        "query_id" -> p.id.toString,
         "batch_id" -> p.batchId,
         "start_ms" -> java.time.Instant.parse(p.timestamp).toEpochMilli,
         "rows" -> p.numInputRows,
@@ -94,6 +97,7 @@ final class Recorder {
         val ss = j.stageIds.flatMap(byId.get)
         Map("id" -> j.id, "start_ms" -> j.startMs, "end_ms" -> j.endMs,
           "name" -> j.name, "details" -> j.details, "batch_id" -> j.batchId,
+          "query_id" -> j.queryId,
           "stages" -> ss.size, "tasks" -> ss.map(_.tasks).sum,
           "task_run_ms" -> ss.map(_.runMs).sum, "task_cpu_ns" -> ss.map(_.cpuNs).sum,
           "gc_ms" -> ss.map(_.gcMs).sum,

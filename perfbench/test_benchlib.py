@@ -58,15 +58,20 @@ class OpenLoop(unittest.TestCase):
             done = sent + 10.0
             sent.astype("<f8").tofile(os.path.join(out, "sent_ms.f64"))
             done.astype("<f8").tofile(os.path.join(out, "done_ms.f64"))
-            r = {"items": n, "ids_missing": 0, "sink_calls": [],
-                 "stat": {"items_in": n, "items_flushed": n, "items_dropped": 0,
-                          "pending": 0}}
+            acc = lambda k: {"items": k, "ids_missing": 0, "sink_calls": [],
+                             "stat": {"items_in": k, "items_flushed": k,
+                                      "items_dropped": 0, "pending": 0}}
+            r = {"steady": acc(n),
+                 "burst": {**acc(300), "timed_items": 200, "timed_s": 0.4}}
+            zero = np.zeros(n, dtype=int)
             e2e, attempted, failed, info, _ = run.ingest_metrics(
-                r, out, due, np.zeros(n, dtype=int), trace=False)
-            self.assertEqual((attempted, failed), (n, 0))
+                r, out, due, zero, zero, trace=False)
+            self.assertEqual((attempted, failed), (n + 300, 0))
             self.assertAlmostEqual(e2e["latency_p50_ms"],
                                    np.percentile(done - due, 50))
             self.assertGreater(e2e["latency_p50_ms"], 100)
+            # closed-loop throughput: the timed round's ids per second
+            self.assertAlmostEqual(e2e["throughput_per_s"], 500.0)
 
 
 class Ledger(unittest.TestCase):
@@ -167,15 +172,18 @@ class SelfTime(unittest.TestCase):
 
 class Inputs(unittest.TestCase):
     def test_schedule_is_seeded_and_follows_the_ladder(self):
-        a, step_a = run.schedule(7, 9.0)
-        b, _ = run.schedule(7, 9.0)
-        c, _ = run.schedule(8, 9.0)
+        a, step_a, seg_a = run.schedule(7, 9.0)
+        b, _, _ = run.schedule(7, 9.0)
+        c, _, _ = run.schedule(8, 9.0)
         np.testing.assert_array_equal(a, b)
         self.assertFalse(np.array_equal(a[:100], c[:100]))
         self.assertTrue(np.all(np.diff(a) >= 0))
         for i, (_, rate) in enumerate(run.LADDER):
             n = int((step_a == i).sum())
             self.assertAlmostEqual(n / 3.0, rate, delta=0.05 * rate)
+            # each rung comes once per round
+            self.assertEqual(len(np.unique(seg_a[step_a == i])), run.ROUNDS)
+        self.assertTrue(np.all((seg_a == -1) == (step_a == -1)))
 
     def test_query_order_is_a_seeded_permutation(self):
         self.assertEqual(run.query_order(3), run.query_order(3))
