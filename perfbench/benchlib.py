@@ -27,15 +27,18 @@ def percentile(xs, q):
     return float(np.percentile(xs, 100 * q)) if xs.size else math.nan
 
 
-def tail(xs, n=None):
+def tail(xs, n=None, max_q=1.0):
     """(value, quantile) of the tail rule; the maximum when the sample is
     too small for any quantile to have ten samples beyond it. `n` is the
     number of independent samples, when xs holds fewer (for example items
-    that reach the sink in batches and share their batch's latency)."""
+    that reach the sink in batches and share their batch's latency).
+    `max_q` caps the quantile, for a sample count that sits near one of the
+    rule's steps and would otherwise change the quantile from run to run."""
     xs = np.asarray(xs, dtype=float)
     q = tail_quantile(xs.size if n is None else n)
     if q is None:
         return (float(xs.max()) if xs.size else math.nan), 1.0
+    q = min(q, max_q)
     return percentile(xs, q), q
 
 
@@ -59,6 +62,21 @@ def slope(ts, ys):
     if ts.size < 2 or np.ptp(ts) == 0:
         return 0.0
     return float(np.polyfit(ts, ys, 1)[0])
+
+
+def trough_slope(ts, ys, period):
+    """Slope of a backlog's troughs: the least-squares slope of the lowest
+    sample in each `period`-long window from the first sample. A pipeline
+    that flushes once a period leaves a sawtooth whose plain slope over a
+    few periods swings by about the rate either way; its troughs grow only
+    when the pipeline falls behind."""
+    ts = np.asarray(ts, dtype=float)
+    ys = np.asarray(ys, dtype=float)
+    if ts.size < 2:
+        return 0.0
+    k = ((ts - ts[0]) // period).astype(int)
+    lows = [(ts[0] + w * period, ys[k == w].min()) for w in np.unique(k)]
+    return slope([t for t, _ in lows], [y for _, y in lows])
 
 
 # ---------------------------------------------------------------- ingest ledger

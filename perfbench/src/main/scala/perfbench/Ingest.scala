@@ -56,16 +56,23 @@ object Ingest {
 
   /** The open-loop generator admits the ids that are due at most this often. */
   private val TickNs = 20L * 1000000
-  /** Micro-batch trigger: back to back. A trigger period makes a
-    * micro-batch take a whole number of periods, so item latency would
-    * jump by a period whenever the micro-batch time crosses a multiple. */
-  private val Trigger = Duration.Zero
-  /** Closed loop: an untimed round of `BurstWarmup` ids, then one timed
-    * round of `BurstTimed` ids, put `PutChunk` at a time. The timed round
-    * spans tens of micro-batches, so where the last one ends moves its
-    * time by a few percent at most. */
-  private val BurstWarmup = 131072
-  private val BurstTimed = 786432
+  /** Micro-batch triggers. The open loop keeps the pipeline's default
+    * trigger, its flushInterval (1 s): a micro-batch ends well inside it, so
+    * an item waits for the next trigger (uniform over the period) and then
+    * for one micro-batch. Back to back, item latency is almost all
+    * micro-batch time, which on a shared host follows the host's load
+    * (seeds' medians spread by a third). The closed loop and the set-up run
+    * back to back, as fast as the pipeline goes. */
+  val OpenLoopTrigger: Option[FiniteDuration] = None
+  val BackToBack: Option[FiniteDuration] = Some(Duration.Zero)
+  /** Closed loop: rounds of `BurstRound` ids each, put `PutChunk` at a
+    * time and ended by flush(); the first `BurstWarmRounds` are untimed (a
+    * new pipeline's first micro-batches). run.py reports the median rate of
+    * the `BurstTimedRounds` timed rounds, so a burst of load from elsewhere
+    * on the host that spans a few rounds does not move it. */
+  private val BurstRound = 131072
+  private val BurstWarmRounds = 2
+  private val BurstTimedRounds = 8
   private val PutChunk = 8192
 
   /** SplitMix64 finalizer: the seeded, order-free failure choice. */
@@ -76,12 +83,12 @@ object Ingest {
     z ^ (z >>> 31)
   }
 
-  /** The reference test's configuration (BASELINE.md), with back-to-back
-    * micro-batches and a 20 ms retry delay. */
-  def config(name: String, workers: Int): PipelineConfig =
+  /** The reference test's configuration (BASELINE.md), with the given
+    * trigger and a 20 ms retry delay. */
+  def config(name: String, workers: Int, trigger: Option[FiniteDuration]): PipelineConfig =
     PipelineConfig(name = name, numWorkers = workers, maxBatchSize = 1024,
       maxConcurrency = 8, maxPendingRows = 65536, flushInterval = 1.second,
-      triggerInterval = Some(Trigger), maxRetryCount = 3, retryDelay = 20.millis)
+      triggerInterval = trigger, maxRetryCount = 3, retryDelay = 20.millis)
 
   def pipeline(spark: SparkSession, cfg: PipelineConfig, sleepMs: Long,
       failPerMille: Int, seed: Long): BatchPipeline[Long] = {
@@ -141,7 +148,7 @@ object Ingest {
     val due = Json.readDoubles(s"$in/schedule_ns.f64").map(_.toLong)
     val n = due.length
     val l = new Ledger(n); ledger = l
-    val p = pipeline(spark, config("steady", workers), 50, 10, seed).start()
+    val p = pipeline(spark, config("steady", workers, OpenLoopTrigger), 50, 10, seed).start()
     val sampler = new BacklogSampler(p, l); sampler.start()
     System.gc()
     val sentNs = new Array[Long](n)
@@ -177,12 +184,12 @@ object Ingest {
   /** Closed loop: one producer puts ids through `putAll` as fast as
     * admission allows, each round ended by `flush()`. The sink returns at
     * once and throws on 1% of first attempts. Returns the accounts and the
-    * timed round's ids and seconds; `timed_from_ns` (ledger time) is where
-    * the untimed round ends. */
+    * timed rounds' ids and seconds; `timed_from_ns` (ledger time) is where
+    * the untimed rounds end. */
   def burst(spark: SparkSession, seed: Long, workers: Int): Map[String, Any] = {
-    val n = BurstWarmup + BurstTimed
+    val n = BurstRound * (BurstWarmRounds + BurstTimedRounds)
     val l = new Ledger(n); ledger = l
-    val p = pipeline(spark, config("burst", workers), 0, 10, seed).start()
+    val p = pipeline(spark, config("burst", workers, BackToBack), 0, 10, seed).start()
     val sampler = new BacklogSampler(p, l); sampler.start()
     val putSpans = new ConcurrentLinkedQueue[Array[Long]]()
     def round(from: Int, until: Int): Double = {
@@ -195,11 +202,12 @@ object Ingest {
       p.flush()
       (System.nanoTime() - t0) / 1e9
     }
-    round(0, BurstWarmup)
+    for (k <- 0 until BurstWarmRounds) round(k * BurstRound, (k + 1) * BurstRound)
     System.gc()
     val timedFromNs = System.nanoTime() - l.base
-    val timedS = round(BurstWarmup, n)
+    val roundS = (BurstWarmRounds until BurstWarmRounds + BurstTimedRounds)
+      .map(k => round(k * BurstRound, (k + 1) * BurstRound))
     settle(p, l, n, putSpans, sampler) ++ Map(
-      "timed_items" -> BurstTimed, "timed_s" -> timedS, "timed_from_ns" -> timedFromNs)
+      "round_items" -> BurstRound, "round_s" -> roundS, "timed_from_ns" -> timedFromNs)
   }
 }

@@ -60,7 +60,7 @@ object Main {
     def warmUp(spark: SparkSession): Unit =
       if (ingest) {
         Ingest.ledger = new Ledger(1024)
-        val p = Ingest.pipeline(spark, Ingest.config("setup", workers), 0, 0, seed).start()
+        val p = Ingest.pipeline(spark, Ingest.config("setup", workers, Ingest.BackToBack), 0, 0, seed).start()
         p.putAll((0 until 1024).map(_.toLong)); p.flush(); p.stop()
       } else {
         val e = Queries.run(spark, data, "q01_pricing_summary", 0, "setup")

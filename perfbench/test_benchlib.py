@@ -35,6 +35,20 @@ class TailRule(unittest.TestCase):
         v, q = bl.tail(xs, n=100)
         self.assertEqual(q, 0.9)
         self.assertAlmostEqual(v, np.percentile(xs, 90))
+        # a cap holds the quantile below the rule's choice, never above it
+        self.assertEqual(bl.tail(xs, max_q=0.9)[1], 0.9)
+        self.assertEqual(bl.tail(xs, n=40, max_q=0.9)[1], 0.75)
+
+
+class Backlog(unittest.TestCase):
+    def test_trough_slope_ignores_a_flush_sawtooth(self):
+        # 15k items/s arrive and a flush empties the backlog once a second
+        ts = np.arange(0, 4, 0.05)
+        saw = 15000 * (ts % 1.0)
+        self.assertGreater(abs(bl.slope(ts[10:50], saw[10:50])), 1500)
+        self.assertAlmostEqual(bl.trough_slope(ts, saw, 1.0), 0.0)
+        # falling behind: 2,000 more items left after each flush
+        self.assertAlmostEqual(bl.trough_slope(ts, saw + 2000 * (ts // 1.0), 1.0), 2000.0)
 
 
 class OpenLoop(unittest.TestCase):
@@ -61,8 +75,8 @@ class OpenLoop(unittest.TestCase):
             acc = lambda k: {"items": k, "ids_missing": 0, "sink_calls": [],
                              "stat": {"items_in": k, "items_flushed": k,
                                       "items_dropped": 0, "pending": 0}}
-            r = {"steady": acc(n),
-                 "burst": {**acc(300), "timed_items": 200, "timed_s": 0.4}}
+            r = {"steady": {**acc(n), "origin_ns": 0},
+                 "burst": {**acc(300), "round_items": 100, "round_s": [0.2, 0.25, 0.1]}}
             zero = np.zeros(n, dtype=int)
             e2e, attempted, failed, info, _ = run.ingest_metrics(
                 r, out, due, zero, zero, trace=False)
@@ -70,7 +84,7 @@ class OpenLoop(unittest.TestCase):
             self.assertAlmostEqual(e2e["latency_p50_ms"],
                                    np.percentile(done - due, 50))
             self.assertGreater(e2e["latency_p50_ms"], 100)
-            # closed-loop throughput: the timed round's ids per second
+            # closed-loop throughput: the median of the timed rounds' ids per second
             self.assertAlmostEqual(e2e["throughput_per_s"], 500.0)
 
 
