@@ -11,9 +11,8 @@ import org.apache.spark.sql.SparkSession
   *    prune the projection and under-measure scans);
   *  - a warm-up query absorbs one-time session/codegen/FileSystem init so
   *    per-query numbers measure the plan, not JVM warm-up;
-  *  - AQE is on (runtime shuffle coalescing + skew splitting), shuffle
-  *    partitions sized to the local core count, as a 1000-executor deploy
-  *    would size them to cluster parallelism.
+  *  - the session is [[GraftSession]]'s (AQE on, shuffle partitions
+  *    sized to the local core count, production extensions).
   *
   * Self-adjudicating receipts: this host shows 2-3x noisy-neighbor swings
   * (round-4 driver bench reported q54 at 23.4 s where the committed number
@@ -134,40 +133,27 @@ object Bench {
     "t48_lm_index_gate", "t49_lm_ingest_gate", "t50_bpe_ingest_gate",
     "t43_bm25_indexed", "t45_phrase_indexed")
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.nanosFlag, "true")
-      // same production extension config as Verify: benched plans are the
-      // plans a cluster deployment would run
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  /** Runs one registered query to completion through the `noop` sink and
+    * returns its wall seconds, or -1 if it failed. Releases query-scoped
+    * caches afterwards (the timed value is computed before the finally),
+    * so timings are independent — no cross-query cache hits — and cached
+    * plans don't accumulate over the session. */
+  private[graft] def execute(spark: SparkSession, sfDir: String, name: String): Double = {
+    val t0 = System.nanoTime()
+    try {
+      SparkEntry.queries(name)(spark, sfDir)
+        .write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] $name failed: ${e.getMessage}")
+      -1.0
+    } finally spark.catalog.clearCache()
+  }
 
-    def execute(name: String): Double = {
-      val t0 = System.nanoTime()
-      try {
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        -1.0
-      } finally {
-        // release query-scoped caches (timed value is computed before the
-        // finally) so timings are independent — no cross-query cache hits
-        // — and cached plans don't accumulate over the session
-        spark.catalog.clearCache()
-      }
-    }
+  def main(args: Array[String]): Unit = {
+    val sfDir = GraftSession.sfDir
+    val spark = GraftSession("graft-bench")
+    def execute(name: String): Double = Bench.execute(spark, sfDir, name)
 
     val names = SparkEntry.queries.keys.toSeq.sorted
     execute(names.head) // warm-up: session + codegen + parquet footer caches

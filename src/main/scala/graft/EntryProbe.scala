@@ -1,24 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Smoke probe for the driver's `SparkEntry.entry` contract: builds the
-  * same session shape as [[Verify]], runs the flagship query at the
-  * smallest scale factor, and exits non-zero unless it returns rows.
+/** Smoke probe for the driver's `SparkEntry.entry` contract: runs the
+  * flagship query at the smallest scale factor on [[Verify]]'s session
+  * ([[GraftSession]]) and exits non-zero unless it returns rows.
   * Checked in permanently so the verify recipe can `runMain` it instead
   * of recreating a throwaway main each round. */
 object EntryProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-entry-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.nanosFlag, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-entry-probe")
     try {
       val n = SparkEntry.entry(spark).count()
       println(s"[entry-probe] rows=$n")

@@ -4,8 +4,6 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.concurrent.duration._
 
-import org.apache.spark.sql.SparkSession
-
 import graft.core.{BatchPipeline, FlushContext, Flusher, FlusherFactory, PipelineConfig}
 
 /** Pipeline throughput benchmark — the direct counterpart of the
@@ -21,13 +19,16 @@ import graft.core.{BatchPipeline, FlushContext, Flusher, FlusherFactory, Pipelin
   * (return = complete), so in-flight parallelism comes from partitions —
   * numWorkers=8 tasks each flushing serially, capped by the same
   * maxConcurrency=8 semaphore. Same 64 × 1 s batch work, same 8-wide
-  * sink, same ideal.
+  * sink, same ideal — given 8 task slots. With fewer slots
+  * (SPARK_GRAFT_CPUS < 8) only that many workers flush at once, so
+  * `ideal_sec` is 64 s ÷ min(8, slots) and `overhead_sec` is measured
+  * against it.
   *
   * Scenario 2 removes the sink latency entirely to expose pure engine
   * overhead per item (admission → micro-batch → shard → cut → deliver).
   *
   * Prints ONE JSON line:
-  * {"metric":"pipeline","sink_bound_sec":…,"ideal_sec":8.0,
+  * {"metric":"pipeline","sink_bound_sec":…,"ideal_sec":…,
   *  "overhead_sec":…,"zero_latency_sec":…,"items":65536,
   *  "items_per_sec_zero_latency":…,"delivered":…,"ref_sec":"8.0-9.0"}
   */
@@ -42,15 +43,7 @@ object PipelineBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .appName("graft-pipeline-bench")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.nanosFlag, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-pipeline-bench")
     import spark.implicits._
 
     val items = (1 to 65536).map(i => s"item-$i")
@@ -77,9 +70,10 @@ object PipelineBench {
     run("pb-warm", 0)        // absorb session/stream startup
     val zero = run("pb-zero", 0)
     val bound = run("pb-sink", 1000)
+    val ideal = 64.0 / math.min(8, spark.sparkContext.defaultParallelism)
     val json =
-      f"""{"metric":"pipeline","sink_bound_sec":$bound%.2f,"ideal_sec":8.0,""" +
-      f""""overhead_sec":${bound - 8.0}%.2f,"zero_latency_sec":$zero%.2f,""" +
+      f"""{"metric":"pipeline","sink_bound_sec":$bound%.2f,"ideal_sec":$ideal%.1f,""" +
+      f""""overhead_sec":${bound - ideal}%.2f,"zero_latency_sec":$zero%.2f,""" +
       f""""items":65536,"items_per_sec_zero_latency":${65536 / zero}%.0f,""" +
       f""""delivered":${delivered.get()},"ref_sec":"8.0-9.0"}"""
     println(json)

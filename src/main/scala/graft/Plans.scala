@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates PLANS.md: `explain("formatted")` for the flagship
   * queries, with AQE off so the static physical plan (join strategies,
   * pushdown, codegen spans) is visible. Run:
@@ -98,15 +96,11 @@ object Plans {
     "g28_link_prediction" -> "link prediction (common-neighbors + Jaccard): wedge self-join of the src-bucketed edge table on its bucket key — both sides, the degree agg, and the hub-cap semi-join Exchange-free (pinned); deg > 64 centers excluded bounding wedges to cap·|E|; one documented (u,v) re-key for the non-edge anti-join; top-100 via TakeOrderedAndProject")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.maxMetadataStringLength", "200")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.nanosFlag, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession("graft-plans")
+    // runtime overrides reach this session only: a builder's newSession()
+    // child (q83) still plans with the factory's AQE-on config
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.maxMetadataStringLength", "200")
     spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.001"
     val sb = new StringBuilder

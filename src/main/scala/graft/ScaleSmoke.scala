@@ -13,12 +13,7 @@ import org.apache.spark.sql.functions._
   * demonstrating what a too-low maxIters truncates. */
 object ScaleSmoke {
   def main(a: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.nanosFlag, "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession("graft-scale-smoke")
     spark.sparkContext.setLogLevel("ERROR")
     if (a.contains("d100")) { d100(spark); spark.stop(); return }
     if (a.contains("i100")) { i100(spark); spark.stop(); return }

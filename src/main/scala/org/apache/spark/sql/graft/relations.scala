@@ -2,7 +2,8 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Descending, SortOrder}
-import org.apache.spark.sql.classic.Dataset
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.classic.{Dataset, SparkSession}
 
 import graft.plans.TopKPerKeyPlan
 
@@ -34,28 +35,38 @@ object relations {
     }
   }
 
-  /** Top-k rows per key — plans [[TopKPerKeyPlan]], lowered by the graft
-    * strategy to partial+final bounded heaps (see its Scaladoc for why
-    * this beats a row_number window at scale). `sort` is (column,
-    * ascending) pairs and should form a TOTAL order (include a unique
-    * tie-break) for deterministic output, exactly as with row_number. */
-  def topKPerKey(df: DataFrame, keys: Seq[String], sort: Seq[(String, Boolean)], k: Int): DataFrame = {
-    val session = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    // self-registering: sessions built without spark.sql.extensions=
-    // graft.GraftExtensions still plan the node (idempotent add)
+  /** Adds graft's planner strategy to `session` unless it is already
+    * there, so sessions built without spark.sql.extensions=
+    * graft.GraftExtensions still plan graft's nodes. */
+  private def registerStrategy(session: SparkSession): Unit = {
     val strategies = session.experimental.extraStrategies
     if (!strategies.contains(graft.GraftStrategies.TopKPerKeyStrategy)) {
       session.experimental.extraStrategies =
         strategies :+ graft.GraftStrategies.TopKPerKeyStrategy
     }
+  }
+
+  /** Resolves `keys` and `sort` against `df` and wraps its analyzed plan
+    * in the node `mk` builds. */
+  private def keyedNode(df: DataFrame, keys: Seq[String], sort: Seq[(String, Boolean)])(
+      mk: (Seq[Attribute], Seq[SortOrder], LogicalPlan) => LogicalPlan): DataFrame = {
+    val session = df.sparkSession.asInstanceOf[SparkSession]
+    registerStrategy(session)
     val keyAttrs = keys.map(resolve(df, _))
     val order = sort.map { case (name, asc) =>
       SortOrder(resolve(df, name), if (asc) Ascending else Descending)
     }
     Dataset.ofRows(session,
-      TopKPerKeyPlan(keyAttrs, order, k,
-        df.asInstanceOf[Dataset[_]].queryExecution.analyzed))
+      mk(keyAttrs, order, df.asInstanceOf[Dataset[_]].queryExecution.analyzed))
   }
+
+  /** Top-k rows per key — plans [[TopKPerKeyPlan]], lowered by the graft
+    * strategy to partial+final bounded heaps (see its Scaladoc for why
+    * this beats a row_number window at scale). `sort` is (column,
+    * ascending) pairs and should form a TOTAL order (include a unique
+    * tie-break) for deterministic output, exactly as with row_number. */
+  def topKPerKey(df: DataFrame, keys: Seq[String], sort: Seq[(String, Boolean)], k: Int): DataFrame =
+    keyedNode(df, keys, sort)(TopKPerKeyPlan(_, _, k, _))
 
   /** Tie-safe map-side prune for rank()/dense_rank() top-N pipelines —
     * plans [[graft.plans.RankPrunePlan]]. Passes every row whose order
@@ -64,19 +75,6 @@ object relations {
     * [[graft.plans.WindowTopKRewrite]] optimizer rule does this
     * automatically for the standard idiom — this builder is the manual
     * form). Results of prune+window are identical to window alone. */
-  def rankPrune(df: DataFrame, keys: Seq[String], sort: Seq[(String, Boolean)], k: Int): DataFrame = {
-    val session = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val strategies = session.experimental.extraStrategies
-    if (!strategies.contains(graft.GraftStrategies.TopKPerKeyStrategy)) {
-      session.experimental.extraStrategies =
-        strategies :+ graft.GraftStrategies.TopKPerKeyStrategy
-    }
-    val keyAttrs = keys.map(resolve(df, _))
-    val order = sort.map { case (name, asc) =>
-      SortOrder(resolve(df, name), if (asc) Ascending else Descending)
-    }
-    Dataset.ofRows(session,
-      graft.plans.RankPrunePlan(keyAttrs, order, k,
-        df.asInstanceOf[Dataset[_]].queryExecution.analyzed))
-  }
+  def rankPrune(df: DataFrame, keys: Seq[String], sort: Seq[(String, Boolean)], k: Int): DataFrame =
+    keyedNode(df, keys, sort)(graft.plans.RankPrunePlan(_, _, k, _))
 }

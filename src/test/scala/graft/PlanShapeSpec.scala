@@ -230,8 +230,9 @@ class PlanShapeSpec extends SparkSpec {
       // r16: the sketch is DataSketches HLL (one binary buffer/column),
       // not HLL++ (1639 Long slots/column — the q84 sketch-leg lesson)
       assert(pa.toLowerCase.contains("hll_sketch_agg"), pa)
-      // schema identical either way; estimates land within the q84-gated
-      // 5-sigma band of exact (rsd 0.01)
+      // schema identical either way; the hll_sketch_agg(lgK=14) estimate
+      // (relative standard error 1.04/sqrt(2^14) ~ 0.8%) lands inside a
+      // 5% band of exact, i.e. beyond 5 sigma
       assert(approx.schema == exact.schema
         .copy(), s"schema drift: ${approx.schema} vs ${exact.schema}")
       val est = approx.collect().map(r => r.getString(0) -> r.getLong(3)).toMap

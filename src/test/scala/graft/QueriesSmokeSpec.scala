@@ -68,6 +68,25 @@ class QueriesSmokeSpec extends SparkSpec {
     assert(stale.isEmpty, s"stale amortized markers: $stale")
   }
 
+  test("only GraftSession builds a SparkSession in src/main") {
+    // every main runs on the one factory config; a pasted builder is how
+    // probes drifted to other core counts and dropped the extensions
+    // (comment lines are skipped — GraftExtensions documents the call)
+    import scala.jdk.CollectionConverters._
+    val builder = """SparkSession\s*\.\s*builder""".r
+    val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+    val offenders = sources.filterNot(_.endsWith("graft/GraftSession.scala")).filter { p =>
+      java.nio.file.Files.readAllLines(p).asScala.exists { line =>
+        val t = line.trim
+        !t.startsWith("//") && !t.startsWith("*") && !t.startsWith("/*") &&
+          builder.findFirstIn(line).isDefined
+      }
+    }
+    assert(offenders.isEmpty,
+      s"SparkSession.builder outside GraftSession (${offenders.size}): ${offenders.map(_.toString).sorted.mkString(", ")}")
+  }
+
   test("entry() returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

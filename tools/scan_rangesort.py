@@ -1,14 +1,23 @@
 #!/usr/bin/env python3
-"""Scan PlanDump 'formatted' plans for total-order sorts whose range
+"""Scan 'formatted' plan dumps for total-order sorts whose range
 exchange sits directly over a narrow (shuffle-free) compute chain — the
 shape whose child the range sampler re-executes wholesale (r16 batch A).
+
+Input: a directory of `<query>_<suffix>.txt` files, each one query's
+`explain("formatted")` text, as written by
+
+    SPARK_GRAFT_SF_DIR=... sbt "runMain graft.Dev plan <dir> <suffix> <query...>"
 
 For each plan file: find Exchange nodes whose details say
 rangepartitioning, then inspect the header tree's subtree below that
 node. Flag the query when the subtree contains NO other Exchange, NO
-InMemoryTableScan/InMemoryRelation (already cached), and NO
-BroadcastExchange boundary — i.e. the whole chain recomputes at sampling
-time. Prints: query, the subtree's operator list (compressed).
+InMemoryTableScan/InMemoryRelation (already cached), NO
+BroadcastExchange boundary and none of the other blockers below (joins,
+aggregates, windows, row-multiplying Generate/Expand, a recursive
+UnionLoop) — i.e. the whole chain recomputes at sampling time. Prints:
+query, the subtree's operator list (compressed).
+
+Usage: python3 tools/scan_rangesort.py <plan dir>
 """
 import re
 import sys
@@ -49,9 +58,10 @@ for fn in sorted(os.listdir(plan_dir)):
             sub.append(op2)
         blockers = [o for o in sub if o in (
             "Exchange", "BroadcastExchange", "InMemoryTableScan",
-            "BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
-            "HashAggregate", "ObjectHashAggregate", "SortAggregate",
-            "Window", "AQEShuffleRead")]
+            "InMemoryRelation", "BroadcastHashJoin", "SortMergeJoin",
+            "ShuffledHashJoin", "HashAggregate", "ObjectHashAggregate",
+            "SortAggregate", "Window", "AQEShuffleRead", "Generate",
+            "Expand", "UnionLoop")]
         if not blockers and sub:
             print(f"{fn.replace('_before.txt','').replace('.txt','')}: "
                   f"map-only above range sort -> {' > '.join(sub[:8])}")
