@@ -102,13 +102,17 @@ object Bench {
     * from-scratch computation (round-8 judge ask #8 — keep the bench
     * honest as memos spread): these consume session-lifetime state a
     * production deployment would amortize the same way — the shared
-    * fingerprint-keyed ANN/text artifacts, the ANN family-result memo,
-    * the cluster-label memos, and the concurrent StreamGates build.
-    * Pass 1 pays the build; pass 2 replays; min-of-2 reports the
-    * replay. Their names are emitted under "amortized" in the JSON so
-    * future rounds can't mistake replay cost for compute cost. The
-    * standalone family queries (s02/s03/s05/s09) deliberately bypass
-    * the memos and stay honest from-scratch numbers. */
+    * fingerprint-keyed ANN/text/graph artifacts (persisted tables) and
+    * the `GateMemo.getOrBuild` entries (gate results, the ANN family
+    * results, cluster labels, graph cores, the concurrent StreamGates
+    * build). Pass 1 pays the build; pass 2 replays; min-of-2 reports
+    * the replay. Their names are emitted under "amortized" in the JSON
+    * so future rounds can't mistake replay cost for compute cost. The
+    * list is kept by hand: some entries (d20, t43, t45) replay
+    * persisted artifacts rather than memo hits, so it cannot be derived
+    * from memo hits alone. The standalone family queries
+    * (s02/s03/s05/s09) deliberately bypass the memos and stay honest
+    * from-scratch numbers. */
   private[graft] val amortized: Seq[String] = Seq(
     "d05_dedup_survivors", "d11_ivf_gate", "d12_stream_dedup_gate",
     "d16_dedup_keep_best",

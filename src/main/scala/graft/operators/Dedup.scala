@@ -432,6 +432,13 @@ object Dedup {
     (labels, i, converged)
   }
 
+  /** Mtime+length fingerprint of the fixture file backing the labels —
+    * the fixture files CAN be regenerated mid-round, and
+    * a memo keyed only by path would replay labels computed from the OLD
+    * bytes against oracles reading the new ones. */
+  private def docsFingerprint(dir: String): Long =
+    Tables.fixtureFingerprint(dir, "documents.parquet")
+
   /** Memoized MinHash cluster-label stage shared by the survivor-policy
     * family (d05 survivors, d16 keep-best): both queries derive from the
     * SAME d01-pairs → pointer-jumping labels subtree, and a driver
@@ -446,23 +453,14 @@ object Dedup {
     * retention of a bounded artifact (the round-6 prescription: "shared
     * localCheckpoint within the Verify session"), NOT a CacheManager
     * entry — `clearCache()` discipline is unaffected either way, and the
-    * blocks die with the session's SparkContext. Keyed by (session, dir)
-    * so test sessions / other fixtures never cross-hit; the strong
-    * session key pins at most the handful of sessions a process builds. */
-  private val labelsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Long), DataFrame]()
-
-  /** Mtime+length fingerprint of the fixture file backing the labels —
-    * the driver CAN regenerate /root/testdata mid-round (CLAUDE.md), and
-    * a memo keyed only by path would replay labels computed from the OLD
-    * bytes against oracles reading the new ones. */
-  private def docsFingerprint(dir: String): Long =
-    Tables.fixtureFingerprint(dir, "documents.parquet")
-
+    * blocks die with the session's SparkContext. Held in [[GateMemo]]
+    * (kind "labels"), keyed by (session, dir) so test sessions / other
+    * fixtures never cross-hit; the strong session key pins at most the
+    * handful of sessions a process builds. */
   private[graft] def minhashClusterLabels(s: SparkSession, dir: String): DataFrame =
-    labelsMemo.computeIfAbsent((s, dir, docsFingerprint(dir)), { _ =>
+    GateMemo.getOrBuild("labels", s, dir, docsFingerprint(dir)) {
       clusterLabels(d01MinhashPairs(s, dir).select(col("doc_a"), col("doc_b")))
-    })
+    }
 
   /** Survivors after MinHash near-dup clustering: every document except
     * non-canonical members of a duplicate cluster (canonical = min
@@ -580,6 +578,9 @@ object Dedup {
       .withColumn("nrm", VectorFunctions.l2Norm(col("emb")))
   }
 
+  private def embFingerprint(dir: String): Long =
+    Tables.fixtureFingerprint(dir, "embeddings.parquet")
+
   /** d19's IVF-candidate → verify → component stage, memoized like
     * [[minhashClusterLabels]] (same retention contract: the frame's
     * lineage ends at the labels localCheckpoint, the retained state is
@@ -587,15 +588,11 @@ object Dedup {
     * fingerprint invalidates on a driver-side regeneration). The IVF
     * training collect barriers + the pointer-jumping rounds are the
     * bulk of d19's cost; the policy joins downstream are cheap. */
-  private val semLabelsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Long), DataFrame]()
-  private def embFingerprint(dir: String): Long =
-    Tables.fixtureFingerprint(dir, "embeddings.parquet")
   private def semanticClusterLabels(s: SparkSession, dir: String): DataFrame =
-    semLabelsMemo.computeIfAbsent((s, dir, embFingerprint(dir)), { _ =>
+    GateMemo.getOrBuild("semLabels", s, dir, embFingerprint(dir)) {
       clusterLabels(ivfNearDupPairs(d19Corpus(s, dir), DupCells, DupProbe, 0.9)
         .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
-    })
+    }
 
   def d19SemanticDedup(s: SparkSession, dir: String): DataFrame = {
     val e = d19Corpus(s, dir)
@@ -728,52 +725,21 @@ object Dedup {
     * pipeline reuses its kNN graph across every downstream query, and
     * the IVF training collects + pointer-jumping rounds are the whole
     * cost): edges localCheckpointed (eager, lineage-truncating), labels'
-    * lineage already ends at clusterLabels' checkpoint. Built under a
-    * dedicated lock (the r12 triangle-core race lesson); stale
-    * fingerprints evicted on insert. d22 anchors the memoized edges
-    * against a FRESH exact all-pairs recomputation, so the memo cannot
-    * drift semantics (the g12 rule). */
-  private val knnCoreMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Long), (DataFrame, DataFrame)]()
-  private val knnLock = new Object
-
-  /** Evict stale-fingerprint entries for (s, dir) AND free their
-    * checkpointed frames' blocks (round-13 ADVICE: removal alone left
-    * the blocks to GC + ContextCleaner — across driver-side fixture
-    * regenerations that is a process-lifetime leak). `frames` selects
-    * which members of the memoized value hold checkpointed state. */
-  private def evictStale[V](
-      memo: java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Long), V],
-      s: SparkSession, dir: String, fp: Long)(frames: V => Seq[DataFrame]): Unit = {
-    val it = memo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val k = e.getKey
-      if ((k._1 eq s) && k._2 == dir && k._3 != fp) {
-        frames(e.getValue).foreach(
-          org.apache.spark.sql.graft.bridge.freeLocalCheckpoint)
-        it.remove()
-      }
-    }
-  }
-
+    * lineage already ends at clusterLabels' checkpoint. Held in
+    * [[GateMemo]] (kind "knnCore": single flight, stale fingerprints
+    * evicted and freed). d22 anchors the memoized edges against a FRESH
+    * exact all-pairs recomputation, so the memo cannot drift semantics
+    * (the g12 rule). */
   private def sharedKnnCore(s: SparkSession,
-      dir: String): (DataFrame, DataFrame) = {
-    val fp = embFingerprint(dir)
-    val k = (s, dir, fp)
-    Option(knnCoreMemo.get(k)).getOrElse(knnLock.synchronized {
-      Option(knnCoreMemo.get(k)).getOrElse {
-        val edges = knnEdges(
-          ivfCandidateVecs(d21Corpus(s, dir), DupCells, DupProbe))
-          .localCheckpoint(true)
-        val labels = clusterLabels(
-          edges.select(col("u").as("doc_a"), col("v").as("doc_b")))
-        evictStale(knnCoreMemo, s, dir, fp)(t => Seq(t._1, t._2))
-        knnCoreMemo.put(k, (edges, labels))
-        (edges, labels)
-      }
-    })
-  }
+      dir: String): (DataFrame, DataFrame) =
+    GateMemo.getOrBuild("knnCore", s, dir, embFingerprint(dir)) {
+      val edges = knnEdges(
+        ivfCandidateVecs(d21Corpus(s, dir), DupCells, DupProbe))
+        .localCheckpoint(true)
+      val labels = clusterLabels(
+        edges.select(col("u").as("doc_a"), col("v").as("doc_b")))
+      (edges, labels)
+    }
 
   def d21KnnClusters(s: SparkSession, dir: String): DataFrame = {
     val (edges, labels) = sharedKnnCore(s, dir)
@@ -854,16 +820,6 @@ object Dedup {
       .select(col("src"), col("dst"))
   }
 
-  /** The frozen BASE state a production deployment holds as its index
-    * artifact between delta batches: corpus-trained centroids (two
-    * Lloyd passes, the d21 recipe) + the pre-delta directed edge set,
-    * memoized per (session, dir, fingerprint) with the edge frame
-    * localCheckpointed (the sharedKnnCore pattern, built under the same
-    * lock) — so the incremental path's per-call cost really is bounded
-    * by the delta's hot cells, not a silent base rebuild. */
-  private val knnBaseMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Long), (Seq[Array[Double]], DataFrame, DataFrame)]()
-
   /** Train the frozen base state from a (vec_id, emb, nrm) corpus:
     * corpus-trained centroids (two Lloyd passes, the d21 recipe) + the
     * pre-delta directed edge set. */
@@ -878,26 +834,26 @@ object Dedup {
     (cents, d23DirectedFrom(idxC, idxC, corpus))
   }
 
+  /** The frozen BASE state a production deployment holds as its index
+    * artifact between delta batches: corpus-trained centroids (two
+    * Lloyd passes, the d21 recipe) + the pre-delta directed edge set,
+    * memoized per (session, dir, fingerprint) in [[GateMemo]] (kind
+    * "knnBase") with the edge frame localCheckpointed (the sharedKnnCore
+    * pattern) — so the incremental path's per-call cost really is
+    * bounded by the delta's hot cells, not a silent base rebuild. */
   private def knnFrozenBase(s: SparkSession,
-      dir: String): (Seq[Array[Double]], DataFrame, DataFrame) = {
-    val fp = embFingerprint(dir)
-    val k = (s, dir, fp)
-    Option(knnBaseMemo.get(k)).getOrElse(knnLock.synchronized {
-      Option(knnBaseMemo.get(k)).getOrElse {
-        val corpus = d21Corpus(s, dir).filter(col("vec_id") < KnnDeltaOff)
-        val (cents, base0) = knnTrainBase(corpus)
-        val base = base0.localCheckpoint(true)
-        // the (cell, vec_id) index IS part of the persisted base state
-        // (production: the artifact's narrow index table) — holding it
-        // checkpointed spares the incremental path the full-corpus
-        // re-assignment pass
-        val idxC = d23CellIdx(corpus, cents).localCheckpoint(true)
-        evictStale(knnBaseMemo, s, dir, fp)(t => Seq(t._2, t._3))
-        knnBaseMemo.put(k, (cents, base, idxC))
-        (cents, base, idxC)
-      }
-    })
-  }
+      dir: String): (Seq[Array[Double]], DataFrame, DataFrame) =
+    GateMemo.getOrBuild("knnBase", s, dir, embFingerprint(dir)) {
+      val corpus = d21Corpus(s, dir).filter(col("vec_id") < KnnDeltaOff)
+      val (cents, base0) = knnTrainBase(corpus)
+      val base = base0.localCheckpoint(true)
+      // the (cell, vec_id) index IS part of the persisted base state
+      // (production: the artifact's narrow index table) — holding it
+      // checkpointed spares the incremental path the full-corpus
+      // re-assignment pass
+      val idxC = d23CellIdx(corpus, cents).localCheckpoint(true)
+      (cents, base, idxC)
+    }
 
   /** Frame-level incremental core ([[incrementalKnnEdges]]'s body,
     * factored so the displacement differential can drive it with a

@@ -656,7 +656,9 @@ object Graph {
   /** Fingerprint-keyed shared edge index (the sharedAnnIndex pattern —
     * one build amortizes across every consumer in the session; a
     * driver-side fixture regeneration changes the name and forces a
-    * rebuild). */
+    * rebuild). [[sharedGraphLock]] guards only these catalog-table
+    * builders, which call no memo; memo builds ([[GateMemo]]) may take
+    * it, never the reverse. */
   private val sharedGraphLock = new Object
   private def graphFp(dir: String): Long =
     Tables.fixtureFingerprint(dir, "lineitem.parquet") ^
@@ -1024,33 +1026,18 @@ object Graph {
     * CacheManager-free) and memoized per (session, dir, fixture
     * fingerprint). perEdge is edge-set-sized with O(√E)-bounded witness
     * arrays and deg is node-sized — bounded session-lifetime state, the
-    * same deliberate retention as the cluster-label memo. Stale
-    * fingerprints are evicted on insert (the GateMemo rule: a
-    * regenerated fixture's entry can never be read again and would pin
-    * its checkpoint blocks for the process lifetime). */
-  private val triCoreMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Long), (DataFrame, DataFrame)]()
-
+    * same deliberate retention as the cluster-label memo. Held in
+    * [[GateMemo]] (kind "triCore"): single flight, so two concurrent
+    * first callers never both pay the core (r12 ADVICE), and stale
+    * fingerprints are evicted with their checkpoint blocks freed. */
   private[graft] def sharedTriangleCore(
-      s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val fp = Tables.fixtureFingerprint(dir, "lineitem.parquet")
-    val k = (s, dir, fp)
-    // build under the shared lock (r12 ADVICE): two concurrent first
-    // callers would both pay the expensive core, and the putIfAbsent
-    // loser's localCheckpointed perEdge/deg blocks would stay pinned
-    // for the session with no owner. Double-checked: a hit never locks.
-    Option(triCoreMemo.get(k)).getOrElse(sharedGraphLock.synchronized {
-      Option(triCoreMemo.get(k)).getOrElse {
-        val name = sharedCooccurIndex(s, dir)
-        val (perEdge, deg, _) = triangleCore(cooccurEdges(s, name))
-        val v = (perEdge.localCheckpoint(true), deg.localCheckpoint(true))
-        triCoreMemo.keySet.removeIf(e =>
-          (e._1 eq s) && e._2 == dir && e._3 != fp)
-        triCoreMemo.put(k, v)
-        v
-      }
-    })
-  }
+      s: SparkSession, dir: String): (DataFrame, DataFrame) =
+    GateMemo.getOrBuild("triCore", s, dir,
+      Tables.fixtureFingerprint(dir, "lineitem.parquet")) {
+      val name = sharedCooccurIndex(s, dir)
+      val (perEdge, deg, _) = triangleCore(cooccurEdges(s, name))
+      (perEdge.localCheckpoint(true), deg.localCheckpoint(true))
+    }
 
   /** The part co-occurrence graph persisted (g10/g11's amortization
     * twin, through the SAME generic [[writeEdgeIndexFrom]] machinery as
@@ -1147,30 +1134,16 @@ object Graph {
     * lineage already ends at clusterLabels' eager localCheckpoint, so a
     * memo hit replays nothing and the retained state is the (id, label)
     * frame itself (node-sized, bounded session-lifetime retention —
-    * the labelsMemo precedent). Built under [[sharedGraphLock]] so two
-    * concurrent first callers can't both pay the fixpoint and leak the
-    * loser's checkpoint blocks (the r12 ADVICE triangle-core finding).
-    * Stale fingerprints evicted on insert (the GateMemo rule). */
-  private val compLabelsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Long), DataFrame]()
-
+    * the minhashClusterLabels precedent). Held in [[GateMemo]] (kind
+    * "compLabels", the sharedTriangleCore rule). */
   private[graft] def sharedComponentLabels(
-      s: SparkSession, dir: String): DataFrame = {
-    val fp = graphFp(dir)
-    val k = (s, dir, fp)
-    Option(compLabelsMemo.get(k)).getOrElse(sharedGraphLock.synchronized {
-      Option(compLabelsMemo.get(k)).getOrElse {
-        val name = sharedAffinityIndex(s, dir)
-        val v = Dedup.clusterLabels(
-          s.table(name + "_edges").filter(col("src") % 2 === 0)
-            .select(col("src").as("doc_a"), col("dst").as("doc_b")))
-        compLabelsMemo.keySet.removeIf(e =>
-          (e._1 eq s) && e._2 == dir && e._3 != fp)
-        compLabelsMemo.put(k, v)
-        v
-      }
-    })
-  }
+      s: SparkSession, dir: String): DataFrame =
+    GateMemo.getOrBuild("compLabels", s, dir, graphFp(dir)) {
+      val name = sharedAffinityIndex(s, dir)
+      Dedup.clusterLabels(
+        s.table(name + "_edges").filter(col("src") % 2 === 0)
+          .select(col("src").as("doc_a"), col("dst").as("doc_b")))
+    }
 
   /** Driver gate for the affinity-component artifact + label memo (the
     * g04/g12 pattern): one row asserting served [[g03Components]] ≡ the
@@ -1708,25 +1681,14 @@ object Graph {
   /** The frozen packed LPA history over the persisted weighted
     * artifact — g19's base state, memoized per (session, dir, fixture
     * fingerprint) exactly like [[sharedTriangleCore]] (bounded: one
-    * node-sized checkpointed frame; stale fingerprints evicted). */
-  private val lpaRoundsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Long), DataFrame]()
-
-  private[graft] def sharedLpaPacked(s: SparkSession, dir: String): DataFrame = {
-    val fp = Tables.fixtureFingerprint(dir, "lineitem.parquet")
-    val k = (s, dir, fp)
-    Option(lpaRoundsMemo.get(k)).getOrElse(sharedGraphLock.synchronized {
-      Option(lpaRoundsMemo.get(k)).getOrElse {
-        val name = sharedWeightedCooccurIndex(s, dir)
-        val v = packLpaRounds(lpaRoundLabels(s.table(name + "_edges"), rounds = 4))
-          .localCheckpoint(true)
-        lpaRoundsMemo.keySet.removeIf(e =>
-          (e._1 eq s) && e._2 == dir && e._3 != fp)
-        lpaRoundsMemo.put(k, v)
-        v
-      }
-    })
-  }
+    * node-sized checkpointed frame; [[GateMemo]] kind "lpaRounds"). */
+  private[graft] def sharedLpaPacked(s: SparkSession, dir: String): DataFrame =
+    GateMemo.getOrBuild("lpaRounds", s, dir,
+      Tables.fixtureFingerprint(dir, "lineitem.parquet")) {
+      val name = sharedWeightedCooccurIndex(s, dir)
+      packLpaRounds(lpaRoundLabels(s.table(name + "_edges"), rounds = 4))
+        .localCheckpoint(true)
+    }
 
   /** g19 — the registered incremental-LPA query: frozen base = the
     * persisted weighted artifact's memoized per-round labels (exactly
@@ -1784,43 +1746,33 @@ object Graph {
   /** Frozen modularity statistics of the BASE labelling: the
     * community-sized strength table plus the (m2, intra) scalars
     * (1-row driver read — the IVF-seed/BPE-winner precedent), memoized
-    * per fixture like [[sharedLpaPacked]]. */
-  private val modStatsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Long), (DataFrame, Long, Long)]()
-
+    * per fixture like [[sharedLpaPacked]] ([[GateMemo]] kind
+    * "modStats"). */
   private[graft] def sharedModularityStats(
-      s: SparkSession, dir: String): (DataFrame, Long, Long) = {
-    val fp = Tables.fixtureFingerprint(dir, "lineitem.parquet")
-    val k = (s, dir, fp)
-    Option(modStatsMemo.get(k)).getOrElse(sharedGraphLock.synchronized {
-      Option(modStatsMemo.get(k)).getOrElse {
-        val name = sharedWeightedCooccurIndex(s, dir)
-        val we = s.table(name + "_edges")
-        val labels = sharedLpaPacked(s, dir)
-          .select(col("node"), col("l4").as("label"))
-        val lw = we
-          .join(labels.select(col("node").as("_s"), col("label").as("cs")),
-            we("src") === col("_s"))
-          .join(labels.select(col("node").as("_d"), col("label").as("cd")),
-            we("dst") === col("_d"))
-          .select(we("w").as("w"), col("cs"), col("cd"))
-          .cache()
-        val tot = lw.groupBy(col("cs").as("label"))
-          .agg(sum(col("w")).as("k")).localCheckpoint(true)
-        // coalesce: an EMPTY graph sums to NULL (the EmptyInputSpec case)
-        val r = lw.agg(coalesce(sum(col("w")), lit(0L)),
-          coalesce(sum(when(col("cs") === col("cd"), col("w"))
-            .otherwise(lit(0L))), lit(0L)))
-          .collect().head
-        lw.unpersist()
-        val v = (tot, r.getLong(0), r.getLong(1))
-        modStatsMemo.keySet.removeIf(e =>
-          (e._1 eq s) && e._2 == dir && e._3 != fp)
-        modStatsMemo.put(k, v)
-        v
-      }
-    })
-  }
+      s: SparkSession, dir: String): (DataFrame, Long, Long) =
+    GateMemo.getOrBuild("modStats", s, dir,
+      Tables.fixtureFingerprint(dir, "lineitem.parquet")) {
+      val name = sharedWeightedCooccurIndex(s, dir)
+      val we = s.table(name + "_edges")
+      val labels = sharedLpaPacked(s, dir)
+        .select(col("node"), col("l4").as("label"))
+      val lw = we
+        .join(labels.select(col("node").as("_s"), col("label").as("cs")),
+          we("src") === col("_s"))
+        .join(labels.select(col("node").as("_d"), col("label").as("cd")),
+          we("dst") === col("_d"))
+        .select(we("w").as("w"), col("cs"), col("cd"))
+        .cache()
+      val tot = lw.groupBy(col("cs").as("label"))
+        .agg(sum(col("w")).as("k")).localCheckpoint(true)
+      // coalesce: an EMPTY graph sums to NULL (the EmptyInputSpec case)
+      val r = lw.agg(coalesce(sum(col("w")), lit(0L)),
+        coalesce(sum(when(col("cs") === col("cd"), col("w"))
+          .otherwise(lit(0L))), lit(0L)))
+        .collect().head
+      lw.unpersist()
+      (tot, r.getLong(0), r.getLong(1))
+    }
 
   /** Incremental Q over the post-delta labelling: `delta` is the
     * canonical (u, v, w) batch, `updated`/`ball` come from
@@ -2065,24 +2017,10 @@ object Graph {
   /** Frozen packed per-round histories for the two distance queries,
     * memoized per fixture (the sharedLpaPacked pattern): unit weights
     * over the persisted purchase index for BFS, the weighted index for
-    * SSSP. */
-  private val distRoundsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String, Long), DataFrame]()
-
+    * SSSP ([[GateMemo]] kinds "bfs" and "sssp"). */
   private def sharedDistPacked(s: SparkSession, dir: String, kind: String,
-      build: => DataFrame): DataFrame = {
-    val fp = graphFp(dir)
-    val k = (s, dir, kind, fp)
-    Option(distRoundsMemo.get(k)).getOrElse(sharedGraphLock.synchronized {
-      Option(distRoundsMemo.get(k)).getOrElse {
-        val v = build.localCheckpoint(true)
-        distRoundsMemo.keySet.removeIf(e =>
-          (e._1 eq s) && e._2 == dir && e._3 == kind && e._4 != fp)
-        distRoundsMemo.put(k, v)
-        v
-      }
-    })
-  }
+      build: => DataFrame): DataFrame =
+    GateMemo.getOrBuild(kind, s, dir, graphFp(dir))(build.localCheckpoint(true))
 
   private[graft] def sharedBfsPacked(s: SparkSession, dir: String): DataFrame =
     sharedDistPacked(s, dir, "bfs", {
@@ -2239,30 +2177,19 @@ object Graph {
       .agg(sum(col("sigma")).as("sigma"))
 
   /** Memoized forward pass shared by g23/g24 (the sharedTriangleCore
-    * pattern, same eviction + lock discipline): both centralities
+    * pattern, [[GateMemo]] kind "centralityAcc"): both centralities
     * consume the SAME (seed, node, dist, σ) surface, and a production
     * deployment would compute the seed-BFS once and serve every
     * centrality off it. acc is a union of per-round localCheckpoints
     * already; one more checkpoint flattens it for the memo. */
-  private val centralityAccMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Long), DataFrame]()
-
   private[graft] def sharedCentralityAcc(s: SparkSession,
-      dir: String): DataFrame = {
-    val fp = Tables.fixtureFingerprint(dir, "lineitem.parquet")
-    val k = (s, dir, fp)
-    Option(centralityAccMemo.get(k)).getOrElse(sharedGraphLock.synchronized {
-      Option(centralityAccMemo.get(k)).getOrElse {
-        val bi = s.table(sharedCooccurIndex(s, dir) + "_edges")
-        val v = msBfsCounts(bi, seedNodes(bi, CentralitySeeds),
-          CentralityRounds).localCheckpoint(true)
-        centralityAccMemo.keySet.removeIf(e =>
-          (e._1 eq s) && e._2 == dir && e._3 != fp)
-        centralityAccMemo.put(k, v)
-        v
-      }
-    })
-  }
+      dir: String): DataFrame =
+    GateMemo.getOrBuild("centralityAcc", s, dir,
+      Tables.fixtureFingerprint(dir, "lineitem.parquet")) {
+      val bi = s.table(sharedCooccurIndex(s, dir) + "_edges")
+      msBfsCounts(bi, seedNodes(bi, CentralitySeeds), CentralityRounds)
+        .localCheckpoint(true)
+    }
 
   /** g23 — HARMONIC CENTRALITY profile over the part co-occurrence
     * graph (Boldi & Vigna 2014, "Axioms for centrality" — the

@@ -15,8 +15,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * conf) — and memoizes the three materialized local-relation results,
   * so the family's wall-clock is ~max(gate) instead of ~sum(gate).
   *
-  * Same retention contract as [[Dedup.minhashClusterLabels]]'s memo:
-  * (session, dir, fixture-fingerprint) key — test sessions and other
+  * Same retention contract as [[Dedup.minhashClusterLabels]]: held in
+  * [[GateMemo]] (kind "streamGates") under a (session, dir,
+  * fixture-fingerprint) key — test sessions and other
   * fixtures never cross-hit, a driver-side mid-round fixture
   * regeneration invalidates, and the retained state is three tiny
   * collected row sets (≤ ~500 rows each by the gates' documented
@@ -27,9 +28,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object StreamGates {
 
   final case class Results(d12: DataFrame, d18: DataFrame, t35: DataFrame)
-
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Long), Results]()
 
   /** Mtime+length fingerprint over BOTH fixture tables the gates read
     * (documents for d12/t35, embeddings for d18) — the driver can
@@ -43,16 +41,8 @@ object StreamGates {
   def d18(s: SparkSession, dir: String): DataFrame = get(s, dir).d18
   def t35(s: SparkSession, dir: String): DataFrame = get(s, dir).t35
 
-  private def get(s: SparkSession, dir: String): Results = {
-    val k = (s, dir, fingerprint(dir))
-    // not computeIfAbsent: the multi-second concurrent build must not
-    // run under the map's bin lock (review finding); a lost publish
-    // race just re-derives the same deterministic rows
-    Option(memo.get(k)).getOrElse {
-      val built = build(s, dir)
-      Option(memo.putIfAbsent(k, built)).getOrElse(built)
-    }
-  }
+  private def get(s: SparkSession, dir: String): Results =
+    GateMemo.getOrBuild("streamGates", s, dir, fingerprint(dir))(build(s, dir))
 
   private def build(s: SparkSession, dir: String): Results = {
       import scala.concurrent.{Await, Future}

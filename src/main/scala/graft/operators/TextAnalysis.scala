@@ -1044,16 +1044,12 @@ object TextAnalysis {
     bm25PivotTop20(perTerm)
   }
 
-  /** Gate-result memo keyed (session, dir, fixture fingerprints) — the
-    * StreamGates/s13 precedent for the text-index gates (t40/t41/t42):
-    * each runs an index build + an inline recomputation + multi-job
-    * equality machinery whose outcome is a deterministic function of
-    * the fixtures; first invocation pays it, replays serve the
-    * collected rows. All three are listed under "amortized" in the
-    * bench JSON. */
-  private def memoGate(s: SparkSession, dir: String, fp: Long, key: String)(
-      build: => DataFrame): DataFrame =
-    GateMemo.cached(s, dir, fp, key)(build)
+  /** Fixture fingerprint for the text-index gates' [[GateMemo.cached]]
+    * keys (t40/t41/t42, the StreamGates/s13 precedent): each runs an
+    * index build + an inline recomputation + multi-job equality
+    * machinery whose outcome is a deterministic function of the
+    * fixtures; first invocation pays it, replays serve the collected
+    * rows. All are listed under "amortized" in the bench JSON. */
   private def docsFp(dir: String): Long =
     Tables.fixtureFingerprint(dir, "documents.parquet")
 
@@ -1066,9 +1062,9 @@ object TextAnalysis {
     * An index whose answers drift from a fresh computation is corrupt —
     * this is what makes the amortized artifact trustworthy. DuckDB
     * anchors the doc count and the literal-true flag. Memoized
-    * ([[memoGate]]). */
+    * ([[GateMemo.cached]]). */
   def t40TextIndexGate(s: SparkSession, dir: String): DataFrame =
-    memoGate(s, dir, docsFp(dir), "t40")(t40Body(s, dir))
+    GateMemo.cached(s, dir, docsFp(dir), "t40")(t40Body(s, dir))
 
   private def t40Body(s: SparkSession, dir: String): DataFrame = {
     // cache: the equality flag references each side twice (exceptAll
@@ -1847,7 +1843,7 @@ object TextAnalysis {
     * counts cover the corpus exactly. Results return as a collected
     * local relation; the index table is dropped before returning. */
   def t41BpeIncrementalGate(s: SparkSession, dir: String): DataFrame =
-    memoGate(s, dir, docsFp(dir), "t41")(t41Body(s, dir))
+    GateMemo.cached(s, dir, docsFp(dir), "t41")(t41Body(s, dir))
 
   private def t41Body(s: SparkSession, dir: String): DataFrame = {
     val name = "graft_t41_bpe"
@@ -1876,7 +1872,7 @@ object TextAnalysis {
     * rows, and the final index trains the same merge table as a full
     * retrain over the whole corpus. */
   def t50BpeIngestGate(s: SparkSession, dir: String): DataFrame =
-    memoGate(s, dir, docsFp(dir), "t50")(t50Body(s, dir))
+    GateMemo.cached(s, dir, docsFp(dir), "t50")(t50Body(s, dir))
 
   private def t50Body(s: SparkSession, dir: String): DataFrame = {
     val name = "graft_t50_bpe"
@@ -2176,7 +2172,7 @@ object TextAnalysis {
     * corpus — the artifact's re-aggregated coverage — and pins the
     * flags at literal TRUE (the t40 pattern). */
   def t48LmIndexGate(s: SparkSession, dir: String): DataFrame =
-    memoGate(s, dir, docsFp(dir), "t48")(t48Body(s, dir))
+    GateMemo.cached(s, dir, docsFp(dir), "t48")(t48Body(s, dir))
 
   private def t48Body(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
@@ -2241,7 +2237,7 @@ object TextAnalysis {
     *  - the final artifact scores ≡ a fresh full-corpus train.
     * DuckDB anchors n_docs + literal-true flags (the s14 pattern). */
   def t49LmIngestGate(s: SparkSession, dir: String): DataFrame =
-    memoGate(s, dir, docsFp(dir), "t49")(t49Body(s, dir))
+    GateMemo.cached(s, dir, docsFp(dir), "t49")(t49Body(s, dir))
 
   private def t49Body(s: SparkSession, dir: String): DataFrame = {
     val name = "graft_t49_lm"
@@ -2487,7 +2483,7 @@ object TextAnalysis {
   def t42HybridIndexedGate(s: SparkSession, dir: String): DataFrame =
     // the fingerprint folds BOTH fixtures: the text leg reads
     // documents, the vector leg embeddings
-    memoGate(s, dir, docsFp(dir) * 31L +
+    GateMemo.cached(s, dir, docsFp(dir) * 31L +
       Tables.fixtureFingerprint(dir, "embeddings.parquet"), "t42")(
       t42Body(s, dir))
 

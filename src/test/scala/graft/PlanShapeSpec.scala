@@ -271,6 +271,8 @@ class PlanShapeSpec extends SparkSpec {
 
   test("no query plans an unbounded global window (single-reducer shape)") {
     import org.apache.spark.sql.execution.{GlobalLimitExec, SparkPlan, TakeOrderedAndProjectExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
     // t11/t14 keep the documented global pack as the small-corpus path;
     // t16/t17 are their sharded production forms. Everything else must
@@ -282,14 +284,24 @@ class PlanShapeSpec extends SparkSpec {
       case _: GlobalLimitExec | _: TakeOrderedAndProjectExec | _: WindowGroupLimitExec => true
       case _ => false
     }
+    // the plan plus every plan behind a query-scoped cache (the t31 pin's
+    // walk): a window staged inside a cache still runs on one reducer
+    def withCached(p: SparkPlan): Seq[SparkPlan] = p +: p.collect {
+      case s: InMemoryTableScanExec => s.relation.cachedPlan
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+    }.flatMap(withCached)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       for ((name, fn) <- SparkEntry.queries if !allow(name)) {
-        val exec = fn(spark, sf).queryExecution.executedPlan
-        val bad = exec.collect {
-          case w: WindowExec if w.partitionSpec.isEmpty && !bounded(w.child) => w
-        }
-        assert(bad.isEmpty, s"$name plans an unbounded global WindowExec:\n$exec")
+        try {
+          val exec = fn(spark, sf).queryExecution.executedPlan
+          val plans = withCached(exec)
+          val bad = plans.flatMap(_.collect {
+            case w: WindowExec if w.partitionSpec.isEmpty && !bounded(w.child) => w
+          })
+          assert(bad.isEmpty,
+            s"$name plans an unbounded global WindowExec:\n${plans.mkString("\n")}")
+        } finally spark.catalog.clearCache()
       }
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }

@@ -68,15 +68,19 @@ class QueriesSmokeSpec extends SparkSpec {
     assert(stale.isEmpty, s"stale amortized markers: $stale")
   }
 
+  private lazy val mainSources: Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+  }
+
   test("only GraftSession builds a SparkSession in src/main") {
     // every main runs on the one factory config; a pasted builder is how
     // probes drifted to other core counts and dropped the extensions
     // (comment lines are skipped — GraftExtensions documents the call)
     import scala.jdk.CollectionConverters._
     val builder = """SparkSession\s*\.\s*builder""".r
-    val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
-      .iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
-    val offenders = sources.filterNot(_.endsWith("graft/GraftSession.scala")).filter { p =>
+    val offenders = mainSources.filterNot(_.endsWith("graft/GraftSession.scala")).filter { p =>
       java.nio.file.Files.readAllLines(p).asScala.exists { line =>
         val t = line.trim
         !t.startsWith("//") && !t.startsWith("*") && !t.startsWith("/*") &&
@@ -85,6 +89,32 @@ class QueriesSmokeSpec extends SparkSpec {
     }
     assert(offenders.isEmpty,
       s"SparkSession.builder outside GraftSession (${offenders.size}): ${offenders.map(_.toString).sorted.mkString(", ")}")
+  }
+
+  test("only GateMemo keeps a SparkSession-keyed map in src/main") {
+    // session-lifetime state goes through GateMemo.getOrBuild: one lock
+    // rule, one eviction rule that frees blocks — hand-rolled copies of
+    // the memo are how twelve maps drifted into three of each
+    val created = """new\s+(?:java\.util\.concurrent\.)?ConcurrentHashMap\s*\[""".r
+    val offenders = mainSources.filterNot(_.endsWith("graft/operators/GateMemo.scala"))
+      .flatMap { p =>
+        val text = java.nio.file.Files.readString(p)
+        created.findAllMatchIn(text).filter { m =>
+          // the key type: the first type argument, up to a top-level , or ]
+          var depth = 0
+          val key = text.iterator.drop(m.end).takeWhile { c =>
+            if (depth == 0 && (c == ',' || c == ']')) false
+            else {
+              if (c == '(' || c == '[') depth += 1
+              if (c == ')' || c == ']') depth -= 1
+              true
+            }
+          }.mkString
+          key.contains("SparkSession")
+        }.map(m => s"$p:${text.take(m.start).count(_ == '\n') + 1}")
+      }
+    assert(offenders.isEmpty,
+      s"SparkSession-keyed map outside GateMemo (${offenders.size}): ${offenders.sorted.mkString(", ")}")
   }
 
   test("entry() returns rows") {

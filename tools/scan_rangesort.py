@@ -41,10 +41,14 @@ for fn in sorted(os.listdir(plan_dir)):
         r"\((\d+)\) Exchange\b[\s\S]{0,400}?rangepartitioning", text))
     if not range_ids:
         continue
-    # parse header tree into (depth, opname, id)
+    # parse header tree into (depth, opname, id); depth is the column of
+    # the tree decoration alone, so a whole-stage-codegen marker
+    # (`+- * HashAggregate (5)`) neither hides the node nor shifts it
+    # below its siblings, and catalog names (`graft_shared_...`) parse
     nodes = []
     for ln in tree:
-        m = re.match(r"^([\s:+-]*)([A-Za-z][A-Za-z0-9. ]*?)\s*\((\d+)\)", ln)
+        m = re.match(
+            r"^([\s:+-]*)(?:\*\s)?([A-Za-z][A-Za-z0-9._ ]*?)\s*\((\d+)\)", ln)
         if m:
             nodes.append((len(m.group(1)), m.group(2).strip(), m.group(3)))
     for i, (d, op, nid) in enumerate(nodes):
