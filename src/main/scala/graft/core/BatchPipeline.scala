@@ -19,8 +19,13 @@ import org.apache.spark.util.LongAccumulator
   *    `tryPutAll` is all-or-nothing (A4, the semantics v1's buggy
   *    chunked put *intended*, per the author's own TODO at
   *    core/DisruptorBatchProcessor.java:184-200).
-  *  - worker sharding (A5): each micro-batch is repartitioned to
-  *    `numWorkers`; a partition task is a "worker".
+  *  - worker sharding (A5): the source is a `MemoryStream` with
+  *    `numWorkers` partitions, which deals each micro-batch's rows
+  *    round-robin by arrival index into exactly `numWorkers` input
+  *    partitions on the driver; partition i is worker i. A micro-batch is
+  *    one Spark job of `numWorkers` tasks with no shuffle, the round-robin
+  *    is exact (core/DisruptorBatchProcessor.java:112-114), and every
+  *    worker sees its items in arrival order.
   *  - size-based cut (A6): partition iterators re-grouped into runs of
   *    ≤ `maxBatchSize` before the sink sees them.
   *  - time-based cut (A7): `Trigger.ProcessingTime(trigger)` — whatever
@@ -83,7 +88,8 @@ final class BatchPipeline[T: Encoder](
     factory: FlusherFactory[T]) {
 
   private implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-  private val source = MemoryStream[T]
+  // A5: the source itself shards (see the class doc)
+  private val source = MemoryStream[T](config.numWorkers)
 
   private val itemsIn = new AtomicLong(0)
   private val pending = new AtomicLong(0)
@@ -138,16 +144,12 @@ final class BatchPipeline[T: Encoder](
       .queryName(cfg.name)
       .trigger(Trigger.ProcessingTime(cfg.trigger.toMillis.millis))
       .foreachBatch { (ds: Dataset[T], _: Long) => batchVsDrainLock.synchronized {
-        // A5: shard the micro-batch across workers. numWorkers=1 must be
-        // ONE sequential task in arrival order (per-worker FIFO, the
-        // reference's ordering contract) — coalesce(1) concatenates the
-        // source blocks in index order without a shuffle. numWorkers>1
-        // round-robins like the reference, which already forfeits global
-        // order (core/DisruptorBatchProcessor.java:112-114).
-        val sharded =
-          if (cfg.numWorkers > 1) ds.repartition(cfg.numWorkers)
-          else ds.coalesce(1)
-        sharded.foreachPartition { (it: Iterator[T]) =>
+        // A5: the source already dealt this micro-batch into numWorkers
+        // partitions, row i of the batch to partition i % numWorkers, so
+        // each partition task is one worker and sees its rows in arrival
+        // order (numWorkers=1: one FIFO task). No repartition: it would
+        // add a shuffle-map job per micro-batch and lose that order.
+        ds.foreachPartition { (it: Iterator[T]) =>
           val workerIndex = org.apache.spark.TaskContext.getPartitionId()
           // A8 deferred carry from this worker's previous micro-batch
           // (empty and lastFlush=now on first touch — a trickle defers a

@@ -22,9 +22,16 @@ object PipelineSpec {
   val inFlight = new AtomicInteger(0)
   val maxInFlight = new AtomicInteger(0)
 
+  /** (micro-batch id, worker, item) per delivered item, in sink-call order. */
+  val sharded = new ConcurrentLinkedQueue[(Long, Int, String)]()
+  /** Items of batches the seeded sink fails on every attempt. */
+  val failedItems = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  val failedBatches = new AtomicInteger(0)
+
   def reset(): Unit = {
     delivered.clear(); batchSizes.clear(); attempts.set(0)
     opened.set(0); closed.set(0); inFlight.set(0); maxInFlight.set(0)
+    sharded.clear(); failedItems.clear(); failedBatches.set(0)
   }
 
   class RecordingFlusher(failFirst: Int = 0, sleepMs: Long = 0) extends Flusher[String] {
@@ -41,6 +48,62 @@ object PipelineSpec {
       } finally inFlight.decrementAndGet()
     }
   }
+
+  class ShardRecordingFlusher extends Flusher[String] {
+    override def flush(batch: Seq[String], ctx: FlushContext): Unit = {
+      // the micro-batch id Spark's streaming engine sets on its jobs
+      val mb = org.apache.spark.TaskContext.get().getLocalProperty("streaming.sql.batchId").toLong
+      batch.foreach(i => sharded.add((mb, ctx.workerIndex, i)))
+    }
+  }
+
+  /** Fails every attempt at a seeded quarter of the batches (keyed by the
+    * batch's first item, so a batch fails the same way on each retry). */
+  class SeededFailFlusher(seed: Int) extends Flusher[String] {
+    override def flush(batch: Seq[String], ctx: FlushContext): Unit = {
+      if (Math.floorMod(scala.util.hashing.MurmurHash3.stringHash(batch.head, seed), 4) == 0) {
+        if (ctx.retryCount == 0) failedBatches.incrementAndGet()
+        batch.foreach(failedItems.add)
+        throw new RuntimeException("seeded permanent failure")
+      }
+      batch.foreach(delivered.add)
+    }
+  }
+
+  /** Counts the jobs, the stages that ran and the shuffle bytes they
+    * wrote for one streaming query, from listener events. */
+  final class StreamJobRecorder(queryId: String) extends org.apache.spark.scheduler.SparkListener {
+    import org.apache.spark.scheduler._
+    val jobs = new AtomicInteger(0)
+    val stagesRun = new AtomicInteger(0)
+    val shuffleBytes = new AtomicLong(0)
+    private val stageIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    @volatile private var barrierSeen = false
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      val prop = (k: String) => Option(e.properties).map(_.getProperty(k)).orNull
+      if (prop("sql.streaming.queryId") == queryId) {
+        jobs.incrementAndGet(); e.stageIds.foreach(stageIds.add)
+      } else if (prop("spark.jobGroup.id") == "pipeline-spec-barrier") barrierSeen = true
+    }
+    // skipped stages never complete, so this counts the stages that ran
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      if (stageIds.contains(e.stageInfo.stageId)) {
+        stagesRun.incrementAndGet()
+        shuffleBytes.addAndGet(e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+      }
+
+    /** Returns once the listener has seen every event posted before the
+      * call: a marker job's start is delivered after all of them. */
+    def barrier(spark: org.apache.spark.sql.SparkSession): Unit = {
+      val sc = spark.sparkContext
+      sc.setJobGroup("pipeline-spec-barrier", "listener barrier")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 10000
+      while (!barrierSeen && System.currentTimeMillis() < deadline) Thread.sleep(10)
+      assert(barrierSeen, "listener bus did not deliver the barrier job within 10 s")
+    }
+  }
 }
 
 class PipelineSpec extends SparkSpec {
@@ -49,11 +112,13 @@ class PipelineSpec extends SparkSpec {
   private var n = 0
   private def freshName(): String = { n += 1; s"pipe-spec-$n" }
 
-  private def pipeline(cfg: PipelineConfig, failFirst: Int = 0, sleepMs: Long = 0) = {
+  private def pipeline(cfg: PipelineConfig, failFirst: Int = 0, sleepMs: Long = 0) =
+    pipelineWith(cfg, () => new RecordingFlusher(failFirst, sleepMs))
+
+  private def pipelineWith(cfg: PipelineConfig, sink: () => Flusher[String]) = {
     import spark.implicits._
     reset()
-    BatchPipeline[String](spark, cfg,
-      FlusherFactory(() => new RecordingFlusher(failFirst, sleepMs)))
+    BatchPipeline[String](spark, cfg, FlusherFactory(sink))
   }
 
   test("completeness: every item delivered exactly once, batches bounded (ref test #1)") {
@@ -211,6 +276,81 @@ class PipelineSpec extends SparkSpec {
     p.flush()
     p.stop()
     assert(delivered.asScala.toList == items.toList)
+  }
+
+  test("A5 sharding: rows dealt round-robin in arrival order, per-worker FIFO") {
+    val cfg = PipelineConfig(name = freshName(), numWorkers = 4, maxConcurrency = 4,
+      maxBatchSize = 64, flushInterval = 100.millis, triggerInterval = Some(20.millis))
+    val p = pipelineWith(cfg, () => new ShardRecordingFlusher).start()
+    // one producer: arrival order is id order. Single puts make many
+    // source blocks per micro-batch; a flush() between rounds makes
+    // several micro-batches.
+    val rounds = (0 until 4).map(r => (1 to 500).map(i => f"s${r * 500 + i}%05d"))
+    rounds.foreach { items => items.foreach(p.put); p.flush() }
+    p.stop()
+    val recs = sharded.asScala.toList
+    assert(recs.map(_._3).sorted == rounds.flatten.toList) // exactly once
+    recs.groupBy(_._2).foreach { case (w, rs) =>
+      val ids = rs.map(_._3)
+      assert(ids == ids.sorted, s"worker $w saw its items out of arrival order")
+    }
+    val byBatch = recs.groupBy(_._1)
+    assert(byBatch.size >= rounds.size)
+    byBatch.foreach { case (mb, rs) =>
+      val counts = (0 until 4).map(w => rs.count(_._2 == w))
+      assert(counts.max - counts.min <= 1, s"micro-batch $mb: per-worker counts $counts")
+      // the k-th row to arrive in a micro-batch goes to worker k % 4
+      rs.sortBy(_._3).zipWithIndex.foreach { case ((_, w, id), k) =>
+        assert(w == k % 4, s"micro-batch $mb: $id (row $k) went to worker $w")
+      }
+    }
+    val st = p.stat()
+    assert(st.itemsFlushed == 2000 && st.perWorkerItemsFlushed.values.sum == st.itemsFlushed)
+    assert(st.perWorkerItemsFlushed == recs.groupBy(_._2).map { case (w, rs) => w -> rs.size.toLong })
+  }
+
+  test("A5 a numWorkers=4 micro-batch is one job of one stage and writes no shuffle") {
+    val cfg = PipelineConfig(name = freshName(), numWorkers = 4, maxBatchSize = 1024,
+      flushInterval = 100.millis)
+    val p = pipeline(cfg).start()
+    val rec = new StreamJobRecorder(spark.streams.active.find(_.name == cfg.name).get.id.toString)
+    spark.sparkContext.addSparkListener(rec)
+    try {
+      p.putAll((1 to 1000).map(i => s"n$i")) // one source block: one micro-batch
+      p.flush()
+      rec.barrier(spark)
+    } finally spark.sparkContext.removeSparkListener(rec)
+    p.stop()
+    assert(delivered.size == 1000)
+    assert(rec.jobs.get() == 1, s"${rec.jobs.get()} jobs for one micro-batch")
+    assert(rec.stagesRun.get() == 1, s"${rec.stagesRun.get()} stages for one micro-batch")
+    assert(rec.shuffleBytes.get() == 0, s"micro-batch wrote ${rec.shuffleBytes.get()} shuffle bytes")
+  }
+
+  test("ledger under drops: itemsIn == itemsFlushed + itemsDropped + pending after every flush") {
+    val cfg = PipelineConfig(name = freshName(), numWorkers = 4, maxBatchSize = 50,
+      maxRetryCount = 2, retryDelay = 1.millis, flushInterval = 100.millis,
+      triggerInterval = Some(20.millis))
+    val p = pipelineWith(cfg, () => new SeededFailFlusher(seed = 17)).start()
+    val all = (1 to 6).flatMap { r =>
+      val items = (1 to 500).map(i => s"l$r-$i")
+      p.putAll(items)
+      p.flush()
+      val st = p.stat()
+      assert(st.itemsIn == st.itemsFlushed + st.itemsDropped + st.pending,
+        s"round $r: ledger broken: $st")
+      assert(st.pending == 0)
+      items
+    }
+    p.stop()
+    val st = p.stat()
+    assert(st.itemsDropped > 0 && st.itemsFlushed > 0, s"seeded failures did not split: $st")
+    // every failing batch used its whole retry budget, then was dropped
+    assert(st.retries == cfg.maxRetryCount.toLong * failedBatches.get())
+    val ok = delivered.asScala.toSet
+    assert(ok.size == delivered.size && ok.size == st.itemsFlushed) // no duplicates
+    assert(failedItems.size == st.itemsDropped)
+    assert(ok.intersect(failedItems.asScala).isEmpty && ok ++ failedItems.asScala == all.toSet)
   }
 
   private def awaitDelivered(n: Int, timeoutMs: Long = 10000): Unit = {

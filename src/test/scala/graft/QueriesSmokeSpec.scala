@@ -74,6 +74,19 @@ class QueriesSmokeSpec extends SparkSpec {
       .iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
   }
 
+  test("Verify's status record: per-query ok/failed and seconds, escaped errors") {
+    val json = Verify.statusJson(Seq(
+      ("q_ok", 1.25, None),
+      ("q_bad", 0.5, Some("java.lang.RuntimeException: \"x\"\n\ty"))))
+    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    assert(root.get("ok").asInt == 1 && root.get("failed").asInt == 1)
+    val qs = root.get("queries")
+    assert(qs.get("q_ok").get("status").asText == "ok")
+    assert(qs.get("q_ok").get("seconds").asDouble == 1.25 && !qs.get("q_ok").has("error"))
+    assert(qs.get("q_bad").get("status").asText == "failed")
+    assert(qs.get("q_bad").get("error").asText == "java.lang.RuntimeException: \"x\"\n\ty")
+  }
+
   test("only GraftSession builds a SparkSession in src/main") {
     // every main runs on the one factory config; a pasted builder is how
     // probes drifted to other core counts and dropped the extensions
