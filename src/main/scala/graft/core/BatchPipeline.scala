@@ -1,11 +1,10 @@
 package graft.core
 
-import java.util.concurrent.atomic.AtomicLong
-
-import scala.concurrent.duration._
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
+import org.apache.spark.sql.execution.streaming.runtime.{LongOffset, MemoryStream}
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 import org.apache.spark.util.LongAccumulator
 
@@ -26,14 +25,22 @@ import org.apache.spark.util.LongAccumulator
   *    one Spark job of `numWorkers` tasks with no shuffle, the round-robin
   *    is exact (core/DisruptorBatchProcessor.java:112-114), and every
   *    worker sees its items in arrival order.
-  *  - size-based cut (A6): partition iterators re-grouped into runs of
-  *    ≤ `maxBatchSize` before the sink sees them.
-  *  - time-based cut (A7): `Trigger.ProcessingTime(trigger)` — whatever
-  *    arrived in the interval flushes, exactly the reference's forced
-  *    time-flush.
+  *  - size-based cut (A6) and time-based cut (A7), at the source: the
+  *    source is a gated `MemoryStream` ([[BatchPipeline.GatedSource]])
+  *    that admits the rows held past the last micro-batch as soon as
+  *    `min(numWorkers × maxBatchSize, maxPendingRows)` of them have
+  *    built up (every worker has a full batch waiting, or the buffer is
+  *    full), or `trigger` has passed since the last cut — the reference's
+  *    `size >= batchSize || elapsed >= batchTime` (core/
+  *    InnerEventHandler.java:56,58). Until then it holds them, and the
+  *    poll builds no micro-batch and launches no job. The query runs
+  *    `Trigger.ProcessingTime(0)`, so Spark polls the gate every
+  *    `spark.sql.streaming.pollingDelay` (10 ms). Inside a micro-batch
+  *    each worker's rows are re-grouped into runs of ≤ `maxBatchSize`
+  *    before the sink sees them.
   *  - min-batch gate (A8): two modes. Default — a trailing run below
   *    `minBatchSize` merges into its predecessor within the micro-batch
-  *    and everything flushes each trigger (the interval arm of v1's
+  *    and everything flushes each micro-batch (the interval arm of v1's
   *    predicate holds by construction when trigger == flushInterval).
   *    With `deferSmallBatches=true`, the LITERAL v1 gate
   *    (core/InnerEventHandler.java:54-58): the trailing small run is
@@ -70,6 +77,10 @@ import org.apache.spark.util.LongAccumulator
   *  - flush (A10): `flush()` = `processAllAvailable`, a strictly
   *    stronger barrier than the reference's in-band flush event
   *    (SURVEY.md §7.4.5).
+  *  - `flush()` and graceful `stop()` open the gate while they wait, so
+  *    they also deliver the rows it is holding below both cuts;
+  *    `stop(false)` discards held rows along with every other
+  *    unprocessed one.
   *  - stats (A18): accumulator-backed [[PipelineStats]].
   *
   * Error isolation (A20): a flush failure never kills the query — the
@@ -87,9 +98,8 @@ final class BatchPipeline[T: Encoder](
     val config: PipelineConfig,
     factory: FlusherFactory[T]) {
 
-  private implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-  // A5: the source itself shards (see the class doc)
-  private val source = MemoryStream[T](config.numWorkers)
+  // A5-A7: the source shards and cuts (see the class doc)
+  private val source = new BatchPipeline.GatedSource[T](spark, config)
 
   private val itemsIn = new AtomicLong(0)
   private val pending = new AtomicLong(0)
@@ -142,7 +152,8 @@ final class BatchPipeline[T: Encoder](
     query = source.toDS()
       .writeStream
       .queryName(cfg.name)
-      .trigger(Trigger.ProcessingTime(cfg.trigger.toMillis.millis))
+      // A6/A7: the gate decides when a micro-batch is due; Spark polls it
+      .trigger(Trigger.ProcessingTime(0L))
       .foreachBatch { (ds: Dataset[T], _: Long) => batchVsDrainLock.synchronized {
         // A5: the source already dealt this micro-batch into numWorkers
         // partitions, row i of the batch to partition i % numWorkers, so
@@ -303,7 +314,9 @@ final class BatchPipeline[T: Encoder](
     * its in-band flush. */
   def flush(): Unit = {
     require(state == "STARTED", s"not started: $state")
-    query.processAllAvailable()
+    // processAllAvailable returns at the first poll that builds no batch;
+    // with the gate open that means nothing is held either
+    BatchPipeline.raised(source.draining)(query.processAllAvailable())
     if (config.deferSmallBatches) drainCarries(overdueOnly = false)
     pendingLock.synchronized {
       pending.set(0)
@@ -319,7 +332,7 @@ final class BatchPipeline[T: Encoder](
     if (state == "STARTED") {
       state = "STOPPED" // reject new puts first, like the CAS in v1 stop()
       pendingLock.synchronized { pendingLock.notifyAll() }
-      if (waitForCompletion) query.processAllAvailable()
+      if (waitForCompletion) BatchPipeline.raised(source.draining)(query.processAllAvailable())
       if (watchdog != null) {
         // graceful: an in-progress watchdog drain has already taken items
         // from the registry — interrupting it mid-flush would lose them
@@ -347,7 +360,9 @@ final class BatchPipeline[T: Encoder](
     pendingLock.synchronized {
       while (pending.get() + n > config.maxPendingRows) {
         if (!block) return false
-        pendingLock.wait(50)
+        // a waiting producer makes a cut due: the rows the gate holds may
+        // be what fills the buffer
+        BatchPipeline.raised(source.waiting)(pendingLock.wait(50))
         // re-check liveness: stop() wakes us; without this a producer
         // blocked on capacity during shutdown waits forever (or worse,
         // adds to a stream nothing will read and reports success)
@@ -589,6 +604,45 @@ object BatchPipeline {
         cur
       }
     }
+
+  /** Runs `body` with `flag` raised. */
+  private def raised[A](flag: AtomicInteger)(body: => A): A = {
+    flag.incrementAndGet()
+    try body finally flag.decrementAndGet()
+  }
+
+  private val gatedIds = new AtomicInteger(0)
+
+  /** A6/A7: a `MemoryStream` with `numWorkers` partitions whose
+    * `latestOffset` holds the rows past `start` until a cut is due, then
+    * admits all of them. A cut is due when the held rows reach
+    * `min(numWorkers × maxBatchSize, maxPendingRows)` or a producer
+    * waits on capacity (size), when `trigger` has passed since the last
+    * cut (time), or while `flush()`/`stop()` drains. Ids count down from
+    * -1: `MemoryStream.apply` counts up from 0, and streams compare equal
+    * by (id, session, partitions). */
+  private[core] final class GatedSource[T: Encoder](spark: SparkSession, cfg: PipelineConfig)
+      extends MemoryStream[T](gatedIds.decrementAndGet(), spark, Some(cfg.numWorkers)) {
+    private val sizeCut = math.min(cfg.numWorkers.toLong * cfg.maxBatchSize, cfg.maxPendingRows)
+    private val timeCutNs = cfg.trigger.toNanos
+    private var lastCutNs = System.nanoTime()
+    /** Producers waiting on capacity; flush()/stop() barriers in progress. */
+    val waiting, draining = new AtomicInteger(0)
+
+    override def latestOffset(start: Offset, limit: ReadLimit): Offset = synchronized {
+      val from = start.asInstanceOf[LongOffset].offset
+      // `batches` holds one block per offset past the last commit
+      val held = batches.iterator.drop((from - lastOffsetCommitted.offset).toInt)
+        .map(_.length.toLong).sum
+      val now = System.nanoTime()
+      if (held > 0 && (held >= sizeCut || waiting.get() > 0 ||
+          now - lastCutNs >= timeCutNs || draining.get() > 0)) {
+        lastCutNs = now
+        currentOffset
+      } else if (from < 0) null // nothing admitted yet: no offset
+      else start
+    }
+  }
 
   def apply[T: Encoder](spark: SparkSession, config: PipelineConfig,
       factory: FlusherFactory[T]): BatchPipeline[T] =

@@ -24,14 +24,18 @@ import scala.concurrent.duration._
   *    (size >= minBatchSize || elapsed >= forceFlushInterval)` predicate,
   *    with the micro-batch boundary playing endOfBatch. Off by default:
   *    the default path merges small trailing runs within the micro-batch
-  *    and flushes everything each trigger (flush-everything is the safer
+  *    and flushes everything each micro-batch (flush-everything is the safer
   *    default; deferral trades latency for batch efficiency exactly as
   *    v1's knob does).
-  *  - `triggerInterval`   — micro-batch cadence when it should beat
-  *    `flushInterval` (deferral is only observable when batch boundaries
-  *    arrive faster than the force-flush interval, mirroring v1 where
-  *    endOfBatch fires far more often than forceFlushInterval). Defaults
-  *    to `flushInterval`.
+  *  - `triggerInterval`   — the time arm of the source's cut: the
+  *    longest a micro-batch waits after the previous one's cut when its
+  *    rows stay below the size threshold (`numWorkers × maxBatchSize`,
+  *    at most `maxPendingRows`), which cuts at once. Not a fixed
+  *    cadence: a full micro-batch does not wait for it. Set it below
+  *    `flushInterval` when deferral should be observable (batch
+  *    boundaries must come faster than the force-flush interval,
+  *    mirroring v1 where endOfBatch fires far more often than
+  *    forceFlushInterval). Defaults to `flushInterval`.
   *
   * Rates ≤ 0 mean unlimited.
   */
@@ -56,7 +60,8 @@ final case class PipelineConfig(
   require(triggerInterval.forall(_ <= flushInterval),
     "triggerInterval must not exceed flushInterval")
 
-  /** Micro-batch trigger cadence (defaults to the force-flush interval). */
+  /** The time arm: the longest wait for a cut below the size threshold
+    * (defaults to the force-flush interval). */
   def trigger: FiniteDuration = triggerInterval.getOrElse(flushInterval)
 }
 

@@ -70,9 +70,11 @@ object PipelineSpec {
     }
   }
 
-  /** Counts the jobs, the stages that ran and the shuffle bytes they
-    * wrote for one streaming query, from listener events. */
-  final class StreamJobRecorder(queryId: String) extends org.apache.spark.scheduler.SparkListener {
+  /** Counts the jobs submitted from `since` (epoch ms), the stages that
+    * ran and the shuffle bytes they wrote for one streaming query, from
+    * listener events. */
+  final class StreamJobRecorder(queryId: String, since: Long = 0L)
+      extends org.apache.spark.scheduler.SparkListener {
     import org.apache.spark.scheduler._
     val jobs = new AtomicInteger(0)
     val stagesRun = new AtomicInteger(0)
@@ -82,7 +84,7 @@ object PipelineSpec {
 
     override def onJobStart(e: SparkListenerJobStart): Unit = {
       val prop = (k: String) => Option(e.properties).map(_.getProperty(k)).orNull
-      if (prop("sql.streaming.queryId") == queryId) {
+      if (prop("sql.streaming.queryId") == queryId && e.time >= since) {
         jobs.incrementAndGet(); e.stageIds.foreach(stageIds.add)
       } else if (prop("spark.jobGroup.id") == "pipeline-spec-barrier") barrierSeen = true
     }
@@ -353,10 +355,107 @@ class PipelineSpec extends SparkSpec {
     assert(ok.intersect(failedItems.asScala).isEmpty && ok ++ failedItems.asScala == all.toSet)
   }
 
+
   private def awaitDelivered(n: Int, timeoutMs: Long = 10000): Unit = {
     val deadline = System.currentTimeMillis() + timeoutMs
     while (delivered.size < n && System.currentTimeMillis() < deadline) Thread.sleep(25)
     assert(delivered.size >= n, s"only ${delivered.size}/$n delivered in ${timeoutMs}ms")
+  }
+
+  // ---- A6/A7 the source's gate: cut on size or time, hold otherwise ----
+  // A 10-minute flushInterval turns the time arm off for a test's length.
+
+  test("A6 size arm: numWorkers × maxBatchSize held rows cut a micro-batch, no flush()") {
+    val cfg = PipelineConfig(name = freshName(), numWorkers = 2, maxBatchSize = 50,
+      flushInterval = 10.minutes)
+    val p = pipeline(cfg).start()
+    val items = (1 to 100).map(i => s"z$i")
+    items.init.foreach(p.put)
+    Thread.sleep(500)
+    assert(delivered.isEmpty, s"${delivered.size} rows cut below the size threshold")
+    p.put(items.last) // the 100th row fills both workers' batches
+    awaitDelivered(items.size, timeoutMs = 5000)
+    assert(delivered.asScala.toSet == items.toSet && delivered.size == items.size)
+    assert(batchSizes.asScala.toList == List(50, 50))
+    p.stop()
+  }
+
+  test("A7 time arm: rows below the size threshold are cut once flushInterval passes") {
+    val cfg = PipelineConfig(name = freshName(), numWorkers = 2, maxBatchSize = 50,
+      flushInterval = 300.millis)
+    val p = pipeline(cfg).start()
+    p.put("a"); p.put("b"); p.put("c")
+    awaitDelivered(3, timeoutMs = 300 + 2000)
+    assert(delivered.asScala.toSet == Set("a", "b", "c"))
+    p.stop()
+  }
+
+  test("A10 barrier: flush() delivers the rows the gate holds; the ledger balances") {
+    val cfg = PipelineConfig(name = freshName(), numWorkers = 2, maxBatchSize = 50,
+      flushInterval = 10.minutes)
+    val p = pipeline(cfg).start()
+    val items = (1 to 30).map(i => s"h$i")
+    p.putAll(items)
+    Thread.sleep(300)
+    assert(delivered.isEmpty, "the gate cut 30 rows with both arms off")
+    p.flush()
+    assert(delivered.asScala.toSet == items.toSet && delivered.size == items.size)
+    val st = p.stat()
+    assert(st.itemsIn == st.itemsFlushed + st.itemsDropped + st.pending, s"ledger broken: $st")
+    assert(st.itemsFlushed == 30 && st.pending == 0)
+    p.put("tail")
+    p.stop() // graceful stop opens the gate too
+    assert(delivered.asScala.toSet == items.toSet + "tail")
+  }
+
+  test("A6 clamp: below numWorkers × maxBatchSize, maxPendingRows held rows cut") {
+    // capacity 20 < 2 × 50: the size arm at 100 rows could never fire, so
+    // a producer blocked on capacity would wait for the 10-minute arm
+    val cfg = PipelineConfig(name = freshName(), numWorkers = 2, maxBatchSize = 50,
+      maxPendingRows = 20, flushInterval = 10.minutes)
+    val p = pipeline(cfg).start()
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val items = (1 to 60).map(i => s"c$i")
+    val producer = Future(items.foreach(p.put)) // blocks at the 21st and 41st
+    Await.result(producer, 10.seconds)
+    awaitDelivered(items.size, timeoutMs = 5000)
+    assert(delivered.asScala.toSet == items.toSet)
+    p.stop()
+  }
+
+  test("A6 a producer waiting on capacity makes a cut due below the size threshold") {
+    // chunks of 15 against capacity 20: the second chunk waits while 15
+    // rows are held, under both min(2 × 15, 20) and the 10-minute arm
+    val cfg = PipelineConfig(name = freshName(), numWorkers = 2, maxBatchSize = 15,
+      maxPendingRows = 20, flushInterval = 10.minutes)
+    val p = pipeline(cfg).start()
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val items = (1 to 30).map(i => s"w$i")
+    Await.result(Future(p.putAll(items)), 10.seconds)
+    awaitDelivered(15, timeoutMs = 5000)
+    p.flush()
+    assert(delivered.asScala.toSet == items.toSet && delivered.size == items.size)
+    p.stop()
+  }
+
+  test("A7 polling the gate adds no micro-batches: an idle second launches no job") {
+    val cfg = PipelineConfig(name = freshName(), numWorkers = 2, maxBatchSize = 50,
+      flushInterval = 100.millis)
+    val p = pipeline(cfg).start()
+    p.putAll((1 to 10).map(i => s"i$i"))
+    p.flush()
+    val since = System.currentTimeMillis()
+    val rec = new StreamJobRecorder(spark.streams.active.find(_.name == cfg.name).get.id.toString, since)
+    spark.sparkContext.addSparkListener(rec)
+    try {
+      Thread.sleep(1000) // ~100 polls at the 10 ms polling delay
+      rec.barrier(spark)
+    } finally spark.sparkContext.removeSparkListener(rec)
+    p.stop()
+    assert(delivered.size == 10)
+    assert(rec.jobs.get() == 0, s"${rec.jobs.get()} jobs while the pipeline was idle")
   }
 
   test("A8 literal gate: sub-min runs defer across micro-batches until minBatchSize reached") {
