@@ -34,7 +34,7 @@ object Tables {
     * vectorized reader, so it must be read as a raw long. Setting this
     * inside `events()` would be a hidden global side effect (it changes
     * nanos handling for every later parquet read in the session) — all
-    * graft builders (Verify/Bench/Plans/ScaleSmoke and the test harness)
+    * graft builders (GraftSession for every main, and the test harness)
     * pass it explicitly instead. */
   val nanosFlag = "spark.sql.legacy.parquet.nanosAsLong"
 

@@ -47,8 +47,8 @@ object AsofJoin {
     *   (key, bucket). Extra cost: one narrow shuffle of the tiny bucket
     *   table + an equi-join that reuses the main side's (key, bucket)
     *   partitioning. Result rows are identical to the unbucketed form
-    *   (AsofJoinSpec proves it; ScaleSmoke `a100` demonstrates the skew
-    *   win on a 1M-row hot key). Pick a width that yields 100–10k buckets
+    *   (AsofJoinSpec proves it; SCALE.md item 10 records the skew win
+    *   on a 1M-row hot key). Pick a width that yields 100–10k buckets
     *   over the hot key's time span. */
   def asofJoin(
       left: DataFrame, leftTs: String, leftKey: String,

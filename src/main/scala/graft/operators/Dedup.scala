@@ -316,8 +316,8 @@ object Dedup {
   /** Parametrized core of [[d09EmbedNearDupIvf]] — `nCells` is the scale
     * knob and must GROW with the corpus (cells stay constant-size; fixed
     * cells would make per-cell pair counts quadratic again). Input needs
-    * (vec_id, emb: array<double>, nrm). ScaleSmoke's e100 mode drives
-    * this at 200k vectors / 1024 cells / probe 2. */
+    * (vec_id, emb: array<double>, nrm). SCALE.md item 4 records it at
+    * 200k vectors / 1024 cells / probe 2; `Dev scale` times d09. */
   private[graft] def ivfNearDupPairs(
       e: DataFrame, nCells: Int, nProbe: Int, threshold: Double): DataFrame =
     ivfCandidateVecs(e, nCells, nProbe)
@@ -370,7 +370,7 @@ object Dedup {
     * diameters to ~1M hops, and each round on an already-converged
     * input exits immediately — raising the cap costs nothing when
     * components are shallow (the common case), while a low cap silently
-    * mislabels wide chains (ScaleSmoke's d100 mode measures this). */
+    * mislabels wide chains (SCALE.md item 3 records a 200k-hop chain). */
   private[graft] def clusterLabelsWithRounds(
       pairs: DataFrame, maxIters: Int): (DataFrame, Int, Boolean) = {
     // undirected edge list; only docs that appear in some pair enter the
@@ -1191,7 +1191,7 @@ object Dedup {
     // — so processing the whole SF's corpus through the state store
     // would buy bench seconds, not assurance (the oracle is unchanged by
     // this bound; scale behavior of the operator itself is the streaming
-    // family's ScaleSmoke/spec territory)
+    // family's spec and SCALE.md territory)
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"), col("text"))
       .filter(col("doc_id") < 500 && size(tokens(col("text"))) >= 3)

@@ -2548,7 +2548,7 @@ object Graph {
     * every SF, so the bound yields non-empty bootstrap/batch splits
     * everywhere while keeping the streamed batches driver-bounded (the
     * d12 corpus-bound precedent: the gate proves the COMPOSITION, not
-    * scale — ScaleSmoke territory). */
+    * scale — SCALE.md territory). */
   private val IngestBound = 4096L
 
   /** Driver gate for the STREAMING edge-index ingest composition (the

@@ -1606,7 +1606,7 @@ object Similarity {
     * at every SF, so the bound yields non-empty bootstrap/batch splits
     * everywhere while keeping the streamed batches driver-bounded (the
     * g13 IngestBound precedent: the gate proves the COMPOSITION, not
-    * scale — ScaleSmoke territory). */
+    * scale — SCALE.md territory). */
   private val S14Bound = 4096L
 
   /** Driver gate for the STREAMING ANN-index ingest composition

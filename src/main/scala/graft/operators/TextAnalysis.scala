@@ -1115,7 +1115,7 @@ object TextAnalysis {
     * the shard key should be `xxhash64(doc_id) % shards` rather than the
     * bare modulo used here (kept SQL-expressible for the oracle): a bare
     * modulo unbalances under patterned ids (e.g. ids striding a multiple
-    * of the shard count — ScaleSmoke t100 demonstrates the alias). */
+    * of the shard count — SCALE.md item 7 records the alias). */
   def t16SeqPackSharded(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("shard")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, -1)

@@ -74,6 +74,16 @@ class QueriesSmokeSpec extends SparkSpec {
       .iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
   }
 
+  /** Whether a line of `p` outside a comment matches `re`. */
+  private def codeMatches(p: java.nio.file.Path, re: scala.util.matching.Regex): Boolean = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.readAllLines(p).asScala.exists { line =>
+      val t = line.trim
+      !t.startsWith("//") && !t.startsWith("*") && !t.startsWith("/*") &&
+        re.findFirstIn(line).isDefined
+    }
+  }
+
   test("Verify's status record: per-query ok/failed and seconds, escaped errors") {
     val json = Verify.statusJson(Seq(
       ("q_ok", 1.25, None),
@@ -91,17 +101,23 @@ class QueriesSmokeSpec extends SparkSpec {
     // every main runs on the one factory config; a pasted builder is how
     // probes drifted to other core counts and dropped the extensions
     // (comment lines are skipped — GraftExtensions documents the call)
-    import scala.jdk.CollectionConverters._
     val builder = """SparkSession\s*\.\s*builder""".r
-    val offenders = mainSources.filterNot(_.endsWith("graft/GraftSession.scala")).filter { p =>
-      java.nio.file.Files.readAllLines(p).asScala.exists { line =>
-        val t = line.trim
-        !t.startsWith("//") && !t.startsWith("*") && !t.startsWith("/*") &&
-          builder.findFirstIn(line).isDefined
-      }
-    }
+    val offenders = mainSources.filterNot(_.endsWith("graft/GraftSession.scala"))
+      .filter(codeMatches(_, builder))
     assert(offenders.isEmpty,
       s"SparkSession.builder outside GraftSession (${offenders.size}): ${offenders.map(_.toString).sorted.mkString(", ")}")
+  }
+
+  test("only the contract and dev mains define def main in src/main") {
+    // one harness per job: Bench/Verify/EntryProbe (driver contract),
+    // Dev (probes and scale runs), Plans, PipelineBench — a new main is
+    // how thirty bespoke scale smokes, each with its own timer, grew
+    val allowed = Set("Bench", "Verify", "Dev", "Plans", "PipelineBench", "EntryProbe")
+    val main = """\bdef\s+main\s*\(""".r
+    val offenders = mainSources.filter(codeMatches(_, main))
+      .map(_.getFileName.toString.stripSuffix(".scala")).filterNot(allowed)
+    assert(offenders.isEmpty,
+      s"def main outside the allowed objects (${offenders.size}): ${offenders.sorted.mkString(", ")}")
   }
 
   test("only GateMemo keeps a SparkSession-keyed map in src/main") {
