@@ -15,15 +15,19 @@ import org.apache.spark.sql.functions.{broadcast, col, max}
   *       — `explain("formatted")` into `<outDir>/<q>_<suffix>.txt`, the
   *         input format of tools/scan_rangesort.py
   *   runMain graft.Dev scale <factor> <outDir> <q...>
-  *       — write every fixture table ×factor into `<outDir>` ([[amplify]]),
-  *         then time each query on the base dir and on `<outDir>`:
+  *       — write every fixture table ×factor into `<outDir>` ([[amplify]])
+  *         and ×1 into `<outDir>_warm`, then run each query once on the
+  *         ×1 copy and time it on the base dir and on `<outDir>`:
   *         `SCALE <q> <base s> <scaled s> <ratio>` lines, and
   *         SCALE_LATEST.json in the working directory
   *
   * All queries run in ONE JVM, in argument order. The first one soaks
   * JVM/codegen warm-up, so `time q01 qX qX` reads qX's later sample, and
   * `time q01 qA qB qA qB` interleaves an A/B of two registered queries.
-  * `scale` runs its own warm-up (the first query, on the base dir).
+  * `scale` warms each query on its ×1 copy, so first-of-family cost
+  * (class loading, codegen) lands on neither timed side; the copy has its
+  * own fingerprints and memo keys, so memoized and persisted builds still
+  * land on both.
   * `plan` dumps the pre-execution plan with AQE on (the benched config).
   * An unknown query exits 2, a failed one exits 1.
   */
@@ -80,13 +84,15 @@ object Dev {
   private def scale(sfDir: String, factor: Int, outDir: String)(
       spark: SparkSession, names: List[String]): Boolean = {
     amplify(spark, sfDir, outDir, factor)
-    names.headOption.foreach(Bench.execute(spark, sfDir, _)) // warm-up
+    val warmDir = outDir.stripSuffix("/") + "_warm"
+    amplify(spark, sfDir, warmDir, 1)
     val runs = names.map { n =>
+      Bench.execute(spark, warmDir, n)
       val (base, scaled) = (Bench.execute(spark, sfDir, n), Bench.execute(spark, outDir, n))
       if (base >= 0 && scaled >= 0) println(f"SCALE $n $base%.2f $scaled%.2f ${scaled / base}%.2f")
       (n, base, scaled)
     }
-    // a list, not a map: a query named twice (its warm pair) keeps both runs
+    // a list, not a map: a query named twice keeps both runs
     val qs = runs.map { case (n, b, s) => s"""{"query":"$n","base_s":$b,"scaled_s":$s}""" }
       .mkString("[", ",", "]")
     val json = s"""{"factor":$factor,"base":"$sfDir","scaled":"$outDir",""" +

@@ -97,8 +97,8 @@ object Plans {
 
   def main(args: Array[String]): Unit = {
     val spark = GraftSession("graft-plans")
-    // runtime overrides reach this session only: a builder's newSession()
-    // child (q83) still plans with the factory's AQE-on config
+    // a runtime override: builders' newSession() children copy the
+    // caller's runtime SQL conf (q83), so it reaches every plan
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.maxMetadataStringLength", "200")
     spark.sparkContext.setLogLevel("ERROR")

@@ -1327,6 +1327,9 @@ object Dedup {
       "graft_d13_index")
   }
 
+  /** A corpus index's tables, `_reps` (the swap marker) last. */
+  private val CorpusTables = Seq("_bands", "_reps")
+
   /** Write the corpus dedup index as a persisted, BUCKETED artifact —
     * the 100 TB steady state: band and rep tables are hash-bucketed by
     * their join keys, so every later delta batch equi-joins them with
@@ -1344,18 +1347,7 @@ object Dedup {
     * target corpus size (local default 8 matches the test SFs). */
   def writeCorpusIndex(corpus: DataFrame, name: String,
       numBuckets: Int = 8): Unit = {
-    // A managed table's location can survive a session (warehouse dir on
-    // disk) while the in-memory catalog entry does not — saveAsTable then
-    // fails with LOCATION_ALREADY_EXISTS. Drop both catalog entry and any
-    // stale location before writing.
-    val s = corpus.sparkSession
-    Seq(name + "_bands", name + "_reps").foreach { t =>
-      s.sql(s"DROP TABLE IF EXISTS `$t`")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), t.toLowerCase)
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-    }
+    Artifacts.dropTables(corpus.sparkSession, name, CorpusTables)
     val repSh = repShingleIndex(corpus)
     try {
       corpusBandIndex(repSh, corpus.sparkSession)
@@ -1420,13 +1412,12 @@ object Dedup {
     * band rebuild is [[bandRows]] over the merged frame. */
   def compactCorpusIndex(s: SparkSession, name: String,
       numBuckets: Int = 8): Unit = {
-    recoverIndexSwap(s, name)
     // merge key: the shingle SET. Arrays from array_distinct preserve
     // first-occurrence order, which differs between docs whose token
     // orders differ — sort for a canonical set key.
     // Storing the canonical sorted set is safe: minhash signatures and
     // the intersect/Jaccard verify are set-level, order-invariant.
-    val merged = s.table(name + "_reps")
+    def merged = s.table(name + "_reps")
       .groupBy(sort_array(col("sh")).as("shKey"))
       .agg(min(col("rep")).as("rep"),
         sort_array(flatten(collect_list(col("members")))).as("members"))
@@ -1434,50 +1425,28 @@ object Dedup {
     swapIndexTables(s, name, merged, numBuckets)
   }
 
-  /** Finish a crashed drop→rename swap: the session catalog has no
-    * multi-table transaction, so a previous rewrite may have died
-    * between the drop and the rename — the live name is gone but the
-    * fully-written _tmp table holds the data. Completing the rename
-    * first makes every rewriting maintenance op self-healing instead of
-    * requiring manual catalog surgery. */
-  private def recoverIndexSwap(s: SparkSession, name: String): Unit =
-    Seq("_bands", "_reps").foreach { sfx =>
-      if (!s.catalog.tableExists(name + sfx) &&
-          s.catalog.tableExists(name + sfx + "_tmp")) {
-        s.sql(s"ALTER TABLE `$name${sfx}_tmp` RENAME TO `$name$sfx`")
-      }
-    }
-
-  /** Write a (rep, members, sh) frame as the band/rep table pair under
-    * `_tmp` names, then swap live via rename (nothing reads and
-    * overwrites the same location — writing a table from a plan that
-    * scans it fails in Spark; ALTER TABLE RENAME preserves the bucket
-    * spec). Shared tail of [[compactCorpusIndex]] and
+  /** Write a (rep, members, sh) frame — read from the live tables, so
+    * built only after the swap's heal — as the band/rep table pair under
+    * `_tmp` names (`_reps_tmp` last, the marker), then swap live via one
+    * [[Artifacts.swap]] (nothing reads and overwrites the same location —
+    * writing a table from a plan that scans it fails in Spark; ALTER
+    * TABLE RENAME preserves the bucket spec). A crashed swap self-heals
+    * on the next call. Shared tail of [[compactCorpusIndex]] and
     * [[deleteFromCorpusIndex]]. */
   private def swapIndexTables(s: SparkSession, name: String,
-      repShFrame: DataFrame, numBuckets: Int): Unit = {
-    Seq(name + "_bands_tmp", name + "_reps_tmp").foreach { t =>
-      s.sql(s"DROP TABLE IF EXISTS `$t`")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), t.toLowerCase)
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+      repShFrame: => DataFrame, numBuckets: Int): Unit =
+    Artifacts.swap(s, Artifacts.tmpPairs(name, CorpusTables)) {
+      val repSh = repShFrame.cache()
+      try {
+        corpusBandIndex(repSh, s)
+          .write.mode("overwrite")
+          .bucketBy(numBuckets, "band", "key").sortBy("band", "key")
+          .saveAsTable(name + "_bands_tmp")
+        repSh.write.mode("overwrite")
+          .bucketBy(numBuckets, "rep").sortBy("rep")
+          .saveAsTable(name + "_reps_tmp")
+      } finally repSh.unpersist()
     }
-    val repSh = repShFrame.cache()
-    try {
-      corpusBandIndex(repSh, s)
-        .write.mode("overwrite")
-        .bucketBy(numBuckets, "band", "key").sortBy("band", "key")
-        .saveAsTable(name + "_bands_tmp")
-      repSh.write.mode("overwrite")
-        .bucketBy(numBuckets, "rep").sortBy("rep")
-        .saveAsTable(name + "_reps_tmp")
-      Seq("_bands", "_reps").foreach { sfx =>
-        s.sql(s"DROP TABLE IF EXISTS `$name$sfx`")
-        s.sql(s"ALTER TABLE `$name${sfx}_tmp` RENAME TO `$name$sfx`")
-      }
-    } finally repSh.unpersist()
-  }
 
   /** DELETE docs from a [[writeCorpusIndex]] artifact — the
     * right-to-be-forgotten maintenance op beside append and compact.
@@ -1498,9 +1467,8 @@ object Dedup {
     * [[compactCorpusIndex]]. */
   def deleteFromCorpusIndex(s: SparkSession, name: String,
       deleted: DataFrame, numBuckets: Int = 8): Unit = {
-    recoverIndexSwap(s, name)
     val del = deleted.select(col("doc_id").as("_del_id"))
-    val kept = s.table(name + "_reps")
+    def kept = s.table(name + "_reps")
       .select(col("rep").as("orig"), col("sh"), explode(col("members")).as("m"))
       .join(broadcast(del), col("m") === col("_del_id"), "left_anti")
       .groupBy(col("orig"))
@@ -1659,18 +1627,12 @@ object Dedup {
     * token stream itself is never persisted. */
   def writeSpanIndex(corpus: DataFrame, name: String, gram: Int = 8,
       numBuckets: Int = 8): Unit = {
-    val s = corpus.sparkSession
-    val t = name + "_grams"
-    s.sql(s"DROP TABLE IF EXISTS `$t`")
-    val loc = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), t.toLowerCase)
-    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
+    Artifacts.dropTables(corpus.sparkSession, name, Seq("_grams"))
     gramStream(corpus, gram)
       .groupBy(col("gh")).agg(count(lit(1)).as("n_occ"))
       .write.mode("overwrite")
       .bucketBy(numBuckets, "gh").sortBy("gh")
-      .saveAsTable(t)
+      .saveAsTable(name + "_grams")
   }
 
   /** Duplicated spans WITHIN a delta batch, counting gram occurrences
@@ -1744,41 +1706,22 @@ object Dedup {
     * [[writeSpanIndex]] over the surviving corpus would produce, but
     * without re-tokenizing a byte of text (cost ∝ index, 16 B per
     * distinct gram, not corpus). The rewrite runs in a child session
-    * with autoBucketedScan disabled (the compactAnnIndex rule) so the
-    * bucketed read's HashPartitioning(gh) satisfies both the net agg's
-    * clustering AND the bucketed write — zero Exchange, one file per
-    * bucket. tmp-write + rename swap with crash recovery; bucket count
-    * read from the catalog (the retrain rule — a caller-supplied count
-    * could silently rewrite the layout under future appends). */
+    * in [[Artifacts.rewriteSession]] so the bucketed read's
+    * HashPartitioning(gh) satisfies both the net agg's clustering AND
+    * the bucketed write — zero Exchange, one file per bucket. One
+    * [[Artifacts.swap]] with crash recovery; bucket count read from the
+    * catalog ([[Artifacts.bucketsOf]]). */
   def compactSpanIndex(s0: SparkSession, name: String): Unit = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
+    val s = Artifacts.rewriteSession(s0)
     val live = name + "_grams"
-    // finish a crashed previous swap first (live dropped, _tmp complete)
-    if (!s.catalog.tableExists(live) && s.catalog.tableExists(live + "_tmp"))
-      s.sql(s"ALTER TABLE `${live}_tmp` RENAME TO `$live`")
-    val numBuckets = s.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(live))
-      .bucketSpec.map(_.numBuckets).getOrElse(sys.error(
-        s"$live has no bucketSpec — compacting would silently rewrite " +
-          "the layout the catalog read exists to preserve (round-13 ADVICE)"))
-    val tmp = live + "_tmp"
-    s.sql(s"DROP TABLE IF EXISTS `$tmp`")
-    val loc = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), tmp.toLowerCase)
-    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
-    s.table(live)
-      .groupBy(col("gh")).agg(sum(col("n_occ")).as("n_occ"))
-      .filter(col("n_occ") =!= 0L)
-      .write.mode("overwrite")
-      .bucketBy(numBuckets, "gh").sortBy("gh")
-      .saveAsTable(tmp)
-    s.sql(s"DROP TABLE IF EXISTS `$live`")
-    s.sql(s"ALTER TABLE `$tmp` RENAME TO `$live`")
-    // the swap ran in the child session — refresh the caller's relation
-    // cache or its next scan throws FILE_NOT_EXIST (the r9 rule)
-    s0.catalog.refreshTable(live)
+    Artifacts.swap(s0, Artifacts.tmpPairs(name, Seq("_grams"))) {
+      s.table(live)
+        .groupBy(col("gh")).agg(sum(col("n_occ")).as("n_occ"))
+        .filter(col("n_occ") =!= 0L)
+        .write.mode("overwrite")
+        .bucketBy(Artifacts.bucketsOf(s, live), "gh").sortBy("gh")
+        .saveAsTable(live + "_tmp")
+    }
   }
 
   /** Driver gate for incremental span dedup: the d13 fixture split

@@ -25,8 +25,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * builds of different keys (s04's five families) stay concurrent. A
   * build that throws leaves no entry — its waiters see the failure and
   * the next call retries. A build may ask for OTHER memo keys (g20's
-  * stats read g19's packed rounds), never its own, and may then take
-  * catalog locks such as `Graph.sharedGraphLock`; a catalog-lock holder
+  * stats read g19's packed rounds), never its own, and may then build
+  * persisted artifacts through [[Artifacts.shared]]; an artifact build
   * never calls the memo (memo key first, never the reverse).
   *
   * Eviction rule — on insert, every entry of the same (kind, session,

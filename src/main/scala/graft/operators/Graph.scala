@@ -532,16 +532,8 @@ object Graph {
   // cost once, core/v2/Worker.java:65-73).
   // ---------------------------------------------------------------------
 
-  /** Drop a managed table's catalog entry AND any stale warehouse
-    * location (the d13 lesson — the directory can outlive the catalog
-    * entry and fail the next write with LOCATION_ALREADY_EXISTS). */
-  private def dropManaged(s: SparkSession, t: String): Unit = {
-    s.sql(s"DROP TABLE IF EXISTS `$t`")
-    val loc = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), t.toLowerCase)
-    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
-  }
+  /** An edge artifact's tables, `_stats` (the marker) last. */
+  private val EdgeTables = Seq("_edges", "_stats")
 
   /** Persist the undirected purchase edge set as a BUCKETED managed
     * table: `<name>_edges` (src, dst) bucketBy(src) — every iteration's
@@ -556,9 +548,7 @@ object Graph {
   /** Build the artifact from an arbitrary distinct edge frame. */
   def writeEdgeIndexFrom(s: SparkSession, edges: DataFrame, name: String,
       numBuckets: Int = 8): Unit = {
-    Seq(name + "_edges", name + "_stats")
-      .flatMap(t => Seq(t, t + "_tmp"))
-      .foreach(dropManaged(s, _))
+    Artifacts.dropTables(s, name, EdgeTables)
     edges.write.mode("overwrite")
       .bucketBy(numBuckets, "src").sortBy("src")
       .saveAsTable(name + "_edges")
@@ -617,61 +607,36 @@ object Graph {
         .select(col("src"), col("dst")))
 
   private def edgeBuckets(s: SparkSession, name: String): Int =
-    s.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(name + "_edges"))
-      .bucketSpec.map(_.numBuckets).getOrElse(8)
+    Artifacts.bucketsOf(s, name + "_edges")
 
-  /** Maintenance tail (the swapTextGeneration pattern, two tables):
-    * write the new generation as `_tmp` twins with `_stats` LAST, swap
-    * by rename, adopt a crashed swap's complete tmp generation via the
-    * stats-tmp marker, refresh the caller's relation cache. */
+  /** Maintenance tail: the new generation's `_edges` and `_stats` (LAST,
+    * the marker) written by the child session through one
+    * [[Artifacts.swap]]. */
   private def swapEdgeGeneration(s0: SparkSession, name: String,
       transform: DataFrame => DataFrame): Unit = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    val sfxs = Seq("_edges", "_stats")
-    if (s.catalog.tableExists(name + "_stats_tmp")) {
-      sfxs.foreach { sfx =>
-        if (s.catalog.tableExists(name + sfx + "_tmp")) {
-          s.sql(s"DROP TABLE IF EXISTS `$name$sfx`")
-          s.sql(s"ALTER TABLE `$name$sfx${"_tmp"}` RENAME TO `$name$sfx`")
-        }
-      }
-    }
-    sfxs.foreach(sfx => dropManaged(s, name + sfx + "_tmp"))
-    val numBuckets = edgeBuckets(s, name)
-    transform(s.table(name + "_edges"))
-      .write.mode("overwrite")
-      .bucketBy(numBuckets, "src").sortBy("src")
-      .saveAsTable(name + "_edges_tmp")
-    s.table(name + "_edges_tmp").agg(count(lit(1)).as("n_edges"))
-      .repartition(1).write.mode("overwrite").saveAsTable(name + "_stats_tmp")
-    sfxs.foreach { sfx =>
-      s.sql(s"DROP TABLE IF EXISTS `$name$sfx`")
-      s.sql(s"ALTER TABLE `$name$sfx${"_tmp"}` RENAME TO `$name$sfx`")
-      s0.catalog.refreshTable(name + sfx)
+    val s = Artifacts.rewriteSession(s0)
+    Artifacts.swap(s0, Artifacts.tmpPairs(name, EdgeTables)) {
+      transform(s.table(name + "_edges"))
+        .write.mode("overwrite")
+        .bucketBy(edgeBuckets(s, name), "src").sortBy("src")
+        .saveAsTable(name + "_edges_tmp")
+      s.table(name + "_edges_tmp").agg(count(lit(1)).as("n_edges"))
+        .repartition(1).write.mode("overwrite").saveAsTable(name + "_stats_tmp")
     }
   }
 
-  /** Fingerprint-keyed shared edge index (the sharedAnnIndex pattern —
-    * one build amortizes across every consumer in the session; a
+  /** Fingerprint-keyed shared edge index ([[Artifacts.shared]] — one
+    * build amortizes across every consumer in the session; a
     * driver-side fixture regeneration changes the name and forces a
-    * rebuild). [[sharedGraphLock]] guards only these catalog-table
-    * builders, which call no memo; memo builds ([[GateMemo]]) may take
-    * it, never the reverse. */
-  private val sharedGraphLock = new Object
+    * rebuild). */
   private def graphFp(dir: String): Long =
     Tables.fixtureFingerprint(dir, "lineitem.parquet") ^
       java.lang.Long.rotateLeft(
         Tables.fixtureFingerprint(dir, "orders.parquet"), 17)
-  private[graft] def sharedEdgeIndex(s: SparkSession, dir: String): String =
-    sharedGraphLock.synchronized {
-      val name = "graft_shared_graph_" + java.lang.Long.toHexString(graphFp(dir))
-      val complete = s.catalog.tableExists(name + "_edges") &&
-        s.catalog.tableExists(name + "_stats")
-      if (!complete) writeEdgeIndex(s, dir, name)
-      name
-    }
+  private[graft] def sharedEdgeIndex(s: SparkSession, dir: String): String = {
+    val name = "graft_shared_graph_" + java.lang.Long.toHexString(graphFp(dir))
+    Artifacts.shared(s, name, EdgeTables)(writeEdgeIndex(s, dir, name))
+  }
 
   /** [[g01PageRank]] answered from a [[writeEdgeIndex]] artifact alone:
     * the fact tables never appear — the edge side is the bucketed scan,
@@ -727,9 +692,7 @@ object Graph {
     * query is the same anti-pattern writeEdgeIndex exists to avoid. */
   def writeWeightedEdgeIndex(s: SparkSession, dir: String, name: String,
       numBuckets: Int = 8): Unit = {
-    Seq(name + "_edges", name + "_stats")
-      .flatMap(t => Seq(t, t + "_tmp"))
-      .foreach(dropManaged(s, _))
+    Artifacts.dropTables(s, name, EdgeTables)
     weightedEdges(s, dir).write.mode("overwrite")
       .bucketBy(numBuckets, "src").sortBy("src")
       .saveAsTable(name + "_edges")
@@ -745,12 +708,9 @@ object Graph {
       .orderBy(col("dist_w"), col("node")).limit(100)
 
   private[graft] def sharedWeightedEdgeIndex(s: SparkSession,
-      dir: String): String = sharedGraphLock.synchronized {
+      dir: String): String = {
     val name = "graft_shared_wgraph_" + java.lang.Long.toHexString(graphFp(dir))
-    val complete = s.catalog.tableExists(name + "_edges") &&
-      s.catalog.tableExists(name + "_stats")
-    if (!complete) writeWeightedEdgeIndex(s, dir, name)
-    name
+    Artifacts.shared(s, name, EdgeTables)(writeWeightedEdgeIndex(s, dir, name))
   }
 
   /** Driver gate for the weighted edge index (the g04 pattern): one row
@@ -1044,22 +1004,18 @@ object Graph {
     * the purchase graph): the lineitem self-join derivation runs once
     * per fixture; both directions land bucketBy(src) and the triangle
     * family reads the canonical (u < v) half back with one filter. */
-  private[graft] def sharedCooccurIndex(s: SparkSession, dir: String): String =
-    sharedGraphLock.synchronized {
-      val name = "graft_shared_cograph_" +
-        java.lang.Long.toHexString(
-          Tables.fixtureFingerprint(dir, "lineitem.parquet"))
-      val complete = s.catalog.tableExists(name + "_edges") &&
-        s.catalog.tableExists(name + "_stats")
-      if (!complete) {
-        val e = partEdges(s, dir)
-        writeEdgeIndexFrom(s,
-          e.select(col("u").as("src"), col("v").as("dst"))
-            .unionAll(e.select(col("v").as("src"), col("u").as("dst"))),
-          name)
-      }
-      name
+  private[graft] def sharedCooccurIndex(s: SparkSession, dir: String): String = {
+    val name = "graft_shared_cograph_" +
+      java.lang.Long.toHexString(
+        Tables.fixtureFingerprint(dir, "lineitem.parquet"))
+    Artifacts.shared(s, name, EdgeTables) {
+      val e = partEdges(s, dir)
+      writeEdgeIndexFrom(s,
+        e.select(col("u").as("src"), col("v").as("dst"))
+          .unionAll(e.select(col("v").as("src"), col("u").as("dst"))),
+        name)
     }
+  }
 
   /** The canonical (u < v) edge half off the persisted table. */
   private def cooccurEdges(s: SparkSession, name: String): DataFrame =
@@ -1113,20 +1069,16 @@ object Graph {
     * fixture; both directions land bucketBy(src) with the `_stats`-last
     * completeness marker. Pairs are (even, odd) by construction, so the
     * canonical half reads back with one `src % 2 = 0` filter. */
-  private[graft] def sharedAffinityIndex(s: SparkSession, dir: String): String =
-    sharedGraphLock.synchronized {
-      val name = "graft_shared_agraph_" + java.lang.Long.toHexString(graphFp(dir))
-      val complete = s.catalog.tableExists(name + "_edges") &&
-        s.catalog.tableExists(name + "_stats")
-      if (!complete) {
-        val p = affinityPairs(s, dir)
-        writeEdgeIndexFrom(s,
-          p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-            .unionAll(p.select(col("doc_b").as("src"), col("doc_a").as("dst"))),
-          name)
-      }
-      name
+  private[graft] def sharedAffinityIndex(s: SparkSession, dir: String): String = {
+    val name = "graft_shared_agraph_" + java.lang.Long.toHexString(graphFp(dir))
+    Artifacts.shared(s, name, EdgeTables) {
+      val p = affinityPairs(s, dir)
+      writeEdgeIndexFrom(s,
+        p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+          .unionAll(p.select(col("doc_b").as("src"), col("doc_a").as("dst"))),
+        name)
     }
+  }
 
   /** The once-per-fixture component labelling g03 serves (the
     * sharedTriangleCore pattern): [[Dedup.clusterLabels]] over the
@@ -1461,13 +1413,11 @@ object Graph {
     * sharedCooccurIndex pattern with a weight column riding the same
     * bucketBy(src) layout through [[writeEdgeIndexFrom]]). */
   private[graft] def sharedWeightedCooccurIndex(s: SparkSession,
-      dir: String): String = sharedGraphLock.synchronized {
+      dir: String): String = {
     val name = "graft_shared_wcograph_" +
       java.lang.Long.toHexString(
         Tables.fixtureFingerprint(dir, "lineitem.parquet"))
-    val complete = s.catalog.tableExists(name + "_edges") &&
-      s.catalog.tableExists(name + "_stats")
-    if (!complete) {
+    Artifacts.shared(s, name, EdgeTables) {
       val e = weightedPartEdges(s, dir)
       writeEdgeIndexFrom(s,
         e.select(col("u").as("src"), col("v").as("dst"), col("w"))
@@ -1475,7 +1425,6 @@ object Graph {
             e.select(col("v").as("src"), col("u").as("dst"), col("w"))),
         name)
     }
-    name
   }
 
   /** LABEL-PROPAGATION COMMUNITIES over the weighted part co-occurrence

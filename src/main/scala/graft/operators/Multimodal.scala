@@ -621,9 +621,7 @@ object Multimodal {
           "reupload_reroutes")
     } finally {
       vecs.unpersist()
-      Seq("_cells", "_srp", "_pq", "_side",
-        "_cells_tmp", "_srp_tmp", "_pq_tmp").foreach(sfx =>
-        s.sql(s"DROP TABLE IF EXISTS `$name$sfx`"))
+      Artifacts.dropTables(s, name, Similarity.AnnTables)
     }
   }
 

@@ -1694,8 +1694,12 @@ object Relational {
     // frame executes under it whenever the caller materializes, while
     // the caller's session keeps the default recursion guard — a
     // session-level set here would outlive the query (round-5 ADVICE)
-    // — and the temp view no longer lands in the caller's catalog.
+    // — and the temp view no longer lands in the caller's catalog. The
+    // clone starts from the static conf, so the caller's runtime SQL
+    // settings are copied in first: the returned frame must plan the way
+    // the caller's session would (a runtime AQE-off reaches it).
     val s2 = s.newSession()
+    s.conf.getAll.foreach { case (k, v) => if (s.conf.isModifiable(k)) s2.conf.set(k, v) }
     s2.conf.set("spark.sql.cteRecursionRowLimit", "100000000")
     Tables.part(s2, dir).createOrReplaceTempView("graft_q83_part")
     s2.sql("""

@@ -579,6 +579,9 @@ object Similarity {
 
   // ------------------------------------------- persisted ANN index (s07)
 
+  /** An ANN artifact's tables, `_side` (written last) last. */
+  private[graft] val AnnTables = Seq("_cells", "_srp", "_pq", "_side")
+
   /** Write the ANN index as a persisted, BUCKETED artifact — the vector
     * twin of [[Dedup.writeCorpusIndex]] (the round-6 top ask): a
     * production vector store builds ONCE and answers every later query
@@ -659,18 +662,7 @@ object Similarity {
     // the rebuild and resurrect deleted vectors. (Called as
     // writeAnnIndex(name_rt) by retrain itself this also clears
     // name_rt_rt_* — nonexistent, harmless.)
-    Seq(name + "_cells", name + "_srp", name + "_pq", name + "_side")
-      .flatMap(t => Seq(t,
-        name + "_rt" + t.stripPrefix(name))).foreach { t =>
-      // drop both the catalog entry and any stale warehouse location
-      // (saveAsTable would fail with LOCATION_ALREADY_EXISTS — the d13
-      // lesson)
-      s.sql(s"DROP TABLE IF EXISTS `$t`")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), t.toLowerCase)
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-    }
+    Seq(name, name + "_rt").foreach(Artifacts.dropTables(s, _, AnnTables))
     // centroid and codebook trainings are disjoint job pipelines — run
     // them concurrently, then the independent table writes concurrently
     // (safe for bit-equality: refine is order-invariant, and no write
@@ -790,10 +782,10 @@ object Similarity {
     * HashPartitioning(cell) already satisfies the clustering, `_srp`
     * joins on its bucket key `vec_id` — so the existing index never
     * re-shuffles; only the batch-sized side moves. Bucket counts come
-    * from the CATALOG (the retrain rule); the parameter is the fallback
-    * for a spec-less table only. Requires index-wide unique vec_ids
-    * across DISTINCT batches (duplicate ids across different payloads
-    * are a caller bug this op cannot detect). */
+    * from the CATALOG (the [[Artifacts.bucketsOf]] rule); the parameter
+    * is the fallback for a spec-less table only. Requires index-wide
+    * unique vec_ids across DISTINCT batches (duplicate ids across
+    * different payloads are a caller bug this op cannot detect). */
   def appendToAnnIndex(s: SparkSession, newVecs: DataFrame, name: String,
       numBuckets: Int = 8, meta: Seq[String] = Seq.empty): Unit = {
     val (cents, books) = readAnnSidecar(s, name)
@@ -863,9 +855,9 @@ object Similarity {
     * right-to-be-forgotten maintenance op for the vector store. Each
     * table that exists (`_cells`/`_srp`/`_pq`) is rewritten without the
     * deleted vec_ids via a broadcast anti-join (the deletion set is a
-    * DataFrame of `vec_id`, never a plan literal) through a tmp-write +
-    * rename swap that preserves the bucket spec; a crashed swap
-    * self-heals on the next call, exactly like
+    * DataFrame of `vec_id`, never a plan literal) through
+    * [[annSwap]]; a crashed swap self-heals on the next call to one
+    * whole generation, exactly like
     * [[graft.operators.Dedup.deleteFromCorpusIndex]]. The `_side`
     * sidecar is deliberately untouched: centroids and codebooks are the
     * index's FROZEN quantization state (the append contract), so
@@ -875,29 +867,31 @@ object Similarity {
   def deleteFromAnnIndex(s: SparkSession, name: String, deleted: DataFrame,
       numBuckets: Int = 8): Unit = {
     val del = deleted.select(col("vec_id").as("_del_id"))
-    val specs = Seq(("_cells", "cell"), ("_srp", "vec_id"), ("_pq", "cell"))
-    specs.foreach { case (sfx, _) =>
-      if (!s.catalog.tableExists(name + sfx) &&
-          s.catalog.tableExists(name + sfx + "_tmp")) {
-        s.sql(s"ALTER TABLE `$name${sfx}_tmp` RENAME TO `$name$sfx`")
-      }
+    annSwap(s, s, name) { (live, _) =>
+      (s.table(live)
+        .join(broadcast(del), col("vec_id") === col("_del_id"), "left_anti"),
+        numBuckets)
     }
-    specs.filter(p => s.catalog.tableExists(name + p._1)).foreach {
-      case (sfx, bucketCol) =>
-        val live = name + sfx
-        val tmp = live + "_tmp"
-        s.sql(s"DROP TABLE IF EXISTS `$tmp`")
-        val loc = new org.apache.hadoop.fs.Path(
-          s.conf.get("spark.sql.warehouse.dir"), tmp.toLowerCase)
-        val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(loc)) fs.delete(loc, true)
-        s.table(live)
-          .join(broadcast(del), col("vec_id") === col("_del_id"), "left_anti")
-          .write.mode("overwrite")
-          .bucketBy(numBuckets, bucketCol).sortBy(bucketCol)
-          .saveAsTable(tmp)
-        s.sql(s"DROP TABLE IF EXISTS `$live`")
-        s.sql(s"ALTER TABLE `$tmp` RENAME TO `$live`")
+  }
+
+  /** The ANN families' generation swap: one [[Artifacts.swap]] over
+    * `_srp`, `_pq` and `_cells` (mandatory, so the marker — written and
+    * renamed last). `rewrite(live, bucketCol)` gives each live family's
+    * new rows and bucket count, read in session `s`; families the
+    * index lacks are skipped, and `_side` is never touched. Every family
+    * is written before any is swapped, so a crash between two families
+    * can never leave them disagreeing. */
+  private def annSwap(caller: SparkSession, s: SparkSession, name: String)(
+      rewrite: (String, String) => (DataFrame, Int)): Unit = {
+    val specs = Seq(("_srp", "vec_id"), ("_pq", "cell"), ("_cells", "cell"))
+    Artifacts.swap(caller, Artifacts.tmpPairs(name, specs.map(_._1))) {
+      specs.filter(p => s.catalog.tableExists(name + p._1)).foreach {
+        case (sfx, bucketCol) =>
+          val (rows, numBuckets) = rewrite(name + sfx, bucketCol)
+          rows.write.mode("overwrite")
+            .bucketBy(numBuckets, bucketCol).sortBy(bucketCol)
+            .saveAsTable(name + sfx + "_tmp")
+      }
     }
   }
 
@@ -913,58 +907,21 @@ object Similarity {
     * bucket-id assignment uses the same hash, so every task holds
     * exactly one bucket — through the tmp-write + rename swap that
     * preserves the bucket spec; a crashed swap self-heals on the next
-    * call (the [[deleteFromAnnIndex]] recovery rule). Rows and the
-    * `_side` sidecar are untouched: compaction is pure layout, and the
-    * spec asserts per-family row identity plus a strict file-count
-    * drop. Bucket counts come from the CATALOG, never a parameter — a
-    * caller-supplied count could silently rewrite the layout and break
-    * the next append's matching-bucketBy contract (the retrain rule). */
+    * call ([[annSwap]], the [[deleteFromAnnIndex]] recovery rule). Rows
+    * and the `_side` sidecar are untouched: compaction is pure layout,
+    * and the spec asserts per-family row identity plus a strict
+    * file-count drop. Bucket counts come from the CATALOG
+    * ([[Artifacts.bucketsOf]]), never a parameter. */
   def compactAnnIndex(s0: SparkSession, name: String): Unit = {
-    // scoped conf (the q83 child-session rule): the rewrite must READ
-    // each table through its BUCKETED scan, so the planner sees
-    // HashPartitioning(bucketCol, n), drops the redundant repartition,
-    // and each write task holds exactly one bucket — one output file
-    // per bucket, ZERO Exchange (pure read-bucket → write-bucket).
-    // With the default autoBucketedScan the planner disables the
-    // bucketed scan for a plain scan-to-write plan while STILL eliding
-    // the repartition, and every task then holds a mix of buckets —
-    // n_tasks × n_buckets files (measured; the exact failure this op
-    // exists to fix). The child session shares the catalog; the
-    // caller's conf is untouched.
-    val s = s0.newSession()
-    s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    val specs = Seq(("_cells", "cell"), ("_srp", "vec_id"), ("_pq", "cell"))
-    specs.foreach { case (sfx, _) =>
-      if (!s.catalog.tableExists(name + sfx) &&
-          s.catalog.tableExists(name + sfx + "_tmp")) {
-        s.sql(s"ALTER TABLE `$name${sfx}_tmp` RENAME TO `$name$sfx`")
-      }
-    }
-    specs.filter(p => s.catalog.tableExists(name + p._1)).foreach {
-      case (sfx, bucketCol) =>
-        val live = name + sfx
-        val numBuckets = s.sessionState.catalog
-          .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(live))
-          .bucketSpec.map(_.numBuckets).getOrElse(8)
-        val tmp = live + "_tmp"
-        s.sql(s"DROP TABLE IF EXISTS `$tmp`")
-        val loc = new org.apache.hadoop.fs.Path(
-          s.conf.get("spark.sql.warehouse.dir"), tmp.toLowerCase)
-        val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(loc)) fs.delete(loc, true)
-        // the repartition is belt-and-braces: redundant (and planner-
-        // removed) over the bucketed scan, alignment-restoring if a
-        // future caller feeds a non-bucketed frame through this path
-        s.table(live).repartition(numBuckets, col(bucketCol))
-          .write.mode("overwrite")
-          .bucketBy(numBuckets, bucketCol).sortBy(bucketCol)
-          .saveAsTable(tmp)
-        s.sql(s"DROP TABLE IF EXISTS `$live`")
-        s.sql(s"ALTER TABLE `$tmp` RENAME TO `$live`")
-        // the swap ran in the child session — the CALLER's relation
-        // cache still lists the replaced files; refresh it or its next
-        // scan throws FILE_NOT_EXIST (measured)
-        s0.catalog.refreshTable(live)
+    // read-bucket → write-bucket in the rewrite session: one file per
+    // bucket, zero Exchange
+    val s = Artifacts.rewriteSession(s0)
+    annSwap(s0, s, name) { (live, bucketCol) =>
+      val numBuckets = Artifacts.bucketsOf(s, live)
+      // the repartition is belt-and-braces: redundant (and planner-
+      // removed) over the bucketed scan, alignment-restoring if a
+      // future caller feeds a non-bucketed frame through this path
+      (s.table(live).repartition(numBuckets, col(bucketCol)), numBuckets)
     }
   }
 
@@ -984,118 +941,77 @@ object Similarity {
     * [[refine]]'s means are order-invariant, the retrained artifact is
     * bit-identical to a fresh [[writeAnnIndex]] over the same corpus —
     * SimilaritySpec's drift case asserts that equality exactly. */
-  def retrainAnnIndex(s: SparkSession, name: String): Unit = {
-    val sfxs = Seq("_cells", "_srp", "_pq", "_side")
+  def retrainAnnIndex(s: SparkSession, name: String): Unit =
     // Crash recovery (round-8 ADVICE — the old rule adopted _rt twins
     // only where the LIVE table was missing, so a crash between two
     // suffix swaps left a MIXED generation live — e.g. fresh _pq codes
-    // ranking through the stale sidecar's LUTs — undetected). The swap
-    // loop below renames the twins in sfxs order with `_side` LAST,
-    // which makes `_rt_side` a complete-generation marker and a
-    // crashed-mid-swap marker at once: [[writeAnnIndex]] writes `_side`
-    // only after awaiting every family write (a half-built _rt
-    // generation never has one), and a completed swap consumes it in
-    // its final rename. So: twin sidecar present → the previous retrain
-    // built a FULL new generation and died mid-swap — finish that swap
-    // by adopting EVERY surviving twin over its possibly-stale live
-    // counterpart (consistent by construction: all twins are one
-    // generation). Twin sidecar absent → any _rt remnants are a
-    // half-built generation — discard them and retrain from live
-    // state. Either way no mixed-generation artifact survives the
-    // preamble, and no generation bookkeeping rides the data tables.
-    if (s.catalog.tableExists(name + "_rt_side")) {
-      sfxs.foreach { sfx =>
-        if (s.catalog.tableExists(name + "_rt" + sfx)) {
-          s.sql(s"DROP TABLE IF EXISTS `$name$sfx`")
-          s.sql(s"ALTER TABLE `${name}_rt$sfx` RENAME TO `$name$sfx`")
-        }
-      }
-    } else {
-      sfxs.foreach(sfx => s.sql(s"DROP TABLE IF EXISTS `${name}_rt$sfx`"))
+    // ranking through the stale sidecar's LUTs — undetected): the twins
+    // rename with `_side` LAST, and [[writeAnnIndex]] writes `_side`
+    // only after awaiting every family write, so `_rt_side` is the
+    // swap's completeness marker ([[Artifacts.swap]]'s heal rule). No
+    // generation bookkeeping rides the data tables.
+    Artifacts.swap(s, AnnTables.map(x => (name + "_rt" + x, name + x))) {
+      // EVERY layout property persists across retrain: storage kind from
+      // a raw schema probe (before the dequantizing reader), and the
+      // bucket count from the catalog's bucket spec
+      val isI8 = s.table(name + "_cells").columns.contains("emb8")
+      val qs = if (isI8) quantScaleOf(s, name) else 0.005
+      val cells = cellsTable(s, name)
+      val meta = cells.columns.toSeq.filterNot(Set("cell", "vec_id", "emb", "nrm"))
+      val families = Set("ivf") ++
+        (if (s.catalog.tableExists(name + "_srp")) Set("srp") else Set.empty[String]) ++
+        (if (s.catalog.tableExists(name + "_pq")) Set("pq") else Set.empty[String])
+      val corpus = cells.select(
+        (Seq(col("vec_id"), col("emb"), col("nrm")) ++ meta.map(col)): _*)
+      // tmp build reads the LIVE _cells lazily — every read happens inside
+      // writeAnnIndex's materializing writes, before any live table drops.
+      // The METRIC persists across retrain too (round-15 review find: the
+      // rebuild used to omit it, silently rewriting an l2/ip artifact as
+      // cosine — latent while non-cosine artifacts had no retrain caller).
+      writeAnnIndex(s, corpus, name + "_rt", Artifacts.bucketsOf(s, name + "_cells"),
+        meta, families, storage = if (isI8) "i8" else "f64", quantScale = qs,
+        metric = metricOf(s, name))
     }
-    // EVERY layout property persists across retrain: storage kind from
-    // a raw schema probe (before the dequantizing reader), and the
-    // bucket count from the catalog's bucket spec — a caller-supplied
-    // count could silently rewrite the layout and break the NEXT
-    // append's matching-bucketBy contract (review finding)
-    val isI8 = s.table(name + "_cells").columns.contains("emb8")
-    val qs = if (isI8) quantScaleOf(s, name) else 0.005
-    val numBuckets = s.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(name + "_cells"))
-      .bucketSpec.map(_.numBuckets).getOrElse(8)
-    val cells = cellsTable(s, name)
-    val meta = cells.columns.toSeq.filterNot(Set("cell", "vec_id", "emb", "nrm"))
-    val families = Set("ivf") ++
-      (if (s.catalog.tableExists(name + "_srp")) Set("srp") else Set.empty[String]) ++
-      (if (s.catalog.tableExists(name + "_pq")) Set("pq") else Set.empty[String])
-    val corpus = cells.select(
-      (Seq(col("vec_id"), col("emb"), col("nrm")) ++ meta.map(col)): _*)
-    // tmp build reads the LIVE _cells lazily — every read happens inside
-    // writeAnnIndex's materializing writes, before any live table drops.
-    // The METRIC persists across retrain too (round-15 review find: the
-    // rebuild used to omit it, silently rewriting an l2/ip artifact as
-    // cosine — latent while non-cosine artifacts had no retrain caller).
-    writeAnnIndex(s, corpus, name + "_rt", numBuckets, meta, families,
-      storage = if (isI8) "i8" else "f64", quantScale = qs,
-      metric = metricOf(s, name))
-    sfxs.filter(sfx => s.catalog.tableExists(name + "_rt" + sfx)).foreach { sfx =>
-      s.sql(s"DROP TABLE IF EXISTS `$name$sfx`")
-      s.sql(s"ALTER TABLE `${name}_rt$sfx` RENAME TO `$name$sfx`")
-    }
-  }
 
-  /** SHARED per-fixture ANN artifact for the three index gates
-    * (s07/s08/s10): each used to build its OWN index per invocation —
-    * three writeAnnIndex jobs over the same corpus in every
-    * Verify/Bench run. One full build (all families, `label` meta so
-    * both filtered paths work) now serves all three; the name embeds
-    * the fixture fingerprint, so the check is a cheap catalog probe, a
-    * driver-side fixture regeneration forces a rebuild, and stale
-    * generations are dropped at build time. Extra meta columns in
-    * `_cells`/`_pq` are pass-through for the unfiltered query paths,
-    * so s07's indexed ≡ inline equality contract is unaffected.
-    * Synchronized: gates overlap internally with futures. */
   /** Mtime+length fingerprint of the embeddings fixture — shared by the
     * artifact names and the family-result memo so a driver-side
     * regeneration invalidates both. */
   private def embFp(dir: String): Long =
     Tables.fixtureFingerprint(dir, "embeddings.parquet")
 
-  private val sharedIndexLock = new Object
+  /** SHARED per-fixture ANN artifact for the three index gates
+    * (s07/s08/s10): each used to build its OWN index per invocation —
+    * three writeAnnIndex jobs over the same corpus in every
+    * Verify/Bench run. One full build (all families, `label` meta so
+    * both filtered paths work) now serves all three through
+    * [[Artifacts.shared]]; the name embeds the fixture fingerprint, so
+    * the check is a cheap catalog probe and a driver-side fixture
+    * regeneration forces a rebuild. The probe is COMPLETENESS, not
+    * liveness: `_side` is written last, after every family write is
+    * awaited, so a build that died between the _cells commit and the
+    * sidecar is rebuilt instead of poisoning every dependent gate
+    * (review finding). Extra meta columns in `_cells`/`_pq` are
+    * pass-through for the unfiltered query paths, so s07's indexed ≡
+    * inline equality contract is unaffected. */
   private[graft] def sharedAnnIndex(s: SparkSession, dir: String,
-      storage: String = "f64"): String =
-    sharedIndexLock.synchronized {
-      val prefix = if (storage == "i8") "graft_shared_ann8_" else "graft_shared_ann_"
-      val name = prefix + java.lang.Long.toHexString(embFp(dir))
-      // COMPLETENESS probe, not just liveness: `_side` is written last,
-      // after every family write is awaited, so its presence proves the
-      // whole build landed. A build that died between the _cells commit
-      // and the sidecar would otherwise poison every dependent gate for
-      // the session (review finding) — instead it is torn down and
-      // rebuilt here. Other fingerprints'/dirs' generations are left
-      // alone: one session legitimately serves several fixture dirs
-      // (tests, multi-SF users), and dropping a sibling generation
-      // would break lazily-returned frames still reading it (d20) and
-      // thrash the amortization; per-session generation garbage is
-      // bounded by the handful of fixtures a session touches.
-      val complete = s.catalog.tableExists(name + "_cells") &&
-        s.catalog.tableExists(name + "_side")
-      if (!complete) {
-        val e = Tables.embeddings(s, dir)
-          .select(col("vec_id"), toDouble(col("embedding")).as("emb"), col("label"))
-          .withColumn("nrm", l2Norm(col("emb")))
-        // the i8 artifact skips the PQ family: int8 compresses the
-        // RERANK SOURCE, PQ codes are already a (4-bit) compressed
-        // ranking representation — stacking the two quantizations
-        // compounds error for no I/O win (measured: pq-over-i8 recall
-        // fell through the 0.6 gate at sf0.1 while ivf/srp held)
-        writeAnnIndex(s, e.filter(col("vec_id") >= 10), name,
-          meta = Seq("label"), storage = storage,
-          families = if (storage == "i8") Set("ivf", "srp")
-                     else Set("ivf", "srp", "pq"))
-      }
-      name
+      storage: String = "f64"): String = {
+    val prefix = if (storage == "i8") "graft_shared_ann8_" else "graft_shared_ann_"
+    val name = prefix + java.lang.Long.toHexString(embFp(dir))
+    Artifacts.shared(s, name, Seq("_cells", "_side")) {
+      val e = Tables.embeddings(s, dir)
+        .select(col("vec_id"), toDouble(col("embedding")).as("emb"), col("label"))
+        .withColumn("nrm", l2Norm(col("emb")))
+      // the i8 artifact skips the PQ family: int8 compresses the
+      // RERANK SOURCE, PQ codes are already a (4-bit) compressed
+      // ranking representation — stacking the two quantizations
+      // compounds error for no I/O win (measured: pq-over-i8 recall
+      // fell through the 0.6 gate at sf0.1 while ivf/srp held)
+      writeAnnIndex(s, e.filter(col("vec_id") >= 10), name,
+        meta = Seq("label"), storage = storage,
+        families = if (storage == "i8") Set("ivf", "srp")
+                   else Set("ivf", "srp", "pq"))
     }
+  }
 
   /** Read the bounded sidecar back: (IVF centroids, PQ codebooks) in
     * index order. The collect is O(k·d) — the same driver footprint the
@@ -1580,7 +1496,7 @@ object Similarity {
       val afterPq = hits(annPqIndexed(s, q, name))
       writeAnnIndex(s, corpus.unionByName(shifted), fresh,
         families = Set("ivf", "pq"))
-      val eqDiff = Seq("_cells", "_srp", "_pq", "_side").map { sfx =>
+      val eqDiff = AnnTables.map { sfx =>
         (s.catalog.tableExists(name + sfx),
           s.catalog.tableExists(fresh + sfx)) match {
           case (true, true) =>
@@ -1595,10 +1511,8 @@ object Similarity {
       Seq((nq, afterIvf * 10 >= nq * 9, afterPq * 10 >= nq * 6, eqDiff == 0L))
         .toDF("n_queries", "ivf_nn_after_ge_90", "pq_nn_after_ge_60",
           "retrained_eq_fresh")
-    } finally Seq(name, fresh).foreach(n0 =>
-      Seq("_cells", "_srp", "_pq", "_side", "_rt_cells", "_rt_srp",
-        "_rt_pq", "_rt_side").foreach(sfx =>
-        s.sql(s"DROP TABLE IF EXISTS `$n0$sfx`")))
+    } finally Seq(name, fresh).flatMap(n => Seq(n, n + "_rt"))
+      .foreach(Artifacts.dropTables(s, _, AnnTables))
   }
 
   /** Vec-id bound for s14's corpus subset — one constant, two mirrors
@@ -1713,10 +1627,8 @@ object Similarity {
           .toDF("n_vecs", "queryable_mid_crash",
             "redelivery_inserted_zero", "final_eq_clean_append")
       } finally q.stop()
-    } finally Seq(name, ref).foreach(n0 =>
-      Seq("_cells", "_srp", "_pq", "_side", "_rt_cells", "_rt_srp",
-        "_rt_pq", "_rt_side").foreach(sfx =>
-        s.sql(s"DROP TABLE IF EXISTS `$n0$sfx`")))
+    } finally Seq(name, ref).flatMap(n => Seq(n, n + "_rt"))
+      .foreach(Artifacts.dropTables(s, _, AnnTables))
   }
 
   /** FILTERED vector search — the metadata-predicate top-k every real
@@ -1971,22 +1883,17 @@ object Similarity {
     * `_pq` table (added round 15 — an ivf-only generation from an
     * older session self-heals into a rebuild instead of being
     * adopted, exactly like a label-less one). */
-  private[graft] def sharedL2AnnIndex(s: SparkSession, dir: String): String =
-    sharedIndexLock.synchronized {
-      val name = "graft_shared_annl2_" + java.lang.Long.toHexString(embFp(dir))
-      val complete = s.catalog.tableExists(name + "_cells") &&
-        s.catalog.tableExists(name + "_side") &&
-        s.catalog.tableExists(name + "_pq") &&
-        s.table(name + "_cells").columns.contains("label")
-      if (!complete) {
-        val e = Tables.embeddings(s, dir)
-          .select(col("vec_id"), toDouble(col("embedding")).as("emb"), col("label"))
-          .withColumn("nrm", l2Norm(col("emb")))
-        writeAnnIndex(s, e.filter(col("vec_id") >= 10), name,
-          meta = Seq("label"), families = Set("ivf", "pq"), metric = "l2")
-      }
-      name
+  private[graft] def sharedL2AnnIndex(s: SparkSession, dir: String): String = {
+    val name = "graft_shared_annl2_" + java.lang.Long.toHexString(embFp(dir))
+    Artifacts.shared(s, name, Seq("_cells", "_pq", "_side"),
+        valid = s.table(name + "_cells").columns.contains("label")) {
+      val e = Tables.embeddings(s, dir)
+        .select(col("vec_id"), toDouble(col("embedding")).as("emb"), col("label"))
+        .withColumn("nrm", l2Norm(col("emb")))
+      writeAnnIndex(s, e.filter(col("vec_id") >= 10), name,
+        meta = Seq("label"), families = Set("ivf", "pq"), metric = "l2")
     }
+  }
 
   /** Driver gate for the L2-metric artifact (round-13 verdict #4; the
     * s04 + s16 flag patterns under the flipped order): top-k leg —
@@ -2138,18 +2045,14 @@ object Similarity {
     * L2 k-means layout — the standard norm-agnostic approximation —
     * so the s23 gate holds the recall bar the honest way, through the
     * exact-verified candidate scores. */
-  private[graft] def sharedIpAnnIndex(s: SparkSession, dir: String): String =
-    sharedIndexLock.synchronized {
-      val name = "graft_shared_annip_" + java.lang.Long.toHexString(embFp(dir))
-      val complete = s.catalog.tableExists(name + "_cells") &&
-        s.catalog.tableExists(name + "_side")
-      if (!complete) {
-        val e = withNorm(Tables.embeddings(s, dir))
-        writeAnnIndex(s, e.filter(col("vec_id") >= 10), name,
-          families = Set("ivf"), metric = "ip")
-      }
-      name
+  private[graft] def sharedIpAnnIndex(s: SparkSession, dir: String): String = {
+    val name = "graft_shared_annip_" + java.lang.Long.toHexString(embFp(dir))
+    Artifacts.shared(s, name, Seq("_cells", "_side")) {
+      val e = withNorm(Tables.embeddings(s, dir))
+      writeAnnIndex(s, e.filter(col("vec_id") >= 10), name,
+        families = Set("ivf"), metric = "ip")
     }
+  }
 
   /** Driver gate for the INNER-PRODUCT metric — the metric matrix's
     * third row made driver-visible (cosine: the whole s-family; l2:

@@ -671,18 +671,6 @@ object TextAnalysis {
 
   // ------------------------------------------ persisted text index (t40)
 
-  /** Drop a managed table's catalog entry AND any stale warehouse
-    * location — a managed table's directory can survive the session
-    * while the in-memory catalog entry does not, and saveAsTable then
-    * fails with LOCATION_ALREADY_EXISTS (the d13 lesson). */
-  private def dropManaged(s: SparkSession, t: String): Unit = {
-    s.sql(s"DROP TABLE IF EXISTS `$t`")
-    val loc = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), t.toLowerCase)
-    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
-  }
-
   /** Write the BM25 retrieval index as a persisted, BUCKETED artifact —
     * the text twin of [[graft.operators.Similarity.writeAnnIndex]] and
     * [[graft.operators.Dedup.writeCorpusIndex]]: a production pipeline
@@ -720,18 +708,12 @@ object TextAnalysis {
     * knob: term buckets should hold a few hundred MB at the target
     * corpus size (local default 8 matches the test SFs). */
   def writeTextIndex(corpus: DataFrame, name: String, numBuckets: Int = 8): Unit = {
-    val s = corpus.sparkSession
-    // drop the _tmp twins too (review finding): a rebuild over an
-    // artifact whose delete/compact crashed after completing its tmp
-    // generation must not leave that stale generation for the next
-    // maintenance op's heal preamble to ADOPT — it would silently
-    // revert the rebuild and resurrect deleted docs
-    Seq(name + "_postings", name + "_doclen", name + "_positions",
-        name + "_batches", name + "_stats")
-      .flatMap(t => Seq(t, t + "_tmp"))
-      .foreach(dropManaged(s, _))
+    Artifacts.dropTables(corpus.sparkSession, name, TextTables)
     textIndexBatch(corpus, name, numBuckets, "overwrite")
   }
+
+  /** A text index's tables, `_stats` (written last) last. */
+  private val TextTables = Seq("_postings", "_doclen", "_positions", "_batches", "_stats")
 
   /** APPEND a new doc batch into a [[writeTextIndex]] artifact — index
     * maintenance without a rebuild (the span-index shape,
@@ -898,10 +880,9 @@ object TextAnalysis {
 
   /** COMPACT a [[writeTextIndex]] artifact after heavy appends: each
     * table rewrites through its per-key re-aggregation into one file
-    * per bucket (the [[graft.operators.Similarity.compactAnnIndex]]
-    * machinery: the child session pins autoBucketedScan so the plan is
-    * read-bucket → write-bucket with zero Exchange), `_stats` collapses
-    * its per-batch rows to one. Answers are untouched — reads already
+    * per bucket ([[Artifacts.rewriteSession]] pins autoBucketedScan so
+    * the plan is read-bucket → write-bucket with zero Exchange),
+    * `_stats` collapses its per-batch rows to one. Answers are untouched — reads already
     * re-aggregate, so compaction is pure layout (spec asserts). */
   def compactTextIndex(s: SparkSession, name: String): Unit =
     swapTextGeneration(s, name, (p, d, ps, b) => (
@@ -915,58 +896,38 @@ object TextAnalysis {
       b))
 
   /** Shared maintenance tail: build a full new generation from the live
-    * tables through `transform`, write it as `_tmp` twins (stats LAST,
-    * derived from the already-written tmp doclen), swap with stats
-    * last, self-heal crashed swaps via the stats-tmp marker, refresh
-    * the caller's relation cache (child-session DDL leaves it stale —
-    * the compactAnnIndex lesson). */
+    * tables through `transform` in the rewrite session, write it as
+    * `_tmp` twins (stats LAST, derived from the already-written tmp
+    * doclen — the marker), and swap it in through one
+    * [[Artifacts.swap]], which first heals a crashed prior swap so the
+    * requested op runs on the healed live state. */
   private def swapTextGeneration(s0: SparkSession, name: String,
       transform: (DataFrame, DataFrame, DataFrame, DataFrame) =>
         (DataFrame, DataFrame, DataFrame, DataFrame)): Unit = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    val sfxs = Seq("_postings", "_doclen", "_positions", "_batches", "_stats")
-    // heal a crashed prior swap FIRST, then run the requested op on the
-    // healed live state: a surviving _stats_tmp marks a complete
-    // generation (written last) — adopt every surviving twin; without
-    // it any tmp remnants are half-built — discard them
-    if (s.catalog.tableExists(name + "_stats_tmp")) {
-      sfxs.foreach { sfx =>
-        if (s.catalog.tableExists(name + sfx + "_tmp")) {
-          s.sql(s"DROP TABLE IF EXISTS `$name$sfx`")
-          s.sql(s"ALTER TABLE `$name$sfx${"_tmp"}` RENAME TO `$name$sfx`")
-        }
-      }
-    }
-    sfxs.foreach(sfx => dropManaged(s, name + sfx + "_tmp"))
-    val numBuckets = s.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(name + "_postings"))
-      .bucketSpec.map(_.numBuckets).getOrElse(8)
-    val (p2, d2, ps2, b2) = transform(s.table(name + "_postings"),
-      s.table(name + "_doclen"), s.table(name + "_positions"),
-      s.table(name + "_batches"))
-    p2.write.mode("overwrite")
-      .bucketBy(numBuckets, "term").sortBy("term")
-      .saveAsTable(name + "_postings_tmp")
-    d2.write.mode("overwrite")
-      .bucketBy(numBuckets, "doc_id").sortBy("doc_id")
-      .saveAsTable(name + "_doclen_tmp")
-    ps2.write.mode("overwrite")
-      .bucketBy(numBuckets, "term").sortBy("term")
-      .saveAsTable(name + "_positions_tmp")
-    // the new generation is ONE committed batch: journal collapses to
-    // batch 0 and the rebuilt 1-row stats carries the same id — keeping
-    // the journal↔stats completeness invariant by construction
-    b2.select(lit(0L).as("batch_id"), col("doc_id"))
-      .write.mode("overwrite").saveAsTable(name + "_batches_tmp")
-    s.table(name + "_doclen_tmp")
-      .agg(lit(0L).as("batch_id"), count(lit(1)).as("n_docs"),
-        coalesce(sum(col("dl")), lit(0L)).as("dl_sum"))
-      .repartition(1).write.mode("overwrite").saveAsTable(name + "_stats_tmp")
-    sfxs.foreach { sfx =>
-      s.sql(s"DROP TABLE IF EXISTS `$name$sfx`")
-      s.sql(s"ALTER TABLE `$name$sfx${"_tmp"}` RENAME TO `$name$sfx`")
-      s0.catalog.refreshTable(name + sfx)
+    val s = Artifacts.rewriteSession(s0)
+    Artifacts.swap(s0, Artifacts.tmpPairs(name, TextTables)) {
+      val numBuckets = Artifacts.bucketsOf(s, name + "_postings")
+      val (p2, d2, ps2, b2) = transform(s.table(name + "_postings"),
+        s.table(name + "_doclen"), s.table(name + "_positions"),
+        s.table(name + "_batches"))
+      p2.write.mode("overwrite")
+        .bucketBy(numBuckets, "term").sortBy("term")
+        .saveAsTable(name + "_postings_tmp")
+      d2.write.mode("overwrite")
+        .bucketBy(numBuckets, "doc_id").sortBy("doc_id")
+        .saveAsTable(name + "_doclen_tmp")
+      ps2.write.mode("overwrite")
+        .bucketBy(numBuckets, "term").sortBy("term")
+        .saveAsTable(name + "_positions_tmp")
+      // the new generation is ONE committed batch: journal collapses to
+      // batch 0 and the rebuilt 1-row stats carries the same id — keeping
+      // the journal↔stats completeness invariant by construction
+      b2.select(lit(0L).as("batch_id"), col("doc_id"))
+        .write.mode("overwrite").saveAsTable(name + "_batches_tmp")
+      s.table(name + "_doclen_tmp")
+        .agg(lit(0L).as("batch_id"), count(lit(1)).as("n_docs"),
+          coalesce(sum(col("dl")), lit(0L)).as("dl_sum"))
+        .repartition(1).write.mode("overwrite").saveAsTable(name + "_stats_tmp")
     }
   }
 
@@ -998,27 +959,23 @@ object TextAnalysis {
           col("dl_sum").cast("double") / col("n_docs").cast("double"))
           .otherwise(lit(null).cast("double")).as("avgdl"))
 
-  /** Fingerprint-keyed shared text index (the sharedAnnIndex pattern —
-    * one build amortizes across every consumer in the session; a
+  /** Fingerprint-keyed shared text index ([[Artifacts.shared]] — one
+    * build amortizes across every consumer in the session; a
     * driver-side fixture regeneration changes the name and forces a
     * rebuild). The full variant spans every document (t12's statistics
     * universe); the corpus variant spans doc_id >= 10 (the hybrid
     * retrieval split). `_stats` is written last, so the completeness
     * probe catches a build that died mid-write. */
-  private val sharedTextLock = new Object
   private[graft] def sharedTextIndex(s: SparkSession, dir: String,
-      corpusOnly: Boolean): String = sharedTextLock.synchronized {
+      corpusOnly: Boolean): String = {
     val prefix = if (corpusOnly) "graft_shared_txt10_" else "graft_shared_txt_"
     val name = prefix + java.lang.Long.toHexString(
       Tables.fixtureFingerprint(dir, "documents.parquet"))
-    val complete = s.catalog.tableExists(name + "_postings") &&
-      s.catalog.tableExists(name + "_stats")
-    if (!complete) {
+    Artifacts.shared(s, name, Seq("_postings", "_stats")) {
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       writeTextIndex(if (corpusOnly) docs.filter(col("doc_id") >= 10) else docs,
         name)
     }
-    name
   }
 
   /** [[t12Bm25]] answered from a [[writeTextIndex]] artifact alone: the
@@ -1697,6 +1654,9 @@ object TextAnalysis {
 
   // ------------------------------------- incremental BPE vocabulary (t41)
 
+  /** A BPE word index's tables, `_stats` (the commit marker) last. */
+  private val BpeTables = Seq("_words", "_stats")
+
   /** Persist BPE's word-frequency table as a bucketed artifact — the
     * incremental-vocabulary story (round-8 verdict ask #7, the d17
     * count-index shape applied to words): merge learning is a pure
@@ -1711,8 +1671,7 @@ object TextAnalysis {
   def writeBpeWordIndex(corpus: DataFrame, name: String,
       numBuckets: Int = 8): Unit = {
     val s = corpus.sparkSession
-    Seq("_words", "_stats").flatMap(x => Seq(x, x + "_tmp"))
-      .foreach(sfx => dropManaged(s, name + sfx))
+    Artifacts.dropTables(s, name, BpeTables)
     bpeWordCounts(corpus)
       .select(col("word"), col("n"), lit(0L).as("batch_id"))
       .write.mode("overwrite")
@@ -1787,37 +1746,19 @@ object TextAnalysis {
     debris.size.toLong
   }
 
-  /** Crash-safe generation swap for the BPE tables (`_stats_tmp` last =
-    * complete-generation marker; the lmSwapGeneration shape, one count
-    * table wide). */
+  /** Crash-safe generation swap for the BPE tables: one
+    * [[Artifacts.swap]], `_stats_tmp` (written last) the marker — the
+    * lmSwapGeneration shape, one count table wide. */
   private def bpeSwapGeneration(s0: SparkSession, name: String,
       tWords: DataFrame => DataFrame,
       tStats: DataFrame => DataFrame): Unit = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    val sfxs = Seq("_words", "_stats")
-    if (s.catalog.tableExists(name + "_stats_tmp")) {
-      sfxs.foreach { sfx =>
-        if (s.catalog.tableExists(name + sfx + "_tmp")) {
-          s.sql(s"DROP TABLE IF EXISTS `$name$sfx`")
-          s.sql(s"ALTER TABLE `$name$sfx${"_tmp"}` RENAME TO `$name$sfx`")
-        }
-      }
-    }
-    sfxs.foreach(sfx => dropManaged(s, name + sfx + "_tmp"))
-    val nb = s.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(name + "_words"))
-      .bucketSpec.map(_.numBuckets).getOrElse(sys.error(
-        s"${name}_words has no bucketSpec — rewriting would silently " +
-          "change the layout (the round-13 ADVICE rule)"))
-    tWords(s.table(name + "_words")).write.mode("overwrite")
-      .bucketBy(nb, "word").sortBy("word").saveAsTable(name + "_words_tmp")
-    tStats(s.table(name + "_stats")).repartition(1)
-      .write.mode("overwrite").saveAsTable(name + "_stats_tmp")
-    sfxs.foreach { sfx =>
-      s.sql(s"DROP TABLE IF EXISTS `$name$sfx`")
-      s.sql(s"ALTER TABLE `$name$sfx${"_tmp"}` RENAME TO `$name$sfx`")
-      s0.catalog.refreshTable(name + sfx)
+    val s = Artifacts.rewriteSession(s0)
+    Artifacts.swap(s0, Artifacts.tmpPairs(name, BpeTables)) {
+      tWords(s.table(name + "_words")).write.mode("overwrite")
+        .bucketBy(Artifacts.bucketsOf(s, name + "_words"), "word").sortBy("word")
+        .saveAsTable(name + "_words_tmp")
+      tStats(s.table(name + "_stats")).repartition(1)
+        .write.mode("overwrite").saveAsTable(name + "_stats_tmp")
     }
   }
 
@@ -1860,8 +1801,7 @@ object TextAnalysis {
       import s.implicits._
       Seq((nVocab, incBests == fullBests))
         .toDF("n_vocab", "incremental_eq_full")
-    } finally Seq("_words", "_stats").flatMap(x => Seq(x, x + "_tmp"))
-      .foreach(sfx => s.sql(s"DROP TABLE IF EXISTS `$name$sfx`"))
+    } finally Artifacts.dropTables(s, name, BpeTables)
   }
 
   /** Driver gate for the BPE append's at-least-once contract (the t49
@@ -1907,11 +1847,13 @@ object TextAnalysis {
       Seq((docs.count(), midCrashCommitted, retried && redeliveryZero, finalEq))
         .toDF("n_docs", "midcrash_trains_committed_only",
           "redelivery_zero_rows", "final_eq_retrain")
-    } finally Seq("_words", "_stats").flatMap(x => Seq(x, x + "_tmp"))
-      .foreach(sfx => s.sql(s"DROP TABLE IF EXISTS `$name$sfx`"))
+    } finally Artifacts.dropTables(s, name, BpeTables)
   }
 
   // ------------------------------------ persisted bigram LM index (t48)
+
+  /** An LM index's tables, `_stats` (the commit marker) last. */
+  private val LmTables = Seq("_uni", "_big", "_stats")
 
   /** Persist the bigram LM's sufficient statistics as bucketed tables —
     * the text family's LAST un-persisted derived structure (round-13
@@ -1929,8 +1871,7 @@ object TextAnalysis {
   def writeLmIndex(corpus: DataFrame, name: String,
       numBuckets: Int = 8): Unit = {
     val s = corpus.sparkSession
-    Seq("_uni", "_big", "_stats").flatMap(x => Seq(x, x + "_tmp"))
-      .foreach(sfx => dropManaged(s, name + sfx))
+    Artifacts.dropTables(s, name, LmTables)
     val toks = corpus.select(tokens(col("text")).as("toks"))
     toks.select(explode(col("toks")).as("u"))
       .groupBy(col("u")).agg(count(lit(1)).as("cu"))
@@ -2033,39 +1974,20 @@ object TextAnalysis {
 
   /** Crash-safe generation swap for the three LM tables (the
     * swapEdgeGeneration shape): `_tmp` twins written with `_stats_tmp`
-    * LAST (complete-generation marker), rename in fixed order, adopt a
-    * crashed swap's complete tmp generation, refresh the caller's
-    * relation cache. Bucket count from the catalog, fail-loud. */
+    * LAST (the marker) and swapped through one [[Artifacts.swap]];
+    * bucket count from the catalog, fail-loud. */
   private def lmSwapGeneration(s0: SparkSession, name: String,
       tUni: DataFrame => DataFrame, tBig: DataFrame => DataFrame,
       tStats: DataFrame => DataFrame): Unit = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    val sfxs = Seq("_uni", "_big", "_stats")
-    if (s.catalog.tableExists(name + "_stats_tmp")) {
-      sfxs.foreach { sfx =>
-        if (s.catalog.tableExists(name + sfx + "_tmp")) {
-          s.sql(s"DROP TABLE IF EXISTS `$name$sfx`")
-          s.sql(s"ALTER TABLE `$name$sfx${"_tmp"}` RENAME TO `$name$sfx`")
-        }
-      }
-    }
-    sfxs.foreach(sfx => dropManaged(s, name + sfx + "_tmp"))
-    val nb = s.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(name + "_uni"))
-      .bucketSpec.map(_.numBuckets).getOrElse(sys.error(
-        s"${name}_uni has no bucketSpec — rewriting would silently " +
-          "change the layout (the round-13 ADVICE rule)"))
-    tUni(s.table(name + "_uni")).write.mode("overwrite")
-      .bucketBy(nb, "u").sortBy("u").saveAsTable(name + "_uni_tmp")
-    tBig(s.table(name + "_big")).write.mode("overwrite")
-      .bucketBy(nb, "g").sortBy("g").saveAsTable(name + "_big_tmp")
-    tStats(s.table(name + "_stats")).repartition(1)
-      .write.mode("overwrite").saveAsTable(name + "_stats_tmp")
-    sfxs.foreach { sfx =>
-      s.sql(s"DROP TABLE IF EXISTS `$name$sfx`")
-      s.sql(s"ALTER TABLE `$name$sfx${"_tmp"}` RENAME TO `$name$sfx`")
-      s0.catalog.refreshTable(name + sfx)
+    val s = Artifacts.rewriteSession(s0)
+    Artifacts.swap(s0, Artifacts.tmpPairs(name, LmTables)) {
+      val nb = Artifacts.bucketsOf(s, name + "_uni")
+      tUni(s.table(name + "_uni")).write.mode("overwrite")
+        .bucketBy(nb, "u").sortBy("u").saveAsTable(name + "_uni_tmp")
+      tBig(s.table(name + "_big")).write.mode("overwrite")
+        .bucketBy(nb, "g").sortBy("g").saveAsTable(name + "_big_tmp")
+      tStats(s.table(name + "_stats")).repartition(1)
+        .write.mode("overwrite").saveAsTable(name + "_stats_tmp")
     }
   }
 
@@ -2147,20 +2069,15 @@ object TextAnalysis {
       score: DataFrame): DataFrame =
     lmScoreWith(lmUniCounts(s, name), lmBigCounts(s, name), score)
 
-  /** Fingerprint-keyed shared LM artifact (the sharedAffinityIndex
-    * pattern): one corpus-sized training per fixture, every t33/t34
-    * call serves the tables. `_big` exists ⇒ the build completed
-    * (written last); a crashed build rebuilds from scratch. */
-  private val lmLock = new Object
-  private[graft] def sharedLmIndex(s: SparkSession, dir: String): String =
-    lmLock.synchronized {
-      val name = "graft_shared_lm_" + java.lang.Long.toHexString(docsFp(dir))
-      val complete = s.catalog.tableExists(name + "_uni") &&
-        s.catalog.tableExists(name + "_big") &&
-        s.catalog.tableExists(name + "_stats")
-      if (!complete) writeLmIndex(Tables.documents(s, dir), name)
-      name
-    }
+  /** Fingerprint-keyed shared LM artifact ([[Artifacts.shared]]): one
+    * corpus-sized training per fixture, every t33/t34 call serves the
+    * tables. `_stats` exists ⇒ the build completed (written last); a
+    * crashed build rebuilds from scratch. */
+  private[graft] def sharedLmIndex(s: SparkSession, dir: String): String = {
+    val name = "graft_shared_lm_" + java.lang.Long.toHexString(docsFp(dir))
+    Artifacts.shared(s, name, LmTables)(
+      writeLmIndex(Tables.documents(s, dir), name))
+  }
 
   /** Driver gate for the persisted LM (the g16/g12 rule — served ≡ a
     * FRESH inline recomputation covers the artifact; plus the full
@@ -2211,9 +2128,7 @@ object TextAnalysis {
         // answers must not move (the read views already re-aggregate)
         compactLmIndex(s, tn)
         (appEq, retEq, restEq)
-      } finally Seq("_uni", "_big", "_stats")
-        .flatMap(x => Seq(x, x + "_tmp"))
-        .foreach(sfx => s.sql(s"DROP TABLE IF EXISTS `$tn$sfx`"))
+      } finally Artifacts.dropTables(s, tn, LmTables)
     import s.implicits._
     Seq((nVocab, nBigrams, servedEq, appendEq, retractEq, compactEq))
       .toDF("n_vocab", "n_bigrams", "served_eq_inline",
@@ -2278,9 +2193,7 @@ object TextAnalysis {
       Seq((docs.count(), midCrashCommitted, retried && redeliveryZero, finalEq))
         .toDF("n_docs", "midcrash_reads_committed_only",
           "redelivery_zero_rows", "final_eq_rebuild")
-    } finally Seq("_uni", "_big", "_stats")
-      .flatMap(x => Seq(x, x + "_tmp"))
-      .foreach(sfx => s.sql(s"DROP TABLE IF EXISTS `$name$sfx`"))
+    } finally Artifacts.dropTables(s, name, LmTables)
   }
 
   /** BPE ENCODING — [[t28BpeMerges]]'s consumer: tokenize the corpus

@@ -306,6 +306,18 @@ class PlanShapeSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
+  test("q83: the recursive CTE's child session plans under the caller's runtime conf") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    // q83 builds in a newSession() child so its raised recursion limit
+    // stays scoped; a runtime AQE-off on the caller must still reach it,
+    // or graft.Plans and the plan pins see the adaptive wrapper
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val exec = Relational.q83RecursiveCte(spark, sf).queryExecution.executedPlan
+      assert(exec.collect { case a: AdaptiveSparkPlanExec => a }.isEmpty, exec.toString)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
   test("q54: as-of with tolerance is one data shuffle + one window — no nested-loop range join") {
     // The as-of family's scale contract (VERDICT r4 watch-list): the
     // union+window formulation must plan exactly one hash-partitioned

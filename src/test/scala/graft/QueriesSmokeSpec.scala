@@ -74,15 +74,21 @@ class QueriesSmokeSpec extends SparkSpec {
       .iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
   }
 
-  /** Whether a line of `p` outside a comment matches `re`. */
-  private def codeMatches(p: java.nio.file.Path, re: scala.util.matching.Regex): Boolean = {
+  /** The 1-based numbers of `p`'s lines outside a comment that match `re`. */
+  private def codeLines(p: java.nio.file.Path, re: scala.util.matching.Regex): Seq[Int] = {
     import scala.jdk.CollectionConverters._
-    java.nio.file.Files.readAllLines(p).asScala.exists { line =>
-      val t = line.trim
-      !t.startsWith("//") && !t.startsWith("*") && !t.startsWith("/*") &&
-        re.findFirstIn(line).isDefined
+    java.nio.file.Files.readAllLines(p).asScala.toSeq.zipWithIndex.collect {
+      case (line, i) if {
+        val t = line.trim
+        !t.startsWith("//") && !t.startsWith("*") && !t.startsWith("/*") &&
+          re.findFirstIn(line).isDefined
+      } => i + 1
     }
   }
+
+  /** Whether a line of `p` outside a comment matches `re`. */
+  private def codeMatches(p: java.nio.file.Path, re: scala.util.matching.Regex): Boolean =
+    codeLines(p, re).nonEmpty
 
   test("Verify's status record: per-query ok/failed and seconds, escaped errors") {
     val json = Verify.statusJson(Seq(
@@ -144,6 +150,19 @@ class QueriesSmokeSpec extends SparkSpec {
       }
     assert(offenders.isEmpty,
       s"SparkSession-keyed map outside GateMemo (${offenders.size}): ${offenders.sorted.mkString(", ")}")
+  }
+
+  test("only Artifacts renames a table or deletes a warehouse location in src/main") {
+    // persisted tables go through graft.operators.Artifacts: one swap
+    // with one heal rule, one drop that clears the location — hand-rolled
+    // copies are how nine swaps drifted into two crash-heal rules
+    val offenders = for {
+      p <- mainSources.filterNot(_.endsWith("graft/operators/Artifacts.scala"))
+      rule <- Seq("RENAME TO", "spark.sql.warehouse.dir")
+      line <- codeLines(p, java.util.regex.Pattern.quote(rule).r)
+    } yield s"$rule $p:$line"
+    assert(offenders.isEmpty,
+      s"table renames or warehouse locations outside Artifacts (${offenders.size}): ${offenders.sorted.mkString(", ")}")
   }
 
   test("entry() returns rows") {
