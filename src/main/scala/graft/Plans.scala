@@ -95,6 +95,33 @@ object Plans {
     "t51_pmi_collocations" -> "PMI collocation extraction: bigram/unigram counts as two map-side-combined aggs over one corpus scan each, then VOCABULARY-sized frames only — unigram joins shuffle on the word key (never broadcast: a 100 TB vocabulary outgrows it), N as a broadcast 1-row cross join, lift_e6 staged in DECIMAL(38,0)",
     "g28_link_prediction" -> "link prediction (common-neighbors + Jaccard): wedge self-join of the src-bucketed edge table on its bucket key — both sides, the degree agg, and the hub-cap semi-join Exchange-free (pinned); deg > 64 centers excluded bounding wedges to cap·|E|; one documented (u,v) re-key for the non-edge anti-join; top-100 via TakeOrderedAndProject")
 
+  /** `text` with the values that change from run to run masked, so two
+    * runs of the same code write the same PLANS.md and a diff shows only
+    * real plan changes. Within each `## ` section, expression ids
+    * (`#15425L`), exchange plan ids (`plan_id=37`) and lambda variable
+    * numbers (`lambda x_12`) are renumbered in order of first
+    * appearance, so equal ids stay equal and distinct ones distinct;
+    * RDD ids, Scala source lines (each localCheckpoint call site) and
+    * lambda object addresses are masked. Idempotent. */
+  def normalize(text: String): String =
+    text.split("(?=\n## )").map { section =>
+      val masked = Seq(
+        "RDD\\[\\d+\\]".r -> "RDD[_]",
+        "(\\w+\\.scala):\\d+".r -> "$1:_",
+        "Lambda(\\$\\d+)?/0x\\p{XDigit}+@\\p{XDigit}+".r -> "Lambda"
+      ).foldLeft(section) { case (t, (re, to)) => re.replaceAllIn(t, to) }
+      Seq("(#)(\\d+)".r, "(plan_id=)(\\d+)".r, "(lambda \\w+?_)(\\d+)".r)
+        .foldLeft(masked)(renumber)
+    }.mkString
+
+  /** Replaces group 2 of each `re` match by its key's first-appearance
+    * index in `text`, keeping group 1. */
+  private def renumber(text: String, re: scala.util.matching.Regex): String = {
+    val ids = scala.collection.mutable.Map.empty[String, Int]
+    re.replaceAllIn(text, m => scala.util.matching.Regex.quoteReplacement(
+      m.group(1) + ids.getOrElseUpdate(m.group(2), ids.size)))
+  }
+
   def main(args: Array[String]): Unit = {
     val spark = GraftSession("graft-plans")
     // a runtime override: builders' newSession() children copy the
@@ -113,7 +140,7 @@ object Plans {
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       sb.append(s"\n## $name — $note\n\n```\n$plan```\n")
     }
-    Files.writeString(Paths.get("PLANS.md"), sb.toString)
+    Files.writeString(Paths.get("PLANS.md"), normalize(sb.toString))
     println(s"wrote PLANS.md (${Flagships.size} plans)")
     spark.stop()
   }

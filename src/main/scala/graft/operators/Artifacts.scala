@@ -3,7 +3,7 @@ package graft.operators
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 
 /** THE persisted-artifact module. The operators keep their long-lived
@@ -16,9 +16,11 @@ import org.apache.spark.sql.catalyst.TableIdentifier
   *  - [[dropManaged]]: a drop removes the catalog entry AND the
   *    warehouse directory; [[dropTables]] drops tmp twins with their
   *    tables;
-  *  - [[bucketsOf]]: a rewrite keeps the catalog's bucket count;
+  *  - [[bucketsOf]]: a write keeps the catalog's bucket count;
   *  - [[rewriteSession]]: a rewrite reads through the bucketed scan;
   *  - [[swap]]: one crash-safe generation swap, one heal rule;
+  *  - [[rewrite]]: a family's tables rewritten in place through one
+  *    swap, each keeping its catalog bucket spec;
   *  - [[shared]]: fingerprint-named artifacts, probed on every call,
   *    single flight per name.
   * This is the only file in src/main that renames a table or touches a
@@ -37,10 +39,13 @@ private[graft] object Artifacts {
     if (fs.exists(loc)) fs.delete(loc, true)
   }
 
-  /** The (tmp, live) pairs [[swap]] takes for `name`'s tables `sfxs`:
-    * each live table's tmp twin is `<live>_tmp`. */
-  def tmpPairs(name: String, sfxs: Seq[String]): Seq[(String, String)] =
-    sfxs.map(x => (name + x + "_tmp", name + x))
+  /** The tmp twin of a live table: where a swap writes its next
+    * generation. */
+  def tmpOf(live: String): String = live + "_tmp"
+
+  /** The (tmp, live) pairs [[swap]] takes for `name`'s tables `sfxs`. */
+  private def tmpPairs(name: String, sfxs: Seq[String]): Seq[(String, String)] =
+    sfxs.map(x => (tmpOf(name + x), name + x))
 
   /** Drop `name`'s tables `sfxs` and their tmp twins. A full rebuild
     * starts here: a complete tmp generation that a crashed swap left
@@ -52,10 +57,11 @@ private[graft] object Artifacts {
       dropManaged(s, tmp)
     }
 
-  /** The bucket count the catalog records for `table`. A rewrite must
-    * keep it: a caller-supplied or guessed count would silently change
-    * the layout that later appends' matching bucketBy relies on, so a
-    * table without a bucket spec fails loudly instead of defaulting. */
+  /** The bucket count the catalog records for `table`, for a write that
+    * must match the live layout ([[rewrite]] reads the whole spec): a
+    * caller-supplied or guessed count would silently change the layout
+    * that later appends' matching bucketBy relies on, so a table without
+    * a bucket spec fails loudly instead of defaulting. */
   def bucketsOf(s: SparkSession, table: String): Int =
     s.sessionState.catalog.getTableMetadata(TableIdentifier(table))
       .bucketSpec.map(_.numBuckets).getOrElse(sys.error(
@@ -70,7 +76,7 @@ private[graft] object Artifacts {
     * still eliding the repartition, and every task then holds a mix of
     * buckets: n_tasks × n_buckets files (measured). The child shares the
     * catalog; the caller's conf is untouched. */
-  def rewriteSession(s: SparkSession): SparkSession = {
+  private def rewriteSession(s: SparkSession): SparkSession = {
     val child = s.newSession()
     child.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     child
@@ -112,6 +118,36 @@ private[graft] object Artifacts {
       if (exists(tmp)) {
         rename(caller, tmp, live)
         caller.catalog.refreshTable(live)
+      }
+    }
+  }
+
+  /** Rewrite `name`'s tables `sfxs` in place, as one [[swap]] with the
+    * last suffix as the marker. For each suffix in order, `next(session,
+    * sfx)` gives the table's new rows, read in a [[rewriteSession]], and
+    * they are written as its tmp twin with the live table's bucket spec
+    * from the catalog (count, bucket and sort columns): a rewrite never
+    * restates, guesses or changes a layout, and an unbucketed table (a
+    * `_stats` marker) stays unbucketed. A suffix keeps its live table
+    * when `next` returns None or the live table is absent (a
+    * partial-family ANN build). `next` runs after the heal and may read
+    * a tmp twin written before it ([[tmpOf]]), so a marker can be
+    * derived from the new generation. A `next` that keeps the bucketed
+    * scan's partitioning writes one file per bucket. */
+  def rewrite(caller: SparkSession, name: String, sfxs: Seq[String])(
+      next: (SparkSession, String) => Option[DataFrame]): Unit = {
+    val s = rewriteSession(caller)
+    swap(caller, tmpPairs(name, sfxs)) {
+      for (sfx <- sfxs if caller.catalog.tableExists(name + sfx);
+           rows <- next(s, sfx)) {
+        val w = rows.write.mode("overwrite")
+        caller.sessionState.catalog.getTableMetadata(TableIdentifier(name + sfx))
+          .bucketSpec.fold(w) { b =>
+            val bw = w.bucketBy(b.numBuckets, b.bucketColumnNames.head,
+              b.bucketColumnNames.tail: _*)
+            if (b.sortColumnNames.isEmpty) bw
+            else bw.sortBy(b.sortColumnNames.head, b.sortColumnNames.tail: _*)
+          }.saveAsTable(tmpOf(name + sfx))
       }
     }
   }

@@ -1405,48 +1405,35 @@ object Dedup {
     * and a redundant verify per matching delta doc), keep the min rep
     * id, union the member lists, and rebuild the band table from the
     * merged reps' stored shingle sets — the original texts are never
-    * needed. Writes go to `_tmp` tables first, then swap via rename, so
-    * nothing reads and overwrites the same location (writing a table
-    * from a plan that scans it fails in Spark). Everything is
-    * distributed: the merge is a groupBy on the shingle-set key, the
-    * band rebuild is [[bandRows]] over the merged frame. */
-  def compactCorpusIndex(s: SparkSession, name: String,
-      numBuckets: Int = 8): Unit = {
+    * needed. Everything is distributed: the merge is a groupBy on the
+    * shingle-set key, the band rebuild is [[bandRows]] over the merged
+    * frame. */
+  def compactCorpusIndex(s: SparkSession, name: String): Unit =
     // merge key: the shingle SET. Arrays from array_distinct preserve
     // first-occurrence order, which differs between docs whose token
     // orders differ — sort for a canonical set key.
     // Storing the canonical sorted set is safe: minhash signatures and
     // the intersect/Jaccard verify are set-level, order-invariant.
-    def merged = s.table(name + "_reps")
+    rewriteCorpusIndex(s, name)(_.table(name + "_reps")
       .groupBy(sort_array(col("sh")).as("shKey"))
       .agg(min(col("rep")).as("rep"),
         sort_array(flatten(collect_list(col("members")))).as("members"))
-      .select(col("rep"), col("members"), col("shKey").as("sh"))
-    swapIndexTables(s, name, merged, numBuckets)
-  }
+      .select(col("rep"), col("members"), col("shKey").as("sh")))
 
-  /** Write a (rep, members, sh) frame — read from the live tables, so
-    * built only after the swap's heal — as the band/rep table pair under
-    * `_tmp` names (`_reps_tmp` last, the marker), then swap live via one
-    * [[Artifacts.swap]] (nothing reads and overwrites the same location —
-    * writing a table from a plan that scans it fails in Spark; ALTER
-    * TABLE RENAME preserves the bucket spec). A crashed swap self-heals
-    * on the next call. Shared tail of [[compactCorpusIndex]] and
-    * [[deleteFromCorpusIndex]]. */
-  private def swapIndexTables(s: SparkSession, name: String,
-      repShFrame: => DataFrame, numBuckets: Int): Unit =
-    Artifacts.swap(s, Artifacts.tmpPairs(name, CorpusTables)) {
-      val repSh = repShFrame.cache()
-      try {
-        corpusBandIndex(repSh, s)
-          .write.mode("overwrite")
-          .bucketBy(numBuckets, "band", "key").sortBy("band", "key")
-          .saveAsTable(name + "_bands_tmp")
-        repSh.write.mode("overwrite")
-          .bucketBy(numBuckets, "rep").sortBy("rep")
-          .saveAsTable(name + "_reps_tmp")
-      } finally repSh.unpersist()
-    }
+  /** Shared tail of [[compactCorpusIndex]] and [[deleteFromCorpusIndex]]:
+    * one [[Artifacts.rewrite]] of the band/rep pair, both derived from
+    * ONE cached (rep, members, sh) frame that `repSh` reads from the
+    * live tables — built on the first table's write, so after the heal.
+    * A crashed rewrite heals on the next call. */
+  private def rewriteCorpusIndex(s: SparkSession, name: String)(
+      repSh: SparkSession => DataFrame): Unit = {
+    var cached: Option[DataFrame] = None
+    try Artifacts.rewrite(s, name, CorpusTables) { (rs, sfx) =>
+      val r = cached.getOrElse(repSh(rs).cache())
+      cached = Some(r)
+      Some(if (sfx == "_bands") corpusBandIndex(r, s) else r)
+    } finally cached.foreach(_.unpersist())
+  }
 
   /** DELETE docs from a [[writeCorpusIndex]] artifact — the
     * right-to-be-forgotten maintenance op beside append and compact.
@@ -1463,19 +1450,18 @@ object Dedup {
     * simple full rebuild of the small artifact is the robust choice).
     * The deletion set arrives as a DataFrame of `doc_id` — a large
     * request batch broadcasts into the anti-join rather than becoming a
-    * plan literal. Same tmp-write + rename swap (and crash recovery) as
+    * plan literal. Same rewrite (and crash recovery) as
     * [[compactCorpusIndex]]. */
   def deleteFromCorpusIndex(s: SparkSession, name: String,
-      deleted: DataFrame, numBuckets: Int = 8): Unit = {
+      deleted: DataFrame): Unit = {
     val del = deleted.select(col("doc_id").as("_del_id"))
-    def kept = s.table(name + "_reps")
+    rewriteCorpusIndex(s, name)(_.table(name + "_reps")
       .select(col("rep").as("orig"), col("sh"), explode(col("members")).as("m"))
       .join(broadcast(del), col("m") === col("_del_id"), "left_anti")
       .groupBy(col("orig"))
       .agg(first(col("sh")).as("sh"),
         sort_array(collect_list(col("m"))).as("members"))
-      .select(element_at(col("members"), 1).as("rep"), col("members"), col("sh"))
-    swapIndexTables(s, name, kept, numBuckets)
+      .select(element_at(col("members"), 1).as("rep"), col("members"), col("sh")))
   }
 
   /** Capped bucket-form band index over a [[repShingleIndex]] frame —
@@ -1709,20 +1695,13 @@ object Dedup {
     * in [[Artifacts.rewriteSession]] so the bucketed read's
     * HashPartitioning(gh) satisfies both the net agg's clustering AND
     * the bucketed write — zero Exchange, one file per bucket. One
-    * [[Artifacts.swap]] with crash recovery; bucket count read from the
-    * catalog ([[Artifacts.bucketsOf]]). */
-  def compactSpanIndex(s0: SparkSession, name: String): Unit = {
-    val s = Artifacts.rewriteSession(s0)
-    val live = name + "_grams"
-    Artifacts.swap(s0, Artifacts.tmpPairs(name, Seq("_grams"))) {
-      s.table(live)
+    * [[Artifacts.rewrite]]: crash recovery, catalog bucket spec. */
+  def compactSpanIndex(s: SparkSession, name: String): Unit =
+    Artifacts.rewrite(s, name, Seq("_grams")) { (rs, sfx) =>
+      Some(rs.table(name + sfx)
         .groupBy(col("gh")).agg(sum(col("n_occ")).as("n_occ"))
-        .filter(col("n_occ") =!= 0L)
-        .write.mode("overwrite")
-        .bucketBy(Artifacts.bucketsOf(s, live), "gh").sortBy("gh")
-        .saveAsTable(live + "_tmp")
+        .filter(col("n_occ") =!= 0L))
     }
-  }
 
   /** Driver gate for incremental span dedup: the d13 fixture split
     * (doc_id % 10 = 0 as the arriving batch) run through the PERSISTED

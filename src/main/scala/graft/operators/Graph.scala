@@ -552,8 +552,8 @@ object Graph {
     edges.write.mode("overwrite")
       .bucketBy(numBuckets, "src").sortBy("src")
       .saveAsTable(name + "_edges")
-    s.table(name + "_edges").agg(count(lit(1)).as("n_edges"))
-      .repartition(1).write.mode("overwrite").saveAsTable(name + "_stats")
+    edgeStats(s.table(name + "_edges"))
+      .write.mode("overwrite").saveAsTable(name + "_stats")
   }
 
   /** APPEND new edges into a [[writeEdgeIndex]] artifact — index
@@ -581,8 +581,8 @@ object Graph {
       .write.mode("append")
       .bucketBy(numBuckets, "src").sortBy("src")
       .saveAsTable(name + "_edges")
-    s.table(name + "_edges").agg(count(lit(1)).as("n_edges"))
-      .repartition(1).write.mode("append").saveAsTable(name + "_stats")
+    edgeStats(s.table(name + "_edges"))
+      .write.mode("append").saveAsTable(name + "_stats")
   }
 
   /** DELETE nodes from the artifact (right-to-be-forgotten for a
@@ -592,7 +592,7 @@ object Graph {
   def deleteFromEdgeIndex(s: SparkSession, name: String,
       nodes: DataFrame): Unit = {
     val del = broadcast(nodes.select(col("node").as("_del_id")))
-    swapEdgeGeneration(s, name, e =>
+    rewriteEdgeIndex(s, name)(e =>
       e.join(del, col("src") === col("_del_id"), "left_anti")
         .join(del, col("dst") === col("_del_id"), "left_anti"))
   }
@@ -602,28 +602,25 @@ object Graph {
     * Exchange-free in the pinned child session since HashPartitioning
     * on `src` clusters every (src, dst) group). */
   def compactEdgeIndex(s: SparkSession, name: String): Unit =
-    swapEdgeGeneration(s, name,
+    rewriteEdgeIndex(s, name)(
       e => e.groupBy(col("src"), col("dst")).agg(count(lit(1)).as("_n"))
         .select(col("src"), col("dst")))
 
   private def edgeBuckets(s: SparkSession, name: String): Int =
     Artifacts.bucketsOf(s, name + "_edges")
 
-  /** Maintenance tail: the new generation's `_edges` and `_stats` (LAST,
-    * the marker) written by the child session through one
-    * [[Artifacts.swap]]. */
-  private def swapEdgeGeneration(s0: SparkSession, name: String,
-      transform: DataFrame => DataFrame): Unit = {
-    val s = Artifacts.rewriteSession(s0)
-    Artifacts.swap(s0, Artifacts.tmpPairs(name, EdgeTables)) {
-      transform(s.table(name + "_edges"))
-        .write.mode("overwrite")
-        .bucketBy(edgeBuckets(s, name), "src").sortBy("src")
-        .saveAsTable(name + "_edges_tmp")
-      s.table(name + "_edges_tmp").agg(count(lit(1)).as("n_edges"))
-        .repartition(1).write.mode("overwrite").saveAsTable(name + "_stats_tmp")
+  /** The 1-row `_stats` sidecar of an edge set. */
+  private def edgeStats(edges: DataFrame): DataFrame =
+    edges.agg(count(lit(1)).as("n_edges")).repartition(1)
+
+  /** Maintenance tail: one [[Artifacts.rewrite]] of `_edges` through
+    * `edges`, then `_stats` (the marker) counted off the new edges. */
+  private def rewriteEdgeIndex(s: SparkSession, name: String)(
+      edges: DataFrame => DataFrame): Unit =
+    Artifacts.rewrite(s, name, EdgeTables) { (rs, sfx) => Some(
+      if (sfx == "_edges") edges(rs.table(name + sfx))
+      else edgeStats(rs.table(Artifacts.tmpOf(name + "_edges"))))
     }
-  }
 
   /** Fingerprint-keyed shared edge index ([[Artifacts.shared]] — one
     * build amortizes across every consumer in the session; a
@@ -696,8 +693,8 @@ object Graph {
     weightedEdges(s, dir).write.mode("overwrite")
       .bucketBy(numBuckets, "src").sortBy("src")
       .saveAsTable(name + "_edges")
-    s.table(name + "_edges").agg(count(lit(1)).as("n_edges"))
-      .repartition(1).write.mode("overwrite").saveAsTable(name + "_stats")
+    edgeStats(s.table(name + "_edges"))
+      .write.mode("overwrite").saveAsTable(name + "_stats")
   }
 
   /** [[g07ShortestPaths]] answered from a [[writeWeightedEdgeIndex]]
@@ -1021,16 +1018,6 @@ object Graph {
   private def cooccurEdges(s: SparkSession, name: String): DataFrame =
     s.table(name + "_edges").filter(col("src") < col("dst"))
       .select(col("src").as("u"), col("dst").as("v"))
-
-  /** The triangle operators answered from an arbitrary persisted
-    * co-occurrence edge table, UNMEMOIZED — the fact tables never
-    * appear. The registered g10/g11 serve the same shape through
-    * [[sharedTriangleCore]]'s memo; these stay the honest
-    * rebuild-per-call API for non-shared artifacts. */
-  def trianglesIndexed(s: SparkSession, name: String): DataFrame =
-    trianglesOn(cooccurEdges(s, name))
-  def clusteringCoeffIndexed(s: SparkSession, name: String): DataFrame =
-    clusteringCoeffOn(cooccurEdges(s, name))
 
   /** Driver gate for the co-occurrence edge artifact (the g04 pattern):
     * one row asserting both indexed triangle operators are

@@ -608,8 +608,7 @@ object Multimodal {
         .filter(col("sim_e6") >= 999000L).collect().map(_.getLong(1)).toSet
       val emptyCorpus = nImages == 0L
       val routes = emptyCorpus || hits() == Set(firstId, firstId + 50000L)
-      Similarity.deleteFromAnnIndex(s, name, Seq(firstId).toDF("vec_id"),
-        numBuckets = 4)
+      Similarity.deleteFromAnnIndex(s, name, Seq(firstId).toDF("vec_id"))
       val forgets = emptyCorpus || hits() == Set(firstId + 50000L)
       Similarity.appendToAnnIndex(s,
         reup.select((col("vec_id") + 10000L).as("vec_id"), col("emb"), col("nrm")),

@@ -853,47 +853,29 @@ object Similarity {
 
   /** DELETE vectors from a [[writeAnnIndex]] artifact — the
     * right-to-be-forgotten maintenance op for the vector store. Each
-    * table that exists (`_cells`/`_srp`/`_pq`) is rewritten without the
-    * deleted vec_ids via a broadcast anti-join (the deletion set is a
-    * DataFrame of `vec_id`, never a plan literal) through
-    * [[annSwap]]; a crashed swap self-heals on the next call to one
-    * whole generation, exactly like
+    * family table that exists (`_srp`/`_pq`/`_cells`) is rewritten
+    * without the deleted vec_ids via a broadcast anti-join (the deletion
+    * set is a DataFrame of `vec_id`, never a plan literal) through one
+    * [[Artifacts.rewrite]]; a crashed rewrite heals on the next call to
+    * one whole generation, exactly like
     * [[graft.operators.Dedup.deleteFromCorpusIndex]]. The `_side`
     * sidecar is deliberately untouched: centroids and codebooks are the
     * index's FROZEN quantization state (the append contract), so
     * routing stays consistent for every surviving vector — re-train
     * with a [[writeAnnIndex]] rebuild when drift from deletions
     * accumulates. */
-  def deleteFromAnnIndex(s: SparkSession, name: String, deleted: DataFrame,
-      numBuckets: Int = 8): Unit = {
-    val del = deleted.select(col("vec_id").as("_del_id"))
-    annSwap(s, s, name) { (live, _) =>
-      (s.table(live)
-        .join(broadcast(del), col("vec_id") === col("_del_id"), "left_anti"),
-        numBuckets)
+  def deleteFromAnnIndex(s: SparkSession, name: String, deleted: DataFrame): Unit = {
+    val del = broadcast(deleted.select(col("vec_id").as("_del_id")))
+    Artifacts.rewrite(s, name, AnnFamilies) { (rs, sfx) =>
+      Some(rs.table(name + sfx).join(del, col("vec_id") === col("_del_id"), "left_anti"))
     }
   }
 
-  /** The ANN families' generation swap: one [[Artifacts.swap]] over
-    * `_srp`, `_pq` and `_cells` (mandatory, so the marker — written and
-    * renamed last). `rewrite(live, bucketCol)` gives each live family's
-    * new rows and bucket count, read in session `s`; families the
-    * index lacks are skipped, and `_side` is never touched. Every family
-    * is written before any is swapped, so a crash between two families
-    * can never leave them disagreeing. */
-  private def annSwap(caller: SparkSession, s: SparkSession, name: String)(
-      rewrite: (String, String) => (DataFrame, Int)): Unit = {
-    val specs = Seq(("_srp", "vec_id"), ("_pq", "cell"), ("_cells", "cell"))
-    Artifacts.swap(caller, Artifacts.tmpPairs(name, specs.map(_._1))) {
-      specs.filter(p => s.catalog.tableExists(name + p._1)).foreach {
-        case (sfx, bucketCol) =>
-          val (rows, numBuckets) = rewrite(name + sfx, bucketCol)
-          rows.write.mode("overwrite")
-            .bucketBy(numBuckets, bucketCol).sortBy(bucketCol)
-            .saveAsTable(name + sfx + "_tmp")
-      }
-    }
-  }
+  /** The family tables a rewrite covers: `_cells` is mandatory, so it
+    * is the marker (written and renamed last); `_side` is never
+    * rewritten. Every family is written before any is swapped, so a
+    * crash between two families can never leave them disagreeing. */
+  private val AnnFamilies = Seq("_srp", "_pq", "_cells")
 
   /** COMPACT a [[writeAnnIndex]] artifact after heavy
     * [[appendToAnnIndex]] use — the file-count maintenance op beside
@@ -901,29 +883,14 @@ object Similarity {
     * twin for the vector store): every append lands NEW bucket files
     * beside the old ones, and after months of appends a 100-TB
     * deployment reads thousands of small files per bucket. Each live
-    * table (`_cells`/`_srp`/`_pq`) is rewritten into exactly ONE file
-    * per bucket — the frame is repartitioned on its bucket key with the
-    * table's own bucket count before the bucketed write, and Spark's
-    * bucket-id assignment uses the same hash, so every task holds
-    * exactly one bucket — through the tmp-write + rename swap that
-    * preserves the bucket spec; a crashed swap self-heals on the next
-    * call ([[annSwap]], the [[deleteFromAnnIndex]] recovery rule). Rows
-    * and the `_side` sidecar are untouched: compaction is pure layout,
-    * and the spec asserts per-family row identity plus a strict
-    * file-count drop. Bucket counts come from the CATALOG
-    * ([[Artifacts.bucketsOf]]), never a parameter. */
-  def compactAnnIndex(s0: SparkSession, name: String): Unit = {
-    // read-bucket → write-bucket in the rewrite session: one file per
-    // bucket, zero Exchange
-    val s = Artifacts.rewriteSession(s0)
-    annSwap(s0, s, name) { (live, bucketCol) =>
-      val numBuckets = Artifacts.bucketsOf(s, live)
-      // the repartition is belt-and-braces: redundant (and planner-
-      // removed) over the bucketed scan, alignment-restoring if a
-      // future caller feeds a non-bucketed frame through this path
-      (s.table(live).repartition(numBuckets, col(bucketCol)), numBuckets)
-    }
-  }
+    * family table is rewritten as it is through one
+    * [[Artifacts.rewrite]], which reads it through the bucketed scan and
+    * writes exactly ONE file per bucket with the catalog's bucket spec.
+    * Rows and the `_side` sidecar are untouched: compaction is pure
+    * layout, and the spec asserts per-family row identity plus a strict
+    * file-count drop. */
+  def compactAnnIndex(s: SparkSession, name: String): Unit =
+    Artifacts.rewrite(s, name, AnnFamilies)((rs, sfx) => Some(rs.table(name + sfx)))
 
   /** RE-TRAIN a [[writeAnnIndex]] artifact in place — the drift-recovery
     * op closing the append contract's loop: appends encode against
@@ -934,8 +901,8 @@ object Similarity {
     * mode). Re-train rebuilds centroids, codebooks, signatures and
     * codes FROM THE INDEX'S OWN CURRENT CONTENTS (`_cells`, which
     * reflects every append and delete) into `<name>_rt_*` tmp tables,
-    * then swaps each live table — the [[deleteFromAnnIndex]] tmp-write
-    * + rename pattern, so a crashed swap self-heals on the next call.
+    * then swaps each live table through one [[Artifacts.swap]], so a
+    * crashed swap self-heals on the next call.
     * Family set and meta columns are derived from the live tables, so
     * a partial-family index re-trains only what it has. Because
     * [[refine]]'s means are order-invariant, the retrained artifact is

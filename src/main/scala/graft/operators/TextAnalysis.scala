@@ -168,7 +168,7 @@ object TextAnalysis {
     * overlap shapes). */
   private[graft] def gopherRepetition(docs: DataFrame): DataFrame = {
     // ONE cached tokenize pass serves all three legs (r15): the base
-    // stats, the 2-gram argmax explode, and dup3Coverage's 3-gram legs
+    // stats, the 2-gram argmax explode, and dup3CoverageToks's 3-gram legs
     // each re-ran tokens() over the corpus before (3 tokenize scans →
     // 1; query-scoped cache, harnesses clearCache after)
     val base = docs
@@ -216,20 +216,12 @@ object TextAnalysis {
   }
 
   /** (doc_id, cov) — word positions covered by any within-doc 3-gram
-    * occurring ≥ 2×: [[gopherRepetition]]'s coverage leg, shared with
-    * [[t34CurationPipeline]]'s repetition gate. Count + semi-join
-    * re-scan, linear in tokens. Docs with zero duplicated 3-grams have
-    * no row (callers left-join + coalesce). */
-  private[graft] def dup3Coverage(docs: DataFrame): DataFrame =
-    // stage toks as an attribute: shingles() references it repeatedly
-    // and an inlined tokens(text) would re-tokenize per reference (the
-    // t03/t04 staging lesson — measured 4-5× on this leg)
-    dup3CoverageToks(
-      docs.select(col("doc_id"), tokens(col("text")).as("toks")))
-
-  /** [[dup3Coverage]] over an already-tokenized (doc_id, toks) frame —
-    * the r15 entry point letting t30/t34 share ONE tokenize pass with
-    * their other legs instead of re-tokenizing the corpus here. */
+    * occurring ≥ 2× over an already-tokenized (doc_id, toks) frame:
+    * [[gopherRepetition]]'s coverage leg, shared with
+    * [[t34CurationPipeline]]'s repetition gate, so both share ONE
+    * tokenize pass with their other legs. Count + semi-join re-scan,
+    * linear in tokens. Docs with zero duplicated 3-grams have no row
+    * (callers left-join + coalesce). */
   private[graft] def dup3CoverageToks(tdocs: DataFrame): DataFrame = {
     // cached: referenced by both the ≥2 count and the coverage re-scan —
     // without it each reference re-explodes the corpus
@@ -383,8 +375,9 @@ object TextAnalysis {
       score: DataFrame): DataFrame = {
     val vocab = uni.groupBy().agg(count(lit(1)).as("v"))
     // tokens contain no whitespace, so the shingle's first word IS the
-    // conditioning prefix; toks staged as an attribute (re-tokenize-per-
-    // reference trap, see dup3Coverage)
+    // conditioning prefix; toks staged as an attribute: shingles()
+    // references it repeatedly, and an inlined tokens(text) would
+    // re-tokenize per reference (the t03/t04 staging lesson)
     val pos = score.select(col("doc_id"), tokens(col("text")).as("toks"))
       .select(col("doc_id"), explode(shingles(col("toks"), 2)).as("g"))
       .withColumn("u", substring_index(col("g"), " ", 1))
@@ -436,7 +429,7 @@ object TextAnalysis {
     // and every downstream result — is bit-identical)
     // cached WITH the staged toks (r15): the regex gate + tokenize ran
     // TWICE before — once as repOk's left side, once re-derived inside
-    // dup3Coverage's input — and dup3Coverage re-tokenized on top. One
+    // the coverage leg's input — and that leg re-tokenized on top. One
     // gated+tokenized pass now serves both consumers (query-scoped
     // cache; Verify/Bench clearCache after).
     val piiOk = docs.filter(
@@ -811,9 +804,10 @@ object TextAnalysis {
       val ok = broadcast(committed.select(col("batch_id").as("_ok_id")))
       def anti(df: DataFrame) =
         df.join(del, col("doc_id") === col("_del_id"), "left_anti")
-      swapTextGeneration(s, name, (p, d, ps, b) =>
-        (anti(p), anti(d), anti(ps),
-          b.join(ok, col("batch_id") === col("_ok_id"), "left_semi")))
+      rewriteTextIndex(s, name) { (sfx, t) =>
+        if (sfx == "_batches") t.join(ok, col("batch_id") === col("_ok_id"), "left_semi")
+        else anti(t)
+      }
     }
     excise.unpersist()
     n
@@ -865,17 +859,13 @@ object TextAnalysis {
     * `_stats` is REBUILT from the surviving doc lengths — one narrow
     * corpus-sized agg per maintenance op, which keeps the 1-row
     * read path for every query. The whole new generation swaps in
-    * with `_stats` LAST (the retrain marker rule: a surviving
-    * `_stats_tmp` marks a complete generation whose swap crashed, and
-    * the next maintenance op adopts every surviving tmp; tmp remnants
-    * WITHOUT it are a half-built generation and are discarded). */
+    * through one [[Artifacts.rewrite]] with `_stats` as the marker. */
   def deleteFromTextIndex(s: SparkSession, name: String,
       deleted: DataFrame): Unit = {
     val del = broadcast(deleted.select(col("doc_id").as("_del_id")))
     def anti(df: DataFrame) =
       df.join(del, col("doc_id") === col("_del_id"), "left_anti")
-    swapTextGeneration(s, name,
-      (p, d, ps, b) => (anti(p), anti(d), anti(ps), anti(b)))
+    rewriteTextIndex(s, name)((_, t) => anti(t))
   }
 
   /** COMPACT a [[writeTextIndex]] artifact after heavy appends: each
@@ -885,51 +875,32 @@ object TextAnalysis {
     * `_stats` collapses its per-batch rows to one. Answers are untouched — reads already
     * re-aggregate, so compaction is pure layout (spec asserts). */
   def compactTextIndex(s: SparkSession, name: String): Unit =
-    swapTextGeneration(s, name, (p, d, ps, b) => (
-      p.groupBy(col("term"), col("doc_id"))
-        .agg(sum(col("tf")).as("tf"), max(col("dl")).as("dl")),
-      d.groupBy(col("doc_id")).agg(max(col("dl")).as("dl")),
+    rewriteTextIndex(s, name) {
+      case ("_postings", p) => p.groupBy(col("term"), col("doc_id"))
+        .agg(sum(col("tf")).as("tf"), max(col("dl")).as("dl"))
+      case ("_doclen", d) => d.groupBy(col("doc_id")).agg(max(col("dl")).as("dl"))
       // positions rows are unique by construction (no re-agg surface);
       // compaction is pure layout — the bucketed rewrite alone collapses
       // append debris to one file per bucket
-      ps,
-      b))
+      case (_, t) => t
+    }
 
-  /** Shared maintenance tail: build a full new generation from the live
-    * tables through `transform` in the rewrite session, write it as
-    * `_tmp` twins (stats LAST, derived from the already-written tmp
-    * doclen — the marker), and swap it in through one
-    * [[Artifacts.swap]], which first heals a crashed prior swap so the
-    * requested op runs on the healed live state. */
-  private def swapTextGeneration(s0: SparkSession, name: String,
-      transform: (DataFrame, DataFrame, DataFrame, DataFrame) =>
-        (DataFrame, DataFrame, DataFrame, DataFrame)): Unit = {
-    val s = Artifacts.rewriteSession(s0)
-    Artifacts.swap(s0, Artifacts.tmpPairs(name, TextTables)) {
-      val numBuckets = Artifacts.bucketsOf(s, name + "_postings")
-      val (p2, d2, ps2, b2) = transform(s.table(name + "_postings"),
-        s.table(name + "_doclen"), s.table(name + "_positions"),
-        s.table(name + "_batches"))
-      p2.write.mode("overwrite")
-        .bucketBy(numBuckets, "term").sortBy("term")
-        .saveAsTable(name + "_postings_tmp")
-      d2.write.mode("overwrite")
-        .bucketBy(numBuckets, "doc_id").sortBy("doc_id")
-        .saveAsTable(name + "_doclen_tmp")
-      ps2.write.mode("overwrite")
-        .bucketBy(numBuckets, "term").sortBy("term")
-        .saveAsTable(name + "_positions_tmp")
-      // the new generation is ONE committed batch: journal collapses to
-      // batch 0 and the rebuilt 1-row stats carries the same id — keeping
-      // the journal↔stats completeness invariant by construction
-      b2.select(lit(0L).as("batch_id"), col("doc_id"))
-        .write.mode("overwrite").saveAsTable(name + "_batches_tmp")
-      s.table(name + "_doclen_tmp")
+  /** Shared maintenance tail: one [[Artifacts.rewrite]] of the text
+    * tables, `next(sfx, live)` giving each data table's new rows. The
+    * new generation is ONE committed batch: the journal collapses to
+    * batch 0 and `_stats` (the marker) is rebuilt as one batch-0 row from
+    * the new `_doclen` — the journal↔stats invariant by construction. */
+  private def rewriteTextIndex(s: SparkSession, name: String)(
+      next: (String, DataFrame) => DataFrame): Unit =
+    Artifacts.rewrite(s, name, TextTables) { (rs, sfx) => Some(sfx match {
+      case "_stats" => rs.table(Artifacts.tmpOf(name + "_doclen"))
         .agg(lit(0L).as("batch_id"), count(lit(1)).as("n_docs"),
           coalesce(sum(col("dl")), lit(0L)).as("dl_sum"))
-        .repartition(1).write.mode("overwrite").saveAsTable(name + "_stats_tmp")
-    }
-  }
+        .repartition(1)
+      case "_batches" => next(sfx, rs.table(name + sfx))
+        .select(lit(0L).as("batch_id"), col("doc_id"))
+      case _ => next(sfx, rs.table(name + sfx))
+    })}
 
   /** The postings read surface: per-(term, doc) re-aggregation so
     * multi-batch appends stay equivalent to a rebuilt single row (the
@@ -1652,10 +1623,129 @@ object TextAnalysis {
     bests.toDF("round", "left", "right", "pair_n").orderBy("round")
   }
 
+  // ------------------------------------------ journaled count indexes
+
+  /** A JOURNALED additive count index: the one design behind the BPE
+    * word index and the bigram-LM index. It is declared by its count
+    * tables, each (suffix, key, count column) and bucketed on its key,
+    * and by `derive`, which gives a doc batch's (key, count) frames in
+    * table order. `_stats` (batch_id), last in [[tables]], is the
+    * commit journal.
+    *
+    * The journal rule: every count row carries its batch_id, and a
+    * batch is committed iff its batch_id is in `_stats`, which the
+    * batch writes LAST. Partial ADDITIVE counts are wrong values, not
+    * just missing docs, and a count row is not self-identifying (the
+    * edge/ANN anti-join idempotence cannot apply), so:
+    *  - readers see committed batches only ([[read]]): a mid-crash
+    *    index answers exactly as if the crashed batch had not arrived;
+    *  - a batch ([[batch]]) first heals ([[heal]]: batch_ids with rows
+    *    in ANY count table but no commit are excised through one
+    *    [[Artifacts.rewrite]]), then returns false with zero rows landed
+    *    if its batch_id is already committed (the redelivered
+    *    duplicate), then lands its rows and commits;
+    *  - [[compact]] nets committed rows to one row per key under batch
+    *    0, drops zero-net keys and uncommitted debris, and KEEPS every
+    *    historical committed batch_id in `_stats`, so a pre-compaction
+    *    batch_id redelivered later still dedupes instead of landing its
+    *    counts twice (a superset journal is harmless: heal excises only
+    *    row-side batch_ids absent from it).
+    * A retraction is a negative batch: the read sum nets it out, and a
+    * key netting to zero leaves the index. `batchId` is the caller's
+    * delivery identity — a streaming sink passes its foreachBatch id
+    * (the g13 wiring). Single-writer, like every artifact here. */
+  private final class CountIndex(counts: Seq[(String, String, String)],
+      derive: DataFrame => Seq[DataFrame]) {
+
+    /** The index's tables, `_stats` (the commit journal) last. */
+    val tables: Seq[String] = counts.map(_._1) :+ "_stats"
+
+    /** A batch's rows per count table, signed and tagged with its
+      * batch_id — the physical layout [[batch]] lands (t49/t50 plant
+      * crash debris from it). */
+    def rows(docs: DataFrame, sign: Int, batchId: Long): Seq[DataFrame] =
+      derive(docs).zip(counts).map { case (df, (_, key, n)) =>
+        df.select(col(key), (col(n) * sign).as(n), lit(batchId).as("batch_id"))
+      }
+
+    /** Build the index as batch 0. */
+    def write(corpus: DataFrame, name: String, numBuckets: Int): Unit = {
+      Artifacts.dropTables(corpus.sparkSession, name, tables)
+      land(corpus, name, 1, 0L, "overwrite", numBuckets)
+    }
+
+    /** One journaled batch; false iff `batchId` was already committed. */
+    def batch(docs: DataFrame, name: String, batchId: Long, sign: Int,
+        numBuckets: Int): Boolean = {
+      val s = docs.sparkSession
+      heal(s, name)
+      val fresh = s.table(name + "_stats").filter(col("batch_id") === batchId).isEmpty
+      if (fresh) land(docs, name, sign, batchId, "append", numBuckets)
+      fresh
+    }
+
+    private def land(docs: DataFrame, name: String, sign: Int, batchId: Long,
+        mode: String, numBuckets: Int): Unit = {
+      rows(docs, sign, batchId).zip(counts).foreach { case (df, (sfx, key, _)) =>
+        df.write.mode(mode).bucketBy(numBuckets, key).sortBy(key)
+          .saveAsTable(name + sfx)
+      }
+      val s = docs.sparkSession
+      import s.implicits._
+      Seq(batchId).toDF("batch_id").repartition(1)
+        .write.mode(mode).saveAsTable(name + "_stats")
+    }
+
+    private def committed(s: SparkSession, name: String): DataFrame =
+      s.table(name + "_stats").select(col("batch_id")).distinct()
+
+    /** Excise uncommitted batches; returns how many batch_ids it excised. */
+    def heal(s: SparkSession, name: String): Long = {
+      val debris = counts.map(c => s.table(name + c._1).select(col("batch_id")))
+        .reduce(_ unionByName _).distinct()
+        .join(committed(s, name), Seq("batch_id"), "left_anti")
+        .collect().map(_.getLong(0)).toSet
+      if (debris.nonEmpty)
+        Artifacts.rewrite(s, name, tables) { (rs, sfx) =>
+          val t = rs.table(name + sfx)
+          Some(if (sfx == "_stats") t.repartition(1)
+               else t.filter(!col("batch_id").isInCollection(debris)))
+        }
+      debris.size.toLong
+    }
+
+    def compact(s: SparkSession, name: String): Unit = {
+      val ids = committed(s, name).collect().map(_.getLong(0)).toSet
+      Artifacts.rewrite(s, name, tables) { (rs, sfx) =>
+        import rs.implicits._
+        Some(counts.find(_._1 == sfx) match {
+          case Some((_, key, n)) =>
+            net(rs.table(name + sfx).filter(col("batch_id").isInCollection(ids)), key, n)
+              .select(col(key), col(n), lit(0L).as("batch_id"))
+          case None => (ids + 0L).toSeq.sorted.toDF("batch_id").repartition(1)
+        })
+      }
+    }
+
+    /** The committed (key, count) view of count table `sfx`: multi-batch
+      * rows per key sum back to the rebuilt single row. The journal is
+      * batch-count-sized, so the semi-join broadcasts and the bucketed
+      * scan shape is untouched. */
+    def read(s: SparkSession, name: String, sfx: String): DataFrame = {
+      val (_, key, n) = counts.find(_._1 == sfx).get
+      net(s.table(name + sfx)
+        .join(broadcast(committed(s, name)), Seq("batch_id"), "left_semi"), key, n)
+    }
+
+    private def net(rows: DataFrame, key: String, n: String): DataFrame =
+      rows.groupBy(col(key)).agg(sum(col(n)).as(n)).filter(col(n) > 0L)
+  }
+
   // ------------------------------------- incremental BPE vocabulary (t41)
 
-  /** A BPE word index's tables, `_stats` (the commit marker) last. */
-  private val BpeTables = Seq("_words", "_stats")
+  /** The BPE word index: one [[CountIndex]] table, `_words` (word, n). */
+  private val BpeIndex =
+    new CountIndex(Seq(("_words", "word", "n")), docs => Seq(bpeWordCounts(docs)))
 
   /** Persist BPE's word-frequency table as a bucketed artifact — the
     * incremental-vocabulary story (round-8 verdict ask #7, the d17
@@ -1667,46 +1757,10 @@ object TextAnalysis {
     * merge loop over the vocabulary-sized table reproduces a full
     * retrain over corpus + delta EXACTLY — the expensive stage a full
     * retrain pays (re-tokenizing the whole corpus) costs only the
-    * delta here. */
+    * delta here. Maintenance is [[CountIndex]]'s. */
   def writeBpeWordIndex(corpus: DataFrame, name: String,
-      numBuckets: Int = 8): Unit = {
-    val s = corpus.sparkSession
-    Artifacts.dropTables(s, name, BpeTables)
-    bpeWordCounts(corpus)
-      .select(col("word"), col("n"), lit(0L).as("batch_id"))
-      .write.mode("overwrite")
-      .bucketBy(numBuckets, "word").sortBy("word")
-      .saveAsTable(name + "_words")
-    // commit marker for batch 0, written LAST (the `_stats`-last rule)
-    import s.implicits._
-    Seq(0L).toDF("batch_id").repartition(1)
-      .write.mode("overwrite").saveAsTable(name + "_stats")
-  }
-
-  /** JOURNALED batch writer — the LM index's at-least-once contract
-    * ([[lmIndexBatch]]) applied to the single BPE count table: additive
-    * word counts have the same partial/redelivered-batch hazard as the
-    * LM's, so rows carry their batch_id, the `_stats` marker commits
-    * LAST, readers see committed batches only, heal-then-retry runs
-    * inside the append, and a committed batch_id returns false with
-    * zero rows landed. */
-  private def bpeIndexBatch(docs: DataFrame, name: String, batchId: Long,
-      sign: Int, numBuckets: Int): Boolean = {
-    val s = docs.sparkSession
-    healBpeIndexAppends(s, name)
-    if (!s.table(name + "_stats")
-        .filter(col("batch_id") === batchId).isEmpty) return false
-    bpeWordCounts(docs)
-      .select(col("word"), (col("n") * sign).as("n"),
-        lit(batchId).as("batch_id"))
-      .write.mode("append")
-      .bucketBy(numBuckets, "word").sortBy("word")
-      .saveAsTable(name + "_words")
-    import s.implicits._
-    Seq(batchId).toDF("batch_id")
-      .write.mode("append").saveAsTable(name + "_stats")
-    true
-  }
+      numBuckets: Int = 8): Unit =
+    BpeIndex.write(corpus, name, numBuckets)
 
   /** APPEND a delta batch's word counts — prior bucket files are never
     * read or rewritten; equivalence to a rebuild holds through the
@@ -1715,64 +1769,33 @@ object TextAnalysis {
     * `batchId` was already committed (redelivered duplicate). */
   def appendToBpeWordIndex(delta: DataFrame, name: String, batchId: Long,
       numBuckets: Int = 8): Boolean =
-    bpeIndexBatch(delta, name, batchId, 1, numBuckets)
+    BpeIndex.batch(delta, name, batchId, 1, numBuckets)
 
   /** REMOVE docs' contributions from a [[writeBpeWordIndex]] artifact —
-    * right-to-be-forgotten for the vocabulary, via RETRACTION: the
-    * removed docs' word counts land as a NEGATIVE journaled batch, and
-    * the read-side sum nets them out. A word whose count nets to zero
-    * drops from the vocabulary entirely ([[bpeIndexCounts]] filters
-    * n > 0), so training after a removal equals a full retrain over the
-    * surviving corpus (TextIndexSpec asserts). Only ever retract docs
-    * that were actually indexed — the standing provenance contract (a
-    * double retraction would go negative and the filter would
-    * over-drop; the journal makes an accidental RE-DELIVERY of the same
-    * retraction batch a no-op, closing the sharpest instance). */
+    * right-to-be-forgotten for the vocabulary, via RETRACTION (a
+    * negative batch), so training after a removal equals a full retrain
+    * over the surviving corpus (TextIndexSpec asserts). Only ever
+    * retract docs that were actually indexed — the standing provenance
+    * contract (a double retraction would go negative and the read
+    * filter would over-drop; the journal makes an accidental
+    * RE-DELIVERY of the same retraction batch a no-op). */
   def removeFromBpeWordIndex(docs: DataFrame, name: String, batchId: Long,
       numBuckets: Int = 8): Boolean =
-    bpeIndexBatch(docs, name, batchId, -1, numBuckets)
+    BpeIndex.batch(docs, name, batchId, -1, numBuckets)
 
-  /** Detect and excise crashed appends (rows with no commit marker) —
-    * the [[healLmIndexAppends]] contract, one table wide. */
-  def healBpeIndexAppends(s: SparkSession, name: String): Long = {
-    val committed = s.table(name + "_stats")
-      .select(col("batch_id")).distinct()
-    val debris = s.table(name + "_words").select(col("batch_id")).distinct()
-      .join(committed, Seq("batch_id"), "left_anti")
-      .collect().map(_.getLong(0)).toSet
-    if (debris.nonEmpty)
-      bpeSwapGeneration(s, name,
-        w => w.filter(!col("batch_id").isInCollection(debris)), identity)
-    debris.size.toLong
-  }
+  /** Excise crashed appends (rows with no commit); returns the number
+    * of excised batch_ids. */
+  def healBpeIndexAppends(s: SparkSession, name: String): Long =
+    BpeIndex.heal(s, name)
 
-  /** Crash-safe generation swap for the BPE tables: one
-    * [[Artifacts.swap]], `_stats_tmp` (written last) the marker — the
-    * lmSwapGeneration shape, one count table wide. */
-  private def bpeSwapGeneration(s0: SparkSession, name: String,
-      tWords: DataFrame => DataFrame,
-      tStats: DataFrame => DataFrame): Unit = {
-    val s = Artifacts.rewriteSession(s0)
-    Artifacts.swap(s0, Artifacts.tmpPairs(name, BpeTables)) {
-      tWords(s.table(name + "_words")).write.mode("overwrite")
-        .bucketBy(Artifacts.bucketsOf(s, name + "_words"), "word").sortBy("word")
-        .saveAsTable(name + "_words_tmp")
-      tStats(s.table(name + "_stats")).repartition(1)
-        .write.mode("overwrite").saveAsTable(name + "_stats_tmp")
-    }
-  }
+  /** COMPACT the BPE word index to one row per word. */
+  def compactBpeWordIndex(s: SparkSession, name: String): Unit =
+    BpeIndex.compact(s, name)
 
-  /** The re-aggregated (word, n) view of a [[writeBpeWordIndex]]
-    * artifact, over COMMITTED batches only (the LM read contract) —
-    * multi-batch rows per word sum back to the rebuilt single row;
-    * retraction rows net against their appends, and a fully-retracted
-    * word (n ≤ 0) leaves the vocabulary. */
+  /** The committed, re-aggregated (word, n) view; a fully-retracted
+    * word leaves the vocabulary. */
   private def bpeIndexCounts(s: SparkSession, name: String): DataFrame =
-    s.table(name + "_words")
-      .join(broadcast(s.table(name + "_stats")
-        .select(col("batch_id")).distinct()), Seq("batch_id"), "left_semi")
-      .groupBy(col("word")).agg(sum(col("n")).as("n"))
-      .filter(col("n") > 0L)
+    BpeIndex.read(s, name, "_words")
 
   /** Driver gate for the incremental BPE vocabulary (the s07/t40
     * equality pattern): split the corpus 80/20, build the word index on
@@ -1801,7 +1824,7 @@ object TextAnalysis {
       import s.implicits._
       Seq((nVocab, incBests == fullBests))
         .toDF("n_vocab", "incremental_eq_full")
-    } finally Artifacts.dropTables(s, name, BpeTables)
+    } finally Artifacts.dropTables(s, name, BpeIndex.tables)
   }
 
   /** Driver gate for the BPE append's at-least-once contract (the t49
@@ -1826,8 +1849,7 @@ object TextAnalysis {
       writeBpeWordIndex(part(0), name)                       // batch 0
       appendToBpeWordIndex(part(1), name, batchId = 1L)      // batch 1
       // plant batch 2's mid-append crash: half its word rows, no marker
-      val c2 = bpeWordCounts(part(2))
-        .select(col("word"), col("n"), lit(2L).as("batch_id"))
+      val c2 = BpeIndex.rows(part(2), 1, 2L).head
       c2.orderBy(col("word")).limit((c2.count() / 2).toInt)
         .write.mode("append").bucketBy(8, "word").sortBy("word")
         .saveAsTable(name + "_words")
@@ -1847,221 +1869,66 @@ object TextAnalysis {
       Seq((docs.count(), midCrashCommitted, retried && redeliveryZero, finalEq))
         .toDF("n_docs", "midcrash_trains_committed_only",
           "redelivery_zero_rows", "final_eq_retrain")
-    } finally Artifacts.dropTables(s, name, BpeTables)
+    } finally Artifacts.dropTables(s, name, BpeIndex.tables)
   }
 
   // ------------------------------------ persisted bigram LM index (t48)
 
-  /** An LM index's tables, `_stats` (the commit marker) last. */
-  private val LmTables = Seq("_uni", "_big", "_stats")
+  /** The LM index: two [[CountIndex]] tables, `_uni` (u, cu) and `_big`
+    * (g, cg), counted off one tokenize. */
+  private val LmIndex = new CountIndex(Seq(("_uni", "u", "cu"), ("_big", "g", "cg")),
+    docs => {
+      val toks = docs.select(tokens(col("text")).as("toks"))
+      Seq(toks.select(explode(col("toks")).as("u"))
+          .groupBy(col("u")).agg(count(lit(1)).as("cu")),
+        toks.select(explode(shingles(col("toks"), 2)).as("g"))
+          .groupBy(col("g")).agg(count(lit(1)).as("cg")))
+    })
 
   /** Persist the bigram LM's sufficient statistics as bucketed tables —
     * the text family's LAST un-persisted derived structure (round-13
     * verdict #2; the t41 `writeBpeWordIndex` pattern applied to the LM):
     * `<name>_uni` (u, cu) bucketBy(u) and `<name>_big` (g, cg)
-    * bucketBy(g), `_big` written LAST as the completeness marker.
-    * Counts are ADDITIVE, so maintenance is the BPE shape verbatim:
-    * appends land new bucket files, retraction is a negative batch,
-    * readers re-aggregate per key (Exchange-free on the buckets) and a
-    * zero-netted entry leaves the vocabulary. Training (the corpus-sized
+    * bucketBy(g). Counts are ADDITIVE, so maintenance is the
+    * [[CountIndex]] the BPE word index uses: appends land new bucket
+    * files, retraction is a negative batch, readers re-aggregate per key
+    * (Exchange-free on the buckets). Training (the corpus-sized
     * tokenize + count passes) is paid ONCE per corpus generation;
     * every scoring call pays only its own corpus-sized scoring pass —
     * the vocabulary-sized tables broadcast exactly as the fresh shape's
     * did. */
   def writeLmIndex(corpus: DataFrame, name: String,
-      numBuckets: Int = 8): Unit = {
-    val s = corpus.sparkSession
-    Artifacts.dropTables(s, name, LmTables)
-    val toks = corpus.select(tokens(col("text")).as("toks"))
-    toks.select(explode(col("toks")).as("u"))
-      .groupBy(col("u")).agg(count(lit(1)).as("cu"))
-      .select(col("u"), col("cu"), lit(0L).as("batch_id"))
-      .write.mode("overwrite").bucketBy(numBuckets, "u").sortBy("u")
-      .saveAsTable(name + "_uni")
-    toks.select(explode(shingles(col("toks"), 2)).as("g"))
-      .groupBy(col("g")).agg(count(lit(1)).as("cg"))
-      .select(col("g"), col("cg"), lit(0L).as("batch_id"))
-      .write.mode("overwrite").bucketBy(numBuckets, "g").sortBy("g")
-      .saveAsTable(name + "_big")
-    // commit marker for batch 0, written LAST (the `_stats`-last rule —
-    // its presence proves the whole build landed)
-    import s.implicits._
-    Seq(0L).toDF("batch_id").repartition(1)
-      .write.mode("overwrite").saveAsTable(name + "_stats")
-  }
-
-  /** The per-batch (uni, big) count frames a delta lands — shared by
-    * the append path and t49's debris planting so planted crash states
-    * use the REAL physical layout. */
-  private def lmBatchCounts(docs: DataFrame, sign: Int,
-      batchId: Long): (DataFrame, DataFrame) = {
-    val toks = docs.select(tokens(col("text")).as("toks"))
-    (toks.select(explode(col("toks")).as("u"))
-      .groupBy(col("u")).agg((count(lit(1)) * sign).as("cu"))
-      .select(col("u"), col("cu"), lit(batchId).as("batch_id")),
-      toks.select(explode(shingles(col("toks"), 2)).as("g"))
-        .groupBy(col("g")).agg((count(lit(1)) * sign).as("cg"))
-        .select(col("g"), col("cg"), lit(batchId).as("batch_id")))
-  }
-
-  /** JOURNALED delta writer — the at-least-once crash/redelivery
-    * contract the ADDITIVE count tables need (round 14; the text
-    * index's WAL idea with batch-granular excision): count rows carry
-    * their `batch_id`, the batch's `_stats` row commits it LAST, and
-    * READERS see committed batches only ([[lmCommitted]] semi-join) —
-    * so a mid-crash artifact answers exactly as if the batch had not
-    * arrived (partial ADDITIVE counts would otherwise be silently
-    * WRONG values, not just missing docs — the reason the edge/ANN
-    * anti-join trick cannot work here: a count row is not
-    * self-identifying). Sequence per call: (1) HEAL — batch_ids with
-    * rows but no commit marker are excised through the crash-safe
-    * generation swap; (2) a batch_id already committed returns false
-    * (the redelivered duplicate); (3) land rows, then the marker.
-    * `batchId` is the caller's delivery identity — a streaming sink
-    * passes its foreachBatch id (the g13 wiring). Single-writer, like
-    * every artifact here. */
-  private def lmIndexBatch(docs: DataFrame, name: String, batchId: Long,
-      sign: Int, numBuckets: Int): Boolean = {
-    val s = docs.sparkSession
-    healLmIndexAppends(s, name)
-    if (!s.table(name + "_stats")
-        .filter(col("batch_id") === batchId).isEmpty) return false
-    val (uni, big) = lmBatchCounts(docs, sign, batchId)
-    uni.write.mode("append").bucketBy(numBuckets, "u").sortBy("u")
-      .saveAsTable(name + "_uni")
-    big.write.mode("append").bucketBy(numBuckets, "g").sortBy("g")
-      .saveAsTable(name + "_big")
-    import s.implicits._
-    Seq(batchId).toDF("batch_id")
-      .write.mode("append").saveAsTable(name + "_stats")
-    true
-  }
+      numBuckets: Int = 8): Unit =
+    LmIndex.write(corpus, name, numBuckets)
 
   /** APPEND a delta batch's unigram/bigram counts — prior bucket files
     * are never read or rewritten. Returns false iff `batchId` was
     * already committed (the redelivered duplicate — zero rows land). */
   def appendToLmIndex(delta: DataFrame, name: String, batchId: Long,
       numBuckets: Int = 8): Boolean =
-    lmIndexBatch(delta, name, batchId, 1, numBuckets)
+    LmIndex.batch(delta, name, batchId, 1, numBuckets)
 
   /** RETRACT docs' contributions (right-to-be-forgotten for the LM):
     * negative batch, read-side nets it out; a fully-retracted entry
     * leaves the table. Retraction is a journaled batch like any other. */
   def removeFromLmIndex(docs: DataFrame, name: String, batchId: Long,
       numBuckets: Int = 8): Boolean =
-    lmIndexBatch(docs, name, batchId, -1, numBuckets)
+    LmIndex.batch(docs, name, batchId, -1, numBuckets)
 
-  /** Detect and excise crashed appends: batch_ids carrying rows in
-    * `_uni`/`_big` but absent from `_stats`. Returns the number of
-    * excised batch_ids. */
-  def healLmIndexAppends(s: SparkSession, name: String): Long = {
-    val committed = s.table(name + "_stats")
-      .select(col("batch_id")).distinct()
-    val debris = s.table(name + "_uni").select(col("batch_id"))
-      .unionByName(s.table(name + "_big").select(col("batch_id")))
-      .distinct()
-      .join(committed, Seq("batch_id"), "left_anti")
-      .collect().map(_.getLong(0)).toSet
-    if (debris.nonEmpty) {
-      val bad = (c: Column) => c.isInCollection(debris)
-      lmSwapGeneration(s, name,
-        u => u.filter(!bad(col("batch_id"))),
-        b => b.filter(!bad(col("batch_id"))),
-        identity)
-    }
-    debris.size.toLong
-  }
+  /** Excise crashed appends: batch_ids carrying rows in `_uni` or
+    * `_big` but absent from `_stats`. Returns the number of excised
+    * batch_ids. */
+  def healLmIndexAppends(s: SparkSession, name: String): Long =
+    LmIndex.heal(s, name)
 
-  /** Crash-safe generation swap for the three LM tables (the
-    * swapEdgeGeneration shape): `_tmp` twins written with `_stats_tmp`
-    * LAST (the marker) and swapped through one [[Artifacts.swap]];
-    * bucket count from the catalog, fail-loud. */
-  private def lmSwapGeneration(s0: SparkSession, name: String,
-      tUni: DataFrame => DataFrame, tBig: DataFrame => DataFrame,
-      tStats: DataFrame => DataFrame): Unit = {
-    val s = Artifacts.rewriteSession(s0)
-    Artifacts.swap(s0, Artifacts.tmpPairs(name, LmTables)) {
-      val nb = Artifacts.bucketsOf(s, name + "_uni")
-      tUni(s.table(name + "_uni")).write.mode("overwrite")
-        .bucketBy(nb, "u").sortBy("u").saveAsTable(name + "_uni_tmp")
-      tBig(s.table(name + "_big")).write.mode("overwrite")
-        .bucketBy(nb, "g").sortBy("g").saveAsTable(name + "_big_tmp")
-      tStats(s.table(name + "_stats")).repartition(1)
-        .write.mode("overwrite").saveAsTable(name + "_stats_tmp")
-    }
-  }
+  /** COMPACT both LM count tables to one row per key. */
+  def compactLmIndex(s: SparkSession, name: String): Unit =
+    LmIndex.compact(s, name)
 
-  /** COMPACT both LM count tables to one row per key — committed rows
-    * net under batch 0, zero-net entries drop (the `> 0` keep condition
-    * IS the read views' filter), uncommitted debris is excised. The
-    * rewritten `_stats` KEEPS every historical committed batch_id (plus
-    * batch 0 the netted rows ride under): a pre-compaction batch_id
-    * redelivered after the compact must still hit the lmIndexBatch
-    * duplicate check or its additive counts land TWICE (round-14
-    * ADVICE). A superset journal is harmless here — heal excises only
-    * row-side batch_ids absent from `_stats`, and this direction is the
-    * OPPOSITE of the round-10 text-index trap (there the rebuilt 1-row
-    * stats made journal rows look uncommitted; here `_stats` IS the
-    * commit journal). One crash-safe three-table swap. */
-  def compactLmIndex(s: SparkSession, name: String): Unit = {
-    val committed = s.table(name + "_stats")
-      .select(col("batch_id")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    val keep = (c: Column) => c.isInCollection(committed)
-    lmSwapGeneration(s, name,
-      u => u.filter(keep(col("batch_id")))
-        .groupBy(col("u")).agg(sum(col("cu")).as("cu"))
-        .filter(col("cu") > 0L)
-        .select(col("u"), col("cu"), lit(0L).as("batch_id")),
-      b => b.filter(keep(col("batch_id")))
-        .groupBy(col("g")).agg(sum(col("cg")).as("cg"))
-        .filter(col("cg") > 0L)
-        .select(col("g"), col("cg"), lit(0L).as("batch_id")),
-      st => {
-        import st.sparkSession.implicits._
-        (committed + 0L).toSeq.sorted.toDF("batch_id")
-      })
-  }
-
-  /** COMPACT the BPE word index to one row per word — committed rows
-    * net under batch 0, zero-net words drop, uncommitted debris is
-    * excised, and the journal KEEPS historical committed batch_ids so
-    * post-compaction redeliveries still dedupe (the compactLmIndex
-    * contract, one table wide). */
-  def compactBpeWordIndex(s: SparkSession, name: String): Unit = {
-    val committed = s.table(name + "_stats")
-      .select(col("batch_id")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    bpeSwapGeneration(s, name,
-      w => w.filter(col("batch_id").isInCollection(committed))
-        .groupBy(col("word")).agg(sum(col("n")).as("n"))
-        .filter(col("n") > 0L)
-        .select(col("word"), col("n"), lit(0L).as("batch_id")),
-      st => {
-        import st.sparkSession.implicits._
-        (committed + 0L).toSeq.sorted.toDF("batch_id")
-      })
-  }
-
-  /** Re-aggregated read views (the span/BPE-index read contract), over
-    * COMMITTED batches only: the broadcast `_stats` semi-join is what
-    * makes a mid-crash artifact answer exactly as if the crashed batch
-    * had not arrived — for additive counts, partial rows are wrong
-    * VALUES, not just missing docs, so read-side commit filtering is
-    * correctness, not hygiene. The journal is batch-count-sized —
-    * the join broadcasts and the bucketed scan shape is untouched. */
-  private def lmCommitted(s: SparkSession, name: String): DataFrame =
-    broadcast(s.table(name + "_stats").select(col("batch_id")).distinct())
   private def lmUniCounts(s: SparkSession, name: String): DataFrame =
-    s.table(name + "_uni")
-      .join(lmCommitted(s, name), Seq("batch_id"), "left_semi")
-      .groupBy(col("u")).agg(sum(col("cu")).as("cu"))
-      .filter(col("cu") > 0L)
+    LmIndex.read(s, name, "_uni")
   private def lmBigCounts(s: SparkSession, name: String): DataFrame =
-    s.table(name + "_big")
-      .join(lmCommitted(s, name), Seq("batch_id"), "left_semi")
-      .groupBy(col("g")).agg(sum(col("cg")).as("cg"))
-      .filter(col("cg") > 0L)
+    LmIndex.read(s, name, "_big")
 
   /** [[lmScore]] answered from a persisted [[writeLmIndex]] artifact —
     * the training passes never run. */
@@ -2075,7 +1942,7 @@ object TextAnalysis {
     * crashed build rebuilds from scratch. */
   private[graft] def sharedLmIndex(s: SparkSession, dir: String): String = {
     val name = "graft_shared_lm_" + java.lang.Long.toHexString(docsFp(dir))
-    Artifacts.shared(s, name, LmTables)(
+    Artifacts.shared(s, name, LmIndex.tables)(
       writeLmIndex(Tables.documents(s, dir), name))
   }
 
@@ -2128,7 +1995,7 @@ object TextAnalysis {
         // answers must not move (the read views already re-aggregate)
         compactLmIndex(s, tn)
         (appEq, retEq, restEq)
-      } finally Artifacts.dropTables(s, tn, LmTables)
+      } finally Artifacts.dropTables(s, tn, LmIndex.tables)
     import s.implicits._
     Seq((nVocab, nBigrams, servedEq, appendEq, retractEq, compactEq))
       .toDF("n_vocab", "n_bigrams", "served_eq_inline",
@@ -2141,7 +2008,7 @@ object TextAnalysis {
     * artifact): build on a quarter of the corpus, append a second
     * quarter, plant batch 2's crash debris (HALF its `_uni` rows under
     * batch_id 2, no `_big` rows, no commit marker — the exact physical
-    * layout [[lmIndexBatch]] writes, a state only a mid-append crash
+    * layout [[CountIndex]] writes, a state only a mid-append crash
     * can produce), then drive the real API through retry, redelivery,
     * and a further batch. Flags:
     *  - mid-crash reads see COMMITTED batches only (scores over the
@@ -2164,7 +2031,7 @@ object TextAnalysis {
       writeLmIndex(part(0), name)                      // batch 0
       appendToLmIndex(part(1), name, batchId = 1L)     // batch 1
       // plant batch 2's mid-append crash: half the uni rows, no marker
-      val (uni2, _) = lmBatchCounts(part(2), 1, 2L)
+      val uni2 = LmIndex.rows(part(2), 1, 2L).head
       val half = uni2.count() / 2
       uni2.orderBy(col("u")).limit(half.toInt)
         .write.mode("append").bucketBy(8, "u").sortBy("u")
@@ -2193,7 +2060,7 @@ object TextAnalysis {
       Seq((docs.count(), midCrashCommitted, retried && redeliveryZero, finalEq))
         .toDF("n_docs", "midcrash_reads_committed_only",
           "redelivery_zero_rows", "final_eq_rebuild")
-    } finally Artifacts.dropTables(s, name, LmTables)
+    } finally Artifacts.dropTables(s, name, LmIndex.tables)
   }
 
   /** BPE ENCODING — [[t28BpeMerges]]'s consumer: tokenize the corpus
@@ -2376,15 +2243,6 @@ object TextAnalysis {
     legTop20(Similarity.annIvfScoresIndexed(s, qv, name)
       .withColumnRenamed("vec_id", "doc_id"), "sim_e6")
   }
-
-  /** [[t39HybridRrf]] with BOTH legs served from persisted indexes —
-    * the production retrieval shape (round-8 verdict "What's wrong #1"):
-    * the text leg reads the `_postings` inverted index, the vector leg
-    * reads the shared ANN artifact's IVF routing, and the RRF fusion
-    * tail is the same [[rrfFused]]. Nothing in the plan re-derives
-    * corpus statistics or scans unpruned vectors. */
-  def t39HybridIndexed(s: SparkSession, dir: String): DataFrame =
-    rrfFused(t39TextLegIndexed(s, dir), t39VecLegIndexed(s, dir))
 
   /** Driver gate for the indexed hybrid (the s07 + s04 patterns in one
     * row): (a) the indexed text leg is ROW-IDENTICAL to the inline leg

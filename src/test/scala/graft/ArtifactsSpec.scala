@@ -3,9 +3,13 @@ package graft
 import java.util.concurrent.{CountDownLatch, CyclicBarrier, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
+import org.apache.spark.sql.execution.datasources.BucketingUtils
+import org.apache.spark.sql.functions.{col, count, lit, pmod, sequence, transform, xxhash64}
 
-import graft.operators.Artifacts
+import graft.functions.VectorFunctions
+import graft.operators.{Artifacts, Dedup, Similarity}
 
 /** The persisted-artifact rules: the generation swap's crash matrix, the
   * shared-artifact lock rule, and the drop / bucket-count helpers. Every
@@ -89,6 +93,110 @@ class ArtifactsSpec extends SparkSpec {
       assert(gens() == Seq("A", "A", "B"))
       assert(tmps().isEmpty)
     } finally dropAll()
+  }
+
+  private def specOf(t: String): Option[BucketSpec] =
+    spark.sessionState.catalog.getTableMetadata(TableIdentifier(t)).bucketSpec
+
+  /** The data files of table `t`'s warehouse location. */
+  private def dataFiles(t: String): Seq[String] = {
+    val loc = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"), t)
+    loc.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(loc)
+      .map(_.getPath.getName).filter(_.startsWith("part-")).toSeq
+  }
+
+  test("rewrite keeps the catalog bucket spec with one file per bucket; an unbucketed marker stays unbucketed") {
+    val name = "graft_art_rw"
+    val sfxs = Seq("_data", "_mark")
+    try {
+      Artifacts.dropTables(spark, name, sfxs)
+      // overwrite then append: every bucket holds several files
+      for (mode <- Seq("overwrite", "append"))
+        spark.range(40).select((col("id") % 7).as("k"), col("id").as("v"))
+          .write.mode(mode).bucketBy(3, "k").sortBy("k").saveAsTable(name + "_data")
+      put(name + "_mark", "A")
+      assert(dataFiles(name + "_data").size > 3)
+      Artifacts.rewrite(spark, name, sfxs) { (rs, sfx) =>
+        Some(if (sfx == "_data") rs.table(name + sfx)
+             // the marker is derived from the tmp twin written before it
+             else rs.table(Artifacts.tmpOf(name + "_data"))
+               .agg(count(lit(1)).cast("string").as("gen")))
+      }
+      assert(specOf(name + "_data") == Some(BucketSpec(3, Seq("k"), Seq("k"))))
+      val ids = dataFiles(name + "_data").map(BucketingUtils.getBucketId(_).get)
+      assert(ids.nonEmpty && ids.size == ids.distinct.size && ids.forall(_ < 3),
+        s"not one file per bucket: $ids")
+      assert(spark.table(name + "_data").count() == 80)
+      assert(specOf(name + "_mark").isEmpty)
+      assert(spark.table(name + "_mark").head().getString(0) == "80")
+      assert(sfxs.forall(x => !spark.catalog.tableExists(Artifacts.tmpOf(name + x))))
+    } finally Artifacts.dropTables(spark, name, sfxs)
+  }
+
+  test("rewrite keeps a table whose next is None, skips an absent table, and a throwing next heals to one generation") {
+    val name = "graft_art_rn"
+    val sfxs = Seq("_a", "_b", "_c")
+    def gen(t: String) = spark.table(t).head().getString(0)
+    def rows(g: String) = spark.range(1).select(lit(g).as("gen"))
+    try {
+      Artifacts.dropTables(spark, name, sfxs)
+      Seq("_a", "_c").foreach(x => put(name + x, "A"))
+      // `_b` has no live table: skipped although next would write it
+      Artifacts.rewrite(spark, name, sfxs) { (_, sfx) =>
+        if (sfx == "_a") None else Some(rows("B"))
+      }
+      assert(gen(name + "_a") == "A" && gen(name + "_c") == "B")
+      assert(!spark.catalog.tableExists(name + "_b"))
+
+      // a throw inside next after `_a`'s tmp landed, before the marker
+      val e = intercept[IllegalStateException](
+        Artifacts.rewrite(spark, name, sfxs) { (_, sfx) =>
+          if (sfx == "_c") throw new IllegalStateException("crash in next")
+          Some(rows("C"))
+        })
+      assert(e.getMessage == "crash in next")
+      assert(spark.catalog.tableExists(Artifacts.tmpOf(name + "_a")))
+      assert(gen(name + "_a") == "A" && gen(name + "_c") == "B")
+      // the next call heals before next runs: the half-built tmp is gone
+      var healed = Seq.empty[String]
+      Artifacts.rewrite(spark, name, sfxs) { (_, sfx) =>
+        if (sfx == "_a") healed = Seq("_a", "_c").map(x => gen(name + x)) ++
+          sfxs.map(x => Artifacts.tmpOf(name + x)).filter(spark.catalog.tableExists)
+        Some(rows("D"))
+      }
+      assert(healed == Seq("A", "B"), s"not one whole generation after the heal: $healed")
+      assert(gen(name + "_a") == "D" && gen(name + "_c") == "D")
+    } finally Artifacts.dropTables(spark, name, sfxs)
+  }
+
+  test("maintenance ops keep the catalog bucket count: ANN delete, corpus compact and delete") {
+    import spark.implicits._
+    val (ann, corpus) = ("graft_art_ann", "graft_art_corpus")
+    val vecs = spark.range(0, 60).toDF("id")
+      .select(col("id").as("vec_id"), transform(sequence(lit(0), lit(15)),
+        i => pmod(xxhash64(col("id"), i), lit(2001L)).cast("double") / 1000.0 - 1.0).as("emb"))
+      .withColumn("nrm", VectorFunctions.l2Norm(col("emb")))
+    val docs = Seq((1L, "a b c d e f g h"), (2L, "a b c d e f g h"),
+      (3L, "p q r s t u v w")).toDF("doc_id", "text")
+    def buckets(t: String) = specOf(t).map(_.numBuckets)
+    try {
+      Similarity.writeAnnIndex(spark, vecs, ann, numBuckets = 4)
+      val families = Seq("_cells", "_srp", "_pq").filter(x => spark.catalog.tableExists(ann + x))
+      Similarity.deleteFromAnnIndex(spark, ann, Seq(0L, 7L).toDF("vec_id"))
+      families.foreach(x => assert(buckets(ann + x) == Some(4), s"ANN delete re-bucketed $x"))
+      assert(spark.table(ann + "_cells").filter(col("vec_id").isin(0L, 7L)).isEmpty)
+
+      Dedup.writeCorpusIndex(docs, corpus, numBuckets = 4)
+      Dedup.compactCorpusIndex(spark, corpus)
+      Seq("_bands", "_reps").foreach(x =>
+        assert(buckets(corpus + x) == Some(4), s"corpus compact re-bucketed $x"))
+      Dedup.deleteFromCorpusIndex(spark, corpus, Seq(3L).toDF("doc_id"))
+      Seq("_bands", "_reps").foreach(x =>
+        assert(buckets(corpus + x) == Some(4), s"corpus delete re-bucketed $x"))
+    } finally {
+      Artifacts.dropTables(spark, ann, Similarity.AnnTables)
+      Artifacts.dropTables(spark, corpus, Seq("_bands", "_reps"))
+    }
   }
 
   private def inThreads[T](n: Int)(body: Int => T): Seq[T] = {

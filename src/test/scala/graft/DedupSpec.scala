@@ -651,7 +651,7 @@ class DedupSpec extends SparkSpec {
       "graft_del_full", numBuckets = 4)
     try {
       Dedup.deleteFromCorpusIndex(spark, "graft_del_spec",
-        Seq(1L, 3L).toDF("doc_id"), numBuckets = 4)
+        Seq(1L, 3L).toDF("doc_id"))
       val reps = spark.table("graft_del_spec_reps")
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
       // third's class disappeared; base's class re-repped at its min
@@ -699,7 +699,7 @@ class DedupSpec extends SparkSpec {
       // before compaction: docs 1 and 6 are SPLIT reps (3 rows); the
       // rebuild holds the merged class (2 rows)
       assert(spark.table("graft_cmp_spec_reps").count() == 3)
-      Dedup.compactCorpusIndex(spark, "graft_cmp_spec", numBuckets = 4)
+      Dedup.compactCorpusIndex(spark, "graft_cmp_spec")
       assert(spark.table("graft_cmp_spec_reps").count() == 2,
         "compaction did not merge the cross-append dup class")
       // the merged class unions both members under the min rep id

@@ -271,7 +271,7 @@ class MultimodalSpec extends SparkSpec {
       // may still match
       import spark.implicits._
       Similarity.deleteFromAnnIndex(spark, "graft_media_lc",
-        Seq(firstId).toDF("vec_id"), numBuckets = 4)
+        Seq(firstId).toDF("vec_id"))
       assert(hits() == Set(firstId + 50000L), s"after delete: ${hits()}")
       // a SECOND re-upload (the user puts the image back) re-routes
       // alongside the surviving copy — frozen-state appends stay

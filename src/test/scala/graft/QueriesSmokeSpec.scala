@@ -165,6 +165,18 @@ class QueriesSmokeSpec extends SparkSpec {
       s"table renames or warehouse locations outside Artifacts (${offenders.size}): ${offenders.sorted.mkString(", ")}")
   }
 
+  test("only Artifacts names a tmp table in src/main") {
+    // a family writing its own `_tmp` twins restates bucket specs and
+    // the marker order — seven such tails had to be folded into
+    // Artifacts.rewrite; a tmp twin is read through Artifacts.tmpOf
+    val offenders = for {
+      p <- mainSources.filterNot(_.endsWith("graft/operators/Artifacts.scala"))
+      line <- codeLines(p, "_tmp".r)
+    } yield s"$p:$line"
+    assert(offenders.isEmpty,
+      s"tmp table names outside Artifacts (${offenders.size}): ${offenders.sorted.mkString(", ")}")
+  }
+
   test("entry() returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

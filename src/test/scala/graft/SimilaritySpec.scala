@@ -332,7 +332,7 @@ class SimilaritySpec extends SparkSpec {
       assert(pre.length == 1 && pre.head.getLong(1) == 0L,
         "precondition: query 0's identical vector is its top hit")
       Similarity.deleteFromAnnIndex(spark, "graft_ann_del",
-        doomed.toSeq.toDF("vec_id"), numBuckets = 4)
+        doomed.toSeq.toDF("vec_id"))
       for ((name, df) <- Seq(
           "ivf" -> Similarity.annIvfIndexed(spark, q, "graft_ann_del"),
           "srp" -> Similarity.annSrpIndexed(spark, q, "graft_ann_del"),
@@ -692,7 +692,7 @@ class SimilaritySpec extends SparkSpec {
       // delete forgets
       import spark.implicits._
       Similarity.deleteFromAnnIndex(spark, "graft_i8_lc",
-        Seq(100L).toDF("vec_id"), numBuckets = 4)
+        Seq(100L).toDF("vec_id"))
       assert(topIds() == Seq(50100L), s"after delete: ${topIds()}")
     } finally Seq("_cells", "_srp", "_pq", "_side",
       "_rt_cells", "_rt_srp", "_rt_pq", "_rt_side").foreach(sfx =>

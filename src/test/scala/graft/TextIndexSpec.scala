@@ -627,6 +627,37 @@ class TextIndexSpec extends SparkSpec {
     }
   }
 
+  test("LM heal reads every count table: debris only in _big is unread mid-crash, and the retry excises it") {
+    val name = "graft_lmspec_big"
+    val d0 = Seq((1L, "aa bb aa"), (2L, "bb cc aa bb")).toDF("doc_id", "text")
+    val d1 = Seq((3L, "cc aa bb")).toDF("doc_id", "text")
+    val d2 = Seq((4L, "aa cc cc")).toDF("doc_id", "text")
+    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
+      a.exceptAll(b).unionByName(b.exceptAll(a)).isEmpty
+    try {
+      TextAnalysis.writeLmIndex(d0, name)
+      TextAnalysis.appendToLmIndex(d1, name, batchId = 1L)
+      // batch 2 crashed after landing bigram rows only (t49 plants its
+      // debris in _uni): no _uni rows, no commit, a count no batch has
+      Seq(("aa cc", 7L, 2L), ("cc cc", 7L, 2L)).toDF("g", "cg", "batch_id")
+        .write.mode("append").bucketBy(8, "g").sortBy("g").saveAsTable(name + "_big")
+      val committed = d0.unionByName(d1)
+      assert(same(TextAnalysis.lmScoreIndexed(spark, name, committed),
+        TextAnalysis.lmScore(committed, committed)),
+        "mid-crash scores read uncommitted _big rows")
+      assert(TextAnalysis.appendToLmIndex(d2, name, batchId = 2L), "the retry did not land")
+      assert(spark.table(name + "_big").filter(col("cg") === 7L).isEmpty,
+        "the retry committed the _big debris")
+      val all = committed.unionByName(d2)
+      assert(same(TextAnalysis.lmScoreIndexed(spark, name, all), TextAnalysis.lmScore(all, all)),
+        "the healed index diverged from a fresh train")
+    } finally {
+      Seq("_uni", "_big", "_stats").flatMap(x => Seq(x, x + "_tmp")).foreach(sfx =>
+        spark.sql(s"DROP TABLE IF EXISTS $name$sfx"))
+      spark.catalog.clearCache()
+    }
+  }
+
   test("indexed hybrid legs against the fixture: text leg exact, fused overlap >= 0.6") {
     // the t42 gate itself, at the spec's smallest fixture — one row of
     // literal-true flags (driver re-proves at every SF)
