@@ -25,12 +25,9 @@ final class Limiters(maxConcurrency: Int, tps: Double, ips: Double) {
     ipsBucket.acquire(n.toDouble)
   }
 
-  /** Return the permits of one batch-sized acquisition. Used by the
-    * watchdog drain's single-attempt path: a failed attempt re-carries
-    * its items, and those same items are charged again at the next tick
-    * or micro-batch — without the refund a persistently failing sink
-    * double-charges the shared rate budget every tick and can starve
-    * healthy workers' admissions (round-4 ADVICE). */
+  /** Return the permits of one batch-sized acquisition, capped at one
+    * burst. The pipeline no longer calls it (a batch that fails is
+    * retried or dropped, never re-queued); PipelineSpec pins it. */
   def refundRate(n: Int): Unit = {
     tpsBucket.refund(1.0)
     ipsBucket.refund(n.toDouble)

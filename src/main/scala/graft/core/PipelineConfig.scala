@@ -8,7 +8,14 @@ import scala.concurrent.duration._
   *  - `numWorkers`        ≅ workerCount (v3 BatchProcessorConfig.java:17)
   *  - `maxPendingRows`    ≅ ringBufferSize=65536 (v3 BatchProcessorConfig.java:19)
   *  - `maxBatchSize`      ≅ maxBatchSize=1024 (v3 BatchProcessorConfig.java:20)
-  *  - `minBatchSize`      ≅ v1 minBatchSize (core/BatchProcessorProperties.java:17)
+  *  - `minBatchSize`      ≅ v1 minBatchSize (core/BatchProcessorProperties.java:17).
+  *    It selects the source's cut rule: at 1 (the default) a size or
+  *    time cut admits every held row; above 1 it admits only the longest
+  *    prefix that leaves no worker a run below `minBatchSize` — v1's
+  *    `endOfBatch && (size >= minBatchSize || elapsed >= forceFlushInterval)`
+  *    (core/InnerEventHandler.java:54-58) — and holds the rest until
+  *    more rows arrive, `flushInterval` passes, or `flush()`/`stop()`
+  *    drains (see [[BatchPipeline]])
   *  - `maxConcurrency`    ≅ maxConcurrency=16 (v3 BatchProcessorConfig.java:21)
   *  - `flushInterval`     ≅ flushInterval=1s (v3 BatchProcessorConfig.java:24)
   *  - `maxRetryCount`     ≅ maxRetryCount=3 (v3 BatchProcessorConfig.java:23)
@@ -17,25 +24,15 @@ import scala.concurrent.duration._
   *  - `maxItemsPerSecond` ≅ v1 ips (core/BatchProcessorProperties.java:33)
   *  - `blockOnFull`       ≅ v1 blockOnInsufficientCapacity
   *  - `stopTimeout`       ≅ closeWaitTimeoutMills=5s (v3 BatchProcessorConfig.java:26)
-  *  - `deferSmallBatches` ≅ v1's literal min-batch gate (core/
-  *    InnerEventHandler.java:54-58): a trailing run below `minBatchSize`
-  *    is HELD (not flushed) until more items arrive or `flushInterval`
-  *    elapses since the worker's last flush — the `endOfBatch &&
-  *    (size >= minBatchSize || elapsed >= forceFlushInterval)` predicate,
-  *    with the micro-batch boundary playing endOfBatch. Off by default:
-  *    the default path merges small trailing runs within the micro-batch
-  *    and flushes everything each micro-batch (flush-everything is the safer
-  *    default; deferral trades latency for batch efficiency exactly as
-  *    v1's knob does).
   *  - `triggerInterval`   — the time arm of the source's cut: the
   *    longest a micro-batch waits after the previous one's cut when its
   *    rows stay below the size threshold (`numWorkers × maxBatchSize`,
   *    at most `maxPendingRows`), which cuts at once. Not a fixed
   *    cadence: a full micro-batch does not wait for it. Set it below
-  *    `flushInterval` when deferral should be observable (batch
-  *    boundaries must come faster than the force-flush interval,
-  *    mirroring v1 where endOfBatch fires far more often than
-  *    forceFlushInterval). Defaults to `flushInterval`.
+  *    `flushInterval` when the `minBatchSize` hold should be observable
+  *    (cuts must come faster than the force-flush interval, mirroring
+  *    v1 where endOfBatch fires far more often than forceFlushInterval).
+  *    Defaults to `flushInterval`.
   *
   * Rates ≤ 0 mean unlimited.
   */
@@ -53,7 +50,6 @@ final case class PipelineConfig(
     maxItemsPerSecond: Double = 0.0,
     blockOnFull: Boolean = true,
     stopTimeout: FiniteDuration = 5.seconds,
-    deferSmallBatches: Boolean = false,
     triggerInterval: Option[FiniteDuration] = None) {
   require(numWorkers > 0 && maxBatchSize > 0 && maxConcurrency > 0)
   require(minBatchSize >= 0 && minBatchSize <= maxBatchSize)

@@ -1384,16 +1384,16 @@ object Dedup {
     * corpus-wide unique doc_ids across batches (the table's standing
     * contract). Bucket caps apply per batch; a capped-out bucket can
     * only MISS (verify is exact), same contract as the build. */
-  def appendToCorpusIndex(newDocs: DataFrame, name: String,
-      numBuckets: Int = 8): Unit = {
+  def appendToCorpusIndex(newDocs: DataFrame, name: String): Unit = {
+    val s = newDocs.sparkSession
     val repSh = repShingleIndex(newDocs)
     try {
-      corpusBandIndex(repSh, newDocs.sparkSession)
+      corpusBandIndex(repSh, s)
         .write.mode("append")
-        .bucketBy(numBuckets, "band", "key").sortBy("band", "key")
+        .bucketBy(Artifacts.bucketsOf(s, name + "_bands"), "band", "key").sortBy("band", "key")
         .saveAsTable(name + "_bands")
       repSh.write.mode("append")
-        .bucketBy(numBuckets, "rep").sortBy("rep")
+        .bucketBy(Artifacts.bucketsOf(s, name + "_reps"), "rep").sortBy("rep")
         .saveAsTable(name + "_reps")
     } finally repSh.unpersist()
   }
@@ -1654,12 +1654,11 @@ object Dedup {
     * makes multi-row gram hashes equivalent to a rebuilt single-row
     * count. Append THEN flag: a batch appended before its own
     * incremental query would count itself twice. */
-  def appendToSpanIndex(newDocs: DataFrame, name: String, gram: Int = 8,
-      numBuckets: Int = 8): Unit =
+  def appendToSpanIndex(newDocs: DataFrame, name: String, gram: Int = 8): Unit =
     gramStream(newDocs, gram)
       .groupBy(col("gh")).agg(count(lit(1)).as("n_occ"))
       .write.mode("append")
-      .bucketBy(numBuckets, "gh").sortBy("gh")
+      .bucketBy(Artifacts.bucketsOf(newDocs.sparkSession, name + "_grams"), "gh").sortBy("gh")
       .saveAsTable(name + "_grams")
 
   /** DELETE docs from a [[writeSpanIndex]] artifact. Gram counts are
@@ -1674,12 +1673,11 @@ object Dedup {
     * over-deleting drives a count negative and can mask a real
     * duplicate. When tombstone rows accumulate, compact by rebuilding
     * ([[writeSpanIndex]] over the surviving corpus). */
-  def deleteFromSpanIndex(docs: DataFrame, name: String, gram: Int = 8,
-      numBuckets: Int = 8): Unit =
+  def deleteFromSpanIndex(docs: DataFrame, name: String, gram: Int = 8): Unit =
     gramStream(docs, gram)
       .groupBy(col("gh")).agg((count(lit(1)) * -1L).as("n_occ"))
       .write.mode("append")
-      .bucketBy(numBuckets, "gh").sortBy("gh")
+      .bucketBy(Artifacts.bucketsOf(docs.sparkSession, name + "_grams"), "gh").sortBy("gh")
       .saveAsTable(name + "_grams")
 
   /** COMPACT a [[writeSpanIndex]] artifact — the lifecycle op the other

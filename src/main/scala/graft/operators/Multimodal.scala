@@ -601,7 +601,7 @@ object Multimodal {
         .headOption.map(_.getLong(0)).getOrElse(0L)
       val reup = vecs.filter(col("vec_id") === firstId)
         .select((col("vec_id") + 50000L).as("vec_id"), col("emb"), col("nrm"))
-      Similarity.appendToAnnIndex(s, reup, name, numBuckets = 4)
+      Similarity.appendToAnnIndex(s, reup, name)
       val q = vecs.filter(col("vec_id") === firstId)
         .select(lit(0L).as("query_id"), col("emb").as("qe"), col("nrm").as("qn"))
       def hits(): Set[Long] = Similarity.annIvfIndexed(s, q, name)
@@ -612,7 +612,7 @@ object Multimodal {
       val forgets = emptyCorpus || hits() == Set(firstId + 50000L)
       Similarity.appendToAnnIndex(s,
         reup.select((col("vec_id") + 10000L).as("vec_id"), col("emb"), col("nrm")),
-        name, numBuckets = 4)
+        name)
       val reroutes = emptyCorpus ||
         hits() == Set(firstId + 50000L, firstId + 60000L)
       Seq((nImages, routes, forgets, reroutes))

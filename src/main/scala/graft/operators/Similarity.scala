@@ -781,17 +781,14 @@ object Similarity {
     * its own bucket key — `_cells`/`_pq` join on (cell, vec_id) where
     * HashPartitioning(cell) already satisfies the clustering, `_srp`
     * joins on its bucket key `vec_id` — so the existing index never
-    * re-shuffles; only the batch-sized side moves. Bucket counts come
-    * from the CATALOG (the [[Artifacts.bucketsOf]] rule); the parameter
-    * is the fallback for a spec-less table only. Requires index-wide
+    * re-shuffles; only the batch-sized side moves. Each table's bucket
+    * count comes from the catalog ([[Artifacts.bucketsOf]]). Requires index-wide
     * unique vec_ids across DISTINCT batches (duplicate ids across
     * different payloads are a caller bug this op cannot detect). */
   def appendToAnnIndex(s: SparkSession, newVecs: DataFrame, name: String,
-      numBuckets: Int = 8, meta: Seq[String] = Seq.empty): Unit = {
+      meta: Seq[String] = Seq.empty): Unit = {
     val (cents, books) = readAnnSidecar(s, name)
-    val nb = s.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(name + "_cells"))
-      .bucketSpec.map(_.numBuckets).getOrElse(numBuckets)
+    def nb(sfx: String) = Artifacts.bucketsOf(s, name + sfx)
     // an i8 artifact quantizes the batch with the FROZEN sidecar scale
     // and derives all state from the dequantized view — exactly the
     // build-time staging, so routing stays consistent
@@ -817,7 +814,7 @@ object Similarity {
         .select((Seq(col("cell"), col("vec_id"), embCol, col("nrm")) ++
           meta.map(col)): _*)
         .write.mode("append")
-        .bucketBy(nb, "cell").sortBy("cell")
+        .bucketBy(nb("_cells"), "cell").sortBy("cell")
         .saveAsTable(name + "_cells")
       // partial-family builds (writeAnnIndex(families = ...)) skip the
       // srp/pq tables entirely — append only what exists
@@ -828,7 +825,7 @@ object Similarity {
           .join(s.table(name + "_srp").select(col("vec_id")),
             Seq("vec_id"), "left_anti")
           .write.mode("append")
-          .bucketBy(nb, "vec_id").sortBy("vec_id")
+          .bucketBy(nb("_srp"), "vec_id").sortBy("vec_id")
           .saveAsTable(name + "_srp")
       }
       // a build that found the corpus too small for full codebooks wrote
@@ -845,7 +842,7 @@ object Similarity {
           .select(Seq(col("cell"), col("vec_id")) ++ meta.map(col) ++
             Seq(col("codes"), col("recon_n")): _*)
           .write.mode("append")
-          .bucketBy(nb, "cell").sortBy("cell")
+          .bucketBy(nb("_pq"), "cell").sortBy("cell")
           .saveAsTable(name + "_pq")
       }
     } finally routed.unpersist()

@@ -702,7 +702,7 @@ object TextAnalysis {
     * corpus size (local default 8 matches the test SFs). */
   def writeTextIndex(corpus: DataFrame, name: String, numBuckets: Int = 8): Unit = {
     Artifacts.dropTables(corpus.sparkSession, name, TextTables)
-    textIndexBatch(corpus, name, numBuckets, "overwrite")
+    textIndexBatch(corpus, name, Some(numBuckets))
   }
 
   /** A text index's tables, `_stats` (written last) last. */
@@ -748,8 +748,7 @@ object TextAnalysis {
     * batch's table writes never carry a plan that reads the journal
     * they append to. A fully-redelivered committed batch degenerates
     * to an empty append (journal + (0,0) stats row — harmless). */
-  def appendToTextIndex(newDocs: DataFrame, name: String,
-      numBuckets: Int = 8): Unit = {
+  def appendToTextIndex(newDocs: DataFrame, name: String): Unit = {
     val s = newDocs.sparkSession
     healTextIndexAppends(s, name)
     import org.apache.spark.sql.functions.broadcast
@@ -766,7 +765,7 @@ object TextAnalysis {
         newDocs.join(broadcast(dupIds.toSeq.toDF("doc_id")),
           Seq("doc_id"), "left_anti")
       }
-    textIndexBatch(fresh, name, numBuckets, "append")
+    textIndexBatch(fresh, name, None)
   }
 
   /** Detect and excise incomplete appends (crashed between the
@@ -813,9 +812,13 @@ object TextAnalysis {
     n
   }
 
+  /** One batch of a text index: `Some(numBuckets)` builds it, `None`
+    * appends with each table's catalog bucket count. */
   private def textIndexBatch(docs: DataFrame, name: String,
-      numBuckets: Int, mode: String): Unit = {
+      numBuckets: Option[Int]): Unit = {
     val s = docs.sparkSession
+    val mode = if (numBuckets.isDefined) "overwrite" else "append"
+    def buckets(sfx: String) = numBuckets.getOrElse(Artifacts.bucketsOf(s, name + sfx))
     // next batch id from the journal — a driver scalar (1-value collect)
     val batchId =
       if (mode == "overwrite") 0L
@@ -833,16 +836,16 @@ object TextAnalysis {
       .groupBy(col("term"), col("doc_id"))
       .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
       .write.mode(mode)
-      .bucketBy(numBuckets, "term").sortBy("term")
+      .bucketBy(buckets("_postings"), "term").sortBy("term")
       .saveAsTable(name + "_postings")
     t.select(col("doc_id"), col("dl"))
       .write.mode(mode)
-      .bucketBy(numBuckets, "doc_id").sortBy("doc_id")
+      .bucketBy(buckets("_doclen"), "doc_id").sortBy("doc_id")
       .saveAsTable(name + "_doclen")
     t.select(col("doc_id"), posexplode(col("toks")).as(Seq("pos", "term")))
       .select(col("term"), col("doc_id"), col("pos").cast("long").as("pos"))
       .write.mode(mode)
-      .bucketBy(numBuckets, "term").sortBy("term")
+      .bucketBy(buckets("_positions"), "term").sortBy("term")
       .saveAsTable(name + "_positions")
     // an empty batch still lands a (0, 0) row — harmless under the sum;
     // the batch_id commits the journaled batch (written LAST)
@@ -1671,26 +1674,29 @@ object TextAnalysis {
     /** Build the index as batch 0. */
     def write(corpus: DataFrame, name: String, numBuckets: Int): Unit = {
       Artifacts.dropTables(corpus.sparkSession, name, tables)
-      land(corpus, name, 1, 0L, "overwrite", numBuckets)
+      land(corpus, name, 1, 0L, Some(numBuckets))
     }
 
-    /** One journaled batch; false iff `batchId` was already committed. */
-    def batch(docs: DataFrame, name: String, batchId: Long, sign: Int,
-        numBuckets: Int): Boolean = {
+    /** One journaled batch, appended with each table's catalog bucket
+      * count; false iff `batchId` was already committed. */
+    def batch(docs: DataFrame, name: String, batchId: Long, sign: Int): Boolean = {
       val s = docs.sparkSession
       heal(s, name)
       val fresh = s.table(name + "_stats").filter(col("batch_id") === batchId).isEmpty
-      if (fresh) land(docs, name, sign, batchId, "append", numBuckets)
+      if (fresh) land(docs, name, sign, batchId, None)
       fresh
     }
 
+    /** `Some(numBuckets)` builds the index, `None` appends a batch. */
     private def land(docs: DataFrame, name: String, sign: Int, batchId: Long,
-        mode: String, numBuckets: Int): Unit = {
+        numBuckets: Option[Int]): Unit = {
+      val s = docs.sparkSession
+      val mode = if (numBuckets.isDefined) "overwrite" else "append"
       rows(docs, sign, batchId).zip(counts).foreach { case (df, (sfx, key, _)) =>
-        df.write.mode(mode).bucketBy(numBuckets, key).sortBy(key)
+        df.write.mode(mode)
+          .bucketBy(numBuckets.getOrElse(Artifacts.bucketsOf(s, name + sfx)), key).sortBy(key)
           .saveAsTable(name + sfx)
       }
-      val s = docs.sparkSession
       import s.implicits._
       Seq(batchId).toDF("batch_id").repartition(1)
         .write.mode(mode).saveAsTable(name + "_stats")
@@ -1767,9 +1773,8 @@ object TextAnalysis {
     * read-side re-aggregation (unlike doc-keyed indexes, the SAME word
     * recurs across batches — the sum is the merge). Returns false iff
     * `batchId` was already committed (redelivered duplicate). */
-  def appendToBpeWordIndex(delta: DataFrame, name: String, batchId: Long,
-      numBuckets: Int = 8): Boolean =
-    BpeIndex.batch(delta, name, batchId, 1, numBuckets)
+  def appendToBpeWordIndex(delta: DataFrame, name: String, batchId: Long): Boolean =
+    BpeIndex.batch(delta, name, batchId, 1)
 
   /** REMOVE docs' contributions from a [[writeBpeWordIndex]] artifact —
     * right-to-be-forgotten for the vocabulary, via RETRACTION (a
@@ -1779,14 +1784,8 @@ object TextAnalysis {
     * contract (a double retraction would go negative and the read
     * filter would over-drop; the journal makes an accidental
     * RE-DELIVERY of the same retraction batch a no-op). */
-  def removeFromBpeWordIndex(docs: DataFrame, name: String, batchId: Long,
-      numBuckets: Int = 8): Boolean =
-    BpeIndex.batch(docs, name, batchId, -1, numBuckets)
-
-  /** Excise crashed appends (rows with no commit); returns the number
-    * of excised batch_ids. */
-  def healBpeIndexAppends(s: SparkSession, name: String): Long =
-    BpeIndex.heal(s, name)
+  def removeFromBpeWordIndex(docs: DataFrame, name: String, batchId: Long): Boolean =
+    BpeIndex.batch(docs, name, batchId, -1)
 
   /** COMPACT the BPE word index to one row per word. */
   def compactBpeWordIndex(s: SparkSession, name: String): Unit =
@@ -1904,22 +1903,14 @@ object TextAnalysis {
   /** APPEND a delta batch's unigram/bigram counts — prior bucket files
     * are never read or rewritten. Returns false iff `batchId` was
     * already committed (the redelivered duplicate — zero rows land). */
-  def appendToLmIndex(delta: DataFrame, name: String, batchId: Long,
-      numBuckets: Int = 8): Boolean =
-    LmIndex.batch(delta, name, batchId, 1, numBuckets)
+  def appendToLmIndex(delta: DataFrame, name: String, batchId: Long): Boolean =
+    LmIndex.batch(delta, name, batchId, 1)
 
   /** RETRACT docs' contributions (right-to-be-forgotten for the LM):
     * negative batch, read-side nets it out; a fully-retracted entry
     * leaves the table. Retraction is a journaled batch like any other. */
-  def removeFromLmIndex(docs: DataFrame, name: String, batchId: Long,
-      numBuckets: Int = 8): Boolean =
-    LmIndex.batch(docs, name, batchId, -1, numBuckets)
-
-  /** Excise crashed appends: batch_ids carrying rows in `_uni` or
-    * `_big` but absent from `_stats`. Returns the number of excised
-    * batch_ids. */
-  def healLmIndexAppends(s: SparkSession, name: String): Long =
-    LmIndex.heal(s, name)
+  def removeFromLmIndex(docs: DataFrame, name: String, batchId: Long): Boolean =
+    LmIndex.batch(docs, name, batchId, -1)
 
   /** COMPACT both LM count tables to one row per key. */
   def compactLmIndex(s: SparkSession, name: String): Unit =

@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.datasources.BucketingUtils
 import org.apache.spark.sql.functions.{col, count, lit, pmod, sequence, transform, xxhash64}
 
 import graft.functions.VectorFunctions
-import graft.operators.{Artifacts, Dedup, Similarity}
+import graft.operators.{Artifacts, Dedup, Similarity, TextAnalysis}
 
 /** The persisted-artifact rules: the generation swap's crash matrix, the
   * shared-artifact lock rule, and the drop / bucket-count helpers. Every
@@ -196,6 +196,36 @@ class ArtifactsSpec extends SparkSpec {
     } finally {
       Artifacts.dropTables(spark, ann, Similarity.AnnTables)
       Artifacts.dropTables(spark, corpus, Seq("_bands", "_reps"))
+    }
+  }
+
+  test("appends keep the catalog bucket count: text, corpus and span indexes") {
+    import spark.implicits._
+    val (text, corpus, span) = ("graft_art_text_app", "graft_art_corpus_app", "graft_art_span_app")
+    val textTables = Seq("_postings", "_doclen", "_positions", "_batches", "_stats")
+    val docs = Seq((1L, "a b c d e f g h i j"), (2L, "k l m n o p q r s t")).toDF("doc_id", "text")
+    val more = Seq((3L, "a b c d e f g h u v"), (4L, "w x y z a b c d e f")).toDF("doc_id", "text")
+    def buckets(t: String) = specOf(t).map(_.numBuckets)
+    try {
+      TextAnalysis.writeTextIndex(docs, text, numBuckets = 4)
+      TextAnalysis.appendToTextIndex(more, text)
+      Seq("_postings", "_doclen", "_positions").foreach(x =>
+        assert(buckets(text + x) == Some(4), s"text append re-bucketed $x"))
+      assert(spark.table(text + "_doclen").count() == 4)
+
+      Dedup.writeCorpusIndex(docs, corpus, numBuckets = 4)
+      Dedup.appendToCorpusIndex(more, corpus)
+      Seq("_bands", "_reps").foreach(x =>
+        assert(buckets(corpus + x) == Some(4), s"corpus append re-bucketed $x"))
+
+      Dedup.writeSpanIndex(docs, span, numBuckets = 4)
+      Dedup.appendToSpanIndex(more, span)
+      Dedup.deleteFromSpanIndex(more, span)
+      assert(buckets(span + "_grams") == Some(4), "span append re-bucketed _grams")
+    } finally {
+      Artifacts.dropTables(spark, text, textTables)
+      Artifacts.dropTables(spark, corpus, Seq("_bands", "_reps"))
+      Artifacts.dropTables(spark, span, Seq("_grams"))
     }
   }
 

@@ -321,7 +321,7 @@ class DedupSpec extends SparkSpec {
         .map(f => f.getPath.getName -> f.getLen).toMap
     }
     val before = files("graft_app_spec_bands")
-    Dedup.appendToCorpusIndex(batch2, "graft_app_spec", numBuckets = 4)
+    Dedup.appendToCorpusIndex(batch2, "graft_app_spec")
     val after = files("graft_app_spec_bands")
     assert(before.forall { case (n, len) => after.get(n).contains(len) },
       s"append rewrote prior bucket files: before=$before after=$after")
@@ -692,7 +692,7 @@ class DedupSpec extends SparkSpec {
     val batch2 = Seq((6L, base)).toDF("doc_id", "text") // exact dup of doc 1
     val delta = Seq((10L, base + " tailA tailB tailC")).toDF("doc_id", "text")
     Dedup.writeCorpusIndex(batch1, "graft_cmp_spec", numBuckets = 4)
-    Dedup.appendToCorpusIndex(batch2, "graft_cmp_spec", numBuckets = 4)
+    Dedup.appendToCorpusIndex(batch2, "graft_cmp_spec")
     Dedup.writeCorpusIndex(batch1.unionByName(batch2), "graft_cmp_full",
       numBuckets = 4)
     try {
@@ -753,7 +753,7 @@ class DedupSpec extends SparkSpec {
       fs.listStatus(loc).filter(_.isFile).map(f => f.getPath.getName -> f.getLen).toMap
     }
     val before = files("graft_spanapp_grams")
-    Dedup.appendToSpanIndex(batch2, "graft_spanapp", gram = 8, numBuckets = 4)
+    Dedup.appendToSpanIndex(batch2, "graft_spanapp", gram = 8)
     val after = files("graft_spanapp_grams")
     Dedup.writeSpanIndex(batch1.unionByName(batch2), "graft_spanfull",
       gram = 8, numBuckets = 4)
@@ -787,7 +787,7 @@ class DedupSpec extends SparkSpec {
     val in = MemoryStream[(Long, String)](spark)
     val q = in.toDF().toDF("doc_id", "text").writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        Dedup.appendToCorpusIndex(batch, "graft_stream_idx", numBuckets = 4)
+        Dedup.appendToCorpusIndex(batch, "graft_stream_idx")
       }.start()
     try {
       in.addData((1L, base))
@@ -824,7 +824,7 @@ class DedupSpec extends SparkSpec {
       (11L, (50 to 70).map(i => s"w$i").mkString(" "))
     ).toDF("doc_id", "text")
     Dedup.writeSpanIndex(batch1, "graft_spandel", gram = 8, numBuckets = 4)
-    Dedup.appendToSpanIndex(batch2, "graft_spandel", gram = 8, numBuckets = 4)
+    Dedup.appendToSpanIndex(batch2, "graft_spandel", gram = 8)
     Dedup.writeSpanIndex(batch1, "graft_spandel_ref", gram = 8, numBuckets = 4)
     def files(t: String): Map[String, Long] = {
       val loc = new org.apache.hadoop.fs.Path(
@@ -840,7 +840,7 @@ class DedupSpec extends SparkSpec {
       assert(rows("graft_spandel").map(_._1).toSet == Set(10L),
         "precondition: block not flagged while its corpus copy is live")
       val before = files("graft_spandel_grams")
-      Dedup.deleteFromSpanIndex(batch2, "graft_spandel", gram = 8, numBuckets = 4)
+      Dedup.deleteFromSpanIndex(batch2, "graft_spandel", gram = 8)
       val after = files("graft_spandel_grams")
       // delete is append-only: prior files untouched, tombstone files added
       assert(before.forall { case (n, len) => after.get(n).contains(len) },
@@ -875,9 +875,9 @@ class DedupSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
     try {
       Dedup.writeSpanIndex(batch1, "graft_spancomp", gram = 8, numBuckets = 4)
-      Dedup.appendToSpanIndex(batch2, "graft_spancomp", gram = 8, numBuckets = 4)
-      Dedup.appendToSpanIndex(batch3, "graft_spancomp", gram = 8, numBuckets = 4)
-      Dedup.deleteFromSpanIndex(batch3, "graft_spancomp", gram = 8, numBuckets = 4)
+      Dedup.appendToSpanIndex(batch2, "graft_spancomp", gram = 8)
+      Dedup.appendToSpanIndex(batch3, "graft_spancomp", gram = 8)
+      Dedup.deleteFromSpanIndex(batch3, "graft_spancomp", gram = 8)
       val preCompact = rows("graft_spancomp")
       assert(preCompact.map(_._1).toSet == Set(10L),
         "precondition: block should flag off its surviving batch2 copy")
@@ -899,7 +899,7 @@ class DedupSpec extends SparkSpec {
         "compact did not shrink the file count")
       // layout preserved: the NEXT append still matches the bucket spec
       // and multi-row re-aggregation keeps answering correctly
-      Dedup.appendToSpanIndex(batch3, "graft_spancomp", gram = 8, numBuckets = 4)
+      Dedup.appendToSpanIndex(batch3, "graft_spancomp", gram = 8)
       assert(rows("graft_spancomp").map(_._1).toSet == Set(10L))
       // crashed swap: live dropped, _tmp complete -> next compact heals
       spark.sql("ALTER TABLE graft_spancomp_grams RENAME TO graft_spancomp_grams_tmp")

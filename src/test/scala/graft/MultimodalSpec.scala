@@ -259,7 +259,7 @@ class MultimodalSpec extends SparkSpec {
       // sidecar and it must become its own query's rank-1 at cos 1
       val reupload = vecs.filter(col("vec_id") === firstId)
         .select((col("vec_id") + 50000L).as("vec_id"), col("emb"), col("nrm"))
-      Similarity.appendToAnnIndex(spark, reupload, "graft_media_lc", numBuckets = 4)
+      Similarity.appendToAnnIndex(spark, reupload, "graft_media_lc")
       val q = vecs.filter(col("vec_id") === firstId)
         .select(lit(0L).as("query_id"), col("emb").as("qe"), col("nrm").as("qn"))
       def hits(): Set[Long] =
@@ -278,7 +278,7 @@ class MultimodalSpec extends SparkSpec {
       // consistent across delete generations
       Similarity.appendToAnnIndex(spark,
         reupload.select((col("vec_id") + 10000L).as("vec_id"), col("emb"), col("nrm")),
-        "graft_media_lc", numBuckets = 4)
+        "graft_media_lc")
       assert(hits() == Set(firstId + 50000L, firstId + 60000L),
         s"after re-append: ${hits()}")
     } finally Seq("_cells", "_srp", "_pq", "_side").foreach(sfx =>

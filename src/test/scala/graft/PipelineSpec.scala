@@ -462,8 +462,7 @@ class PipelineSpec extends SparkSpec {
     // time arm effectively off (long flushInterval); trigger much faster,
     // so deferral is observable across several micro-batch boundaries
     val cfg = PipelineConfig(name = freshName(), minBatchSize = 5, maxBatchSize = 1024,
-      flushInterval = 30.seconds, triggerInterval = Some(100.millis),
-      deferSmallBatches = true)
+      flushInterval = 30.seconds, triggerInterval = Some(100.millis))
     val p = pipeline(cfg).start()
     (1 to 3).foreach(i => p.put(s"a$i"))
     // several triggers pass; 3 < minBatchSize and interval not elapsed →
@@ -484,8 +483,7 @@ class PipelineSpec extends SparkSpec {
 
   test("A8 time arm: an idle deferred carry force-flushes after flushInterval (idle time arm)") {
     val cfg = PipelineConfig(name = freshName(), minBatchSize = 100, maxBatchSize = 1024,
-      flushInterval = 400.millis, triggerInterval = Some(100.millis),
-      deferSmallBatches = true)
+      flushInterval = 400.millis, triggerInterval = Some(100.millis))
     val p = pipeline(cfg).start()
     p.put("x"); p.put("y")
     // 2 << minBatchSize: only the interval arm (watchdog, since no more
@@ -499,26 +497,23 @@ class PipelineSpec extends SparkSpec {
     // v1's flush() updates lastUpdateTime even on an empty buffer, so a
     // sub-min batch arriving after a long idle stretch still defers a
     // full interval instead of flushing against a stale clock
-    val name = "carry-clock-test"
-    try {
-      assert(CarryBuffers.take(name, 0, now = 1000L) == (Vector.empty, 1000L))
-      // overdue (elapsed 1000 >= 500) but empty: no emission, clock moves
-      assert(CarryBuffers.drain(name, Some(500L), now = 2000L).isEmpty)
-      assert(CarryBuffers.take(name, 0, now = 2100L) == (Vector.empty, 2000L))
-      // with a carry present the same deadline emits it
-      CarryBuffers.put(name, 0, Vector("x"))
-      assert(CarryBuffers.drain(name, Some(500L), now = 2600L) == Seq(0 -> Vector("x")))
-      // and a non-overdue carry stays put
-      CarryBuffers.put(name, 0, Vector("y"))
-      assert(CarryBuffers.drain(name, Some(500L), now = 2700L).isEmpty)
-      assert(CarryBuffers.take(name, 0, now = 2800L)._1 == Vector("y"))
-    } finally CarryBuffers.remove(name)
+    val cfg = PipelineConfig(name = freshName(), minBatchSize = 5, maxBatchSize = 1024,
+      flushInterval = 400.millis, triggerInterval = Some(100.millis))
+    val p = pipeline(cfg).start()
+    Thread.sleep(1000) // idle well past flushInterval
+    val t0 = System.currentTimeMillis()
+    p.put("x")
+    Thread.sleep(250)
+    assert(delivered.isEmpty, s"a sub-min row flushed ${System.currentTimeMillis() - t0} ms after an idle stretch")
+    awaitDelivered(1, timeoutMs = 2000 - (System.currentTimeMillis() - t0))
+    p.stop()
+    assert(delivered.asScala.toList == List("x"))
   }
 
   test("A8 defer with multiple workers: per-worker carries, exactly-once drain") {
     val cfg = PipelineConfig(name = freshName(), numWorkers = 3, minBatchSize = 50,
       maxBatchSize = 1024, flushInterval = 30.seconds,
-      triggerInterval = Some(100.millis), deferSmallBatches = true)
+      triggerInterval = Some(100.millis))
     val p = pipeline(cfg).start()
     val items = (1 to 40).map(i => s"w$i")
     p.putAll(items) // round-robined over 3 workers, each share < minBatchSize
@@ -535,8 +530,7 @@ class PipelineSpec extends SparkSpec {
 
   test("A8 defer: flush() and graceful stop() drain the carry (no stranded items)") {
     val cfg = PipelineConfig(name = freshName(), minBatchSize = 50, maxBatchSize = 1024,
-      flushInterval = 30.seconds, triggerInterval = Some(100.millis),
-      deferSmallBatches = true)
+      flushInterval = 30.seconds, triggerInterval = Some(100.millis))
     val p = pipeline(cfg).start()
     p.put("only")
     p.flush() // must force-drain the sub-min carry
@@ -545,6 +539,40 @@ class PipelineSpec extends SparkSpec {
     p.stop() // graceful stop drains too
     assert(delivered.asScala.toSet == Set("only", "tail"))
     assert(p.stat().itemsFlushed == 2)
+  }
+
+  test("A8 held sub-min rows launch no job") {
+    val cfg = PipelineConfig(name = freshName(), minBatchSize = 50, maxBatchSize = 1024,
+      flushInterval = 30.seconds, triggerInterval = Some(100.millis))
+    val p = pipeline(cfg).start()
+    val rec = new StreamJobRecorder(spark.streams.active.find(_.name == cfg.name).get.id.toString)
+    spark.sparkContext.addSparkListener(rec)
+    try {
+      p.putAll((1 to 10).map(i => s"j$i"))
+      Thread.sleep(1000) // ten trigger periods with 10 < minBatchSize rows held
+      rec.barrier(spark)
+    } finally spark.sparkContext.removeSparkListener(rec)
+    assert(rec.jobs.get() == 0, s"${rec.jobs.get()} jobs while only sub-min rows were held")
+    assert(delivered.isEmpty)
+    p.stop()
+    assert(delivered.size == 10)
+  }
+
+  test("A8 size cut admits whole rounds and holds a tail that would leave a short run") {
+    // 130 rows in chunks of 50, 50, 30: a cut of 100 gives each of the 2
+    // workers a full run of 50; 130 or 50 would give them runs of 15 or 25
+    val cfg = PipelineConfig(name = freshName(), numWorkers = 2, maxBatchSize = 50,
+      minBatchSize = 40, flushInterval = 10.minutes)
+    val p = pipeline(cfg).start()
+    val items = (1 to 130).map(i => s"r$i")
+    p.putAll(items)
+    awaitDelivered(100, timeoutMs = 5000)
+    Thread.sleep(300)
+    assert(delivered.size == 100, s"${delivered.size} rows delivered before flush()")
+    assert(batchSizes.asScala.forall(_ >= 40), s"short batch before flush(): ${batchSizes.asScala.toList}")
+    p.flush()
+    assert(delivered.asScala.toSet == items.toSet && delivered.size == items.size)
+    p.stop()
   }
 
   // ---- A13/A14 rate limiting (≅ reference MixedLimiter.java:11-43) ----

@@ -177,6 +177,18 @@ class QueriesSmokeSpec extends SparkSpec {
       s"tmp table names outside Artifacts (${offenders.size}): ${offenders.sorted.mkString(", ")}")
   }
 
+  test("graft.core starts no thread of its own") {
+    // the pipeline's only clock is the source's gate, polled by the
+    // streaming query: a side thread is how a carry watchdog, its drain
+    // and the lock between them grew beside the gate
+    val offenders = for {
+      p <- mainSources.filter(_.toString.contains("graft/core/"))
+      line <- codeLines(p, """new\s+Thread\b|Executors\.|\bTimer\b""".r)
+    } yield s"$p:$line"
+    assert(offenders.isEmpty,
+      s"threads, executors or timers in graft.core (${offenders.size}): ${offenders.sorted.mkString(", ")}")
+  }
+
   test("entry() returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -230,7 +230,7 @@ class SimilaritySpec extends SparkSpec {
       fs.listStatus(loc).filter(_.isFile).map(f => f.getPath.getName -> f.getLen).toMap
     }
     val before = files("graft_ann_app_cells")
-    Similarity.appendToAnnIndex(spark, batch2, "graft_ann_app", numBuckets = 4)
+    Similarity.appendToAnnIndex(spark, batch2, "graft_ann_app")
     val after = files("graft_ann_app_cells")
     try {
       assert(before.forall { case (n, len) => after.get(n).contains(len) },
@@ -271,7 +271,7 @@ class SimilaritySpec extends SparkSpec {
       // clean single-append reference index off the same frozen state
       // (refine is order-invariant, so both builds share centroids)
       Similarity.writeAnnIndex(spark, base, "graft_ann_rd_ref", numBuckets = 4)
-      Similarity.appendToAnnIndex(spark, batch, "graft_ann_rd_ref", numBuckets = 4)
+      Similarity.appendToAnnIndex(spark, batch, "graft_ann_rd_ref")
       // crash debris: a strict prefix (half, sorted) of the batch's
       // _cells delta landed with NO _srp/_pq rows — the state a crash
       // mid-_cells append leaves. The planted rows are the reference
@@ -290,10 +290,10 @@ class SimilaritySpec extends SparkSpec {
         assert(dup == 0, s"$x has duplicate vec_ids mid-crash")
       }
       // the retry IS the heal: each table converges independently
-      Similarity.appendToAnnIndex(spark, batch, "graft_ann_rd", numBuckets = 4)
+      Similarity.appendToAnnIndex(spark, batch, "graft_ann_rd")
       val afterRetry = counts("graft_ann_rd")
       // redelivery of the fully-committed batch inserts zero rows
-      Similarity.appendToAnnIndex(spark, batch, "graft_ann_rd", numBuckets = 4)
+      Similarity.appendToAnnIndex(spark, batch, "graft_ann_rd")
       assert(counts("graft_ann_rd") == afterRetry, "redelivery inserted rows")
       // final ≡ clean single-append reference, per family
       sfxs.foreach { x =>
@@ -477,7 +477,7 @@ class SimilaritySpec extends SparkSpec {
       Similarity.writeAnnIndex(spark, base, "graft_ann_drift", numBuckets = 4)
       // 2000 appended on 300 base (87% new), a mode the frozen
       // centroids/codebooks never saw
-      Similarity.appendToAnnIndex(spark, shifted, "graft_ann_drift", numBuckets = 4)
+      Similarity.appendToAnnIndex(spark, shifted, "graft_ann_drift")
       // queries: perturbed copies of 10 shifted vectors — their exact
       // neighbors live entirely inside the appended mode
       val q = gen(spark.range(1000, 1010).toDF("id"), 9, 1.0, 1.0)
@@ -678,7 +678,7 @@ class SimilaritySpec extends SparkSpec {
       // frozen scale it must route to (and match) its source
       val re = gen(spark.range(100, 101).toDF("id"), 21)
         .select((col("vec_id") + 50000L).as("vec_id"), col("emb"), col("nrm"))
-      Similarity.appendToAnnIndex(spark, re, "graft_i8_lc", numBuckets = 4)
+      Similarity.appendToAnnIndex(spark, re, "graft_i8_lc")
       val q = gen(spark.range(100, 101).toDF("id"), 21)
         .select(lit(0L).as("query_id"), col("emb").as("qe"), col("nrm").as("qn"))
       def topIds(): Seq[Long] = Similarity.annIvfIndexed(spark, q, "graft_i8_lc")
@@ -725,7 +725,7 @@ class SimilaritySpec extends SparkSpec {
       // five append batches: each lands new bucket files per table
       (0 until 5).foreach(b => Similarity.appendToAnnIndex(spark,
         gen(spark.range(250 + 50 * b, 300 + 50 * b).toDF("id"), 33),
-        "graft_ann_cmp", numBuckets = 4))
+        "graft_ann_cmp"))
       val fams = Seq[(String, (org.apache.spark.sql.SparkSession, org.apache.spark.sql.DataFrame, String) => org.apache.spark.sql.DataFrame)](
         "ivf" -> (Similarity.annIvfIndexed _),
         "srp" -> (Similarity.annSrpIndexed _),
@@ -753,7 +753,7 @@ class SimilaritySpec extends SparkSpec {
       // the swap preserved the bucket spec: a fresh append still lands
       // with the matching-bucketBy contract, and scans stay bucket-aware
       Similarity.appendToAnnIndex(spark,
-        gen(spark.range(900, 920).toDF("id"), 33), "graft_ann_cmp", numBuckets = 4)
+        gen(spark.range(900, 920).toDF("id"), 33), "graft_ann_cmp")
       import org.apache.spark.sql.execution.FileSourceScanExec
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       try {

@@ -52,7 +52,7 @@ class TextIndexSpec extends SparkSpec {
         .map(f => f.getPath.getName -> f.getLen).toMap
     }
     val before = files("graft_txt_app_postings")
-    TextAnalysis.appendToTextIndex(batch2, "graft_txt_app", numBuckets = 4)
+    TextAnalysis.appendToTextIndex(batch2, "graft_txt_app")
     val after = files("graft_txt_app_postings")
     assert(before.forall { case (n, len) => after.get(n).contains(len) },
       s"append rewrote prior bucket files: before=$before after=$after")
@@ -117,7 +117,7 @@ class TextIndexSpec extends SparkSpec {
     TextAnalysis.writeTextIndex(planted.filter(col("doc_id") <= 3),
       "graft_txt_lc", numBuckets = 4)
     TextAnalysis.appendToTextIndex(planted.filter(col("doc_id") > 3),
-      "graft_txt_lc", numBuckets = 4)
+      "graft_txt_lc")
     def files(t: String): Int = {
       val loc = new org.apache.hadoop.fs.Path(
         spark.conf.get("spark.sql.warehouse.dir"), t)
@@ -171,8 +171,7 @@ class TextIndexSpec extends SparkSpec {
     try {
       // retract doc 3: its unique words must leave the vocabulary
       TextAnalysis.removeFromBpeWordIndex(
-        base.filter(col("doc_id") === 3L), "graft_bpe_rm", batchId = 1L,
-        numBuckets = 4)
+        base.filter(col("doc_id") === 3L), "graft_bpe_rm", batchId = 1L)
       val counts = spark.table("graft_bpe_rm_words")
         .groupBy(col("word")).agg(sum(col("n")).as("n"))
         .filter(col("n") > 0)
@@ -212,8 +211,7 @@ class TextIndexSpec extends SparkSpec {
       // historical committed ids) — zero physical rows land
       val physBefore = spark.table("graft_bpe_rm_words").count()
       assert(!TextAnalysis.removeFromBpeWordIndex(
-        base.filter(col("doc_id") === 3L), "graft_bpe_rm", batchId = 1L,
-        numBuckets = 4),
+        base.filter(col("doc_id") === 3L), "graft_bpe_rm", batchId = 1L),
         "pre-compaction batch_id redelivered after compact was re-applied")
       assert(spark.table("graft_bpe_rm_words").count() == physBefore,
         "post-compact redelivery landed physical rows")
@@ -232,7 +230,7 @@ class TextIndexSpec extends SparkSpec {
     val delta = Seq((10L, (1 to 20).map(_ => "xk").mkString(" ")))
       .toDF("doc_id", "text")
     TextAnalysis.writeBpeWordIndex(base, "graft_bpe_spec", numBuckets = 4)
-    TextAnalysis.appendToBpeWordIndex(delta, "graft_bpe_spec", batchId = 1L, numBuckets = 4)
+    TextAnalysis.appendToBpeWordIndex(delta, "graft_bpe_spec", batchId = 1L)
     try {
       val idx = spark.table("graft_bpe_spec_words")
         .groupBy(col("word")).agg(sum(col("n")).as("n"))
@@ -354,7 +352,7 @@ class TextIndexSpec extends SparkSpec {
     TextAnalysis.writeTextIndex(planted.filter(col("doc_id") <= 3),
       "graft_txt_pos", numBuckets = 4)
     TextAnalysis.appendToTextIndex(planted.filter(col("doc_id") > 3),
-      "graft_txt_pos", numBuckets = 4)
+      "graft_txt_pos")
     TextAnalysis.writeTextIndex(planted, "graft_txt_pos2", numBuckets = 4)
     try {
       assert(posRows("graft_txt_pos") == posRows("graft_txt_pos2"),
@@ -416,7 +414,7 @@ class TextIndexSpec extends SparkSpec {
     val in = MemoryStream[(Long, String)](spark)
     val q = in.toDF().toDF("doc_id", "text").writeStream
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        TextAnalysis.appendToTextIndex(b, "graft_txt_stream", numBuckets = 4)
+        TextAnalysis.appendToTextIndex(b, "graft_txt_stream")
       }.start()
     try {
       in.addData(docs.take(2))
@@ -428,7 +426,7 @@ class TextIndexSpec extends SparkSpec {
       // crash the NEXT micro-batch mid-append (doc 4's stats row cut):
       // the WAL exposes it — one journaled batch_id is uncommitted
       TextAnalysis.appendToTextIndex(
-        Seq(docs(3)).toDF("doc_id", "text"), "graft_txt_stream", numBuckets = 4)
+        Seq(docs(3)).toDF("doc_id", "text"), "graft_txt_stream")
       val crashedId = spark.table("graft_txt_stream_stats")
         .agg(max(col("batch_id"))).collect().head.getLong(0)
       cutStatsRow("graft_txt_stream", crashedId)
@@ -460,7 +458,7 @@ class TextIndexSpec extends SparkSpec {
     try {
       // batch 1 (docs 4-6) crashes after its data tables land
       TextAnalysis.appendToTextIndex(planted.filter(col("doc_id") > 3),
-        "graft_txt_retry", numBuckets = 4)
+        "graft_txt_retry")
       cutStatsRow("graft_txt_retry", 1L)
       // the at-least-once RETRY calls append directly — no manual heal.
       // Without the built-in heal the crashed batch's partial postings
@@ -468,7 +466,7 @@ class TextIndexSpec extends SparkSpec {
       // and a later heal would excise the retried docs via the stale
       // journal rows; with it the result is exactly the full corpus
       TextAnalysis.appendToTextIndex(planted.filter(col("doc_id") > 3),
-        "graft_txt_retry", numBuckets = 4)
+        "graft_txt_retry")
       val inline = TextAnalysis.bm25Top(planted).collect()
         .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq
       assert(rows("graft_txt_retry") == inline,
@@ -494,7 +492,7 @@ class TextIndexSpec extends SparkSpec {
       // new docs 4-6): the input dedupe drops doc 3 up-front, so the
       // overlap cannot double its postings even before any crash
       TextAnalysis.appendToTextIndex(planted.filter(col("doc_id") >= 3),
-        "graft_txt_dup", numBuckets = 4)
+        "graft_txt_dup")
       assert(rows("graft_txt_dup") == inline,
         "overlapping append double-landed a committed doc")
       assert(spark.table("graft_txt_dup_batches")
@@ -506,7 +504,7 @@ class TextIndexSpec extends SparkSpec {
       // exemption) and the retry would stack a second copy.
       cutStatsRow("graft_txt_dup", 1L)
       TextAnalysis.appendToTextIndex(planted.filter(col("doc_id") >= 3),
-        "graft_txt_dup", numBuckets = 4)
+        "graft_txt_dup")
       assert(rows("graft_txt_dup") == inline,
         "committed-doc re-submission crash left doubled rows")
       assert(TextAnalysis.healTextIndexAppends(spark, "graft_txt_dup") == 0L)
@@ -522,7 +520,7 @@ class TextIndexSpec extends SparkSpec {
     TextAnalysis.writeTextIndex(planted.filter(col("doc_id") <= 3),
       "graft_txt_wal", numBuckets = 4)
     TextAnalysis.appendToTextIndex(planted.filter(col("doc_id") > 3),
-      "graft_txt_wal", numBuckets = 4)
+      "graft_txt_wal")
     try {
       // a complete artifact heals to a no-op
       assert(TextAnalysis.healTextIndexAppends(spark, "graft_txt_wal") == 0L)
@@ -544,7 +542,7 @@ class TextIndexSpec extends SparkSpec {
         "healed artifact drifted from the committed-batches-only corpus")
       // the excised batch re-appends cleanly and matches the inline full corpus
       TextAnalysis.appendToTextIndex(planted.filter(col("doc_id") > 3),
-        "graft_txt_wal", numBuckets = 4)
+        "graft_txt_wal")
       assert(TextAnalysis.healTextIndexAppends(spark, "graft_txt_wal") == 0L)
       val inline = TextAnalysis.bm25Top(planted).collect()
         .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq
