@@ -61,6 +61,15 @@ import org.apache.spark.util.LongAccumulator
   *    `stop()` drains (`processAllAvailable`) before stopping — the
   *    reference's semaphore-reacquisition drain trick is subsumed by
   *    foreachBatch's synchronous completion.
+  *  - checkpoint: the query writes an offset-log entry before each
+  *    micro-batch and a commit-log entry after it, into a fresh
+  *    directory under `java.io.tmpdir` on the `graftckpt` scheme
+  *    ([[CheckpointFs]]): the local disk, minus the `chmod` and
+  *    `readlink` forks Hadoop's local file system makes for every entry
+  *    without libhadoop. A `MemoryStream` cannot replay, so the logs
+  *    serve only Spark's progress bookkeeping, and nothing resumes from
+  *    them. `stop()` deletes the directory on both paths, as does a
+  *    failed `start()`.
   *  - flush (A10): `flush()` = `processAllAvailable`, a strictly
   *    stronger barrier than the reference's in-band flush event
   *    (SURVEY.md §7.4.5).
@@ -103,6 +112,7 @@ final class BatchPipeline[T: Encoder](
 
   @volatile private var query: StreamingQuery = _
   @volatile private var state: String = "NEW"
+  private var checkpoint: String = _
 
   private val listener = new StreamingQueryListener {
     override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = {}
@@ -122,14 +132,17 @@ final class BatchPipeline[T: Encoder](
   /** A16: start workers; returns when the streaming query is live. */
   def start(): this.type = synchronized {
     require(state == "NEW", s"cannot start from $state")
+    CheckpointFs.register(spark.sparkContext.hadoopConfiguration)
+    checkpoint = CheckpointFs.freshDir("graft-pipeline-ckpt-")
     spark.streams.addListener(listener)
     val cfg = config // avoid closing over `this`
     val fac = factory
     val counters = BatchPipeline.Counters(
       itemsFlushed, batchesFlushed, retries, itemsDropped, workerItems, workerBatches)
-    query = source.toDS()
+    try query = source.toDS()
       .writeStream
       .queryName(cfg.name)
+      .option("checkpointLocation", checkpoint)
       // A6-A8: the gate decides when a micro-batch is due; Spark polls it
       .trigger(Trigger.ProcessingTime(0L))
       .foreachBatch { (ds: Dataset[T], _: Long) =>
@@ -154,6 +167,11 @@ final class BatchPipeline[T: Encoder](
         }
       }
       .start()
+    catch { case e: Throwable =>
+      spark.streams.removeListener(listener)
+      CheckpointFs.delete(checkpoint)
+      throw e
+    }
     state = "STARTED"
     this
   }
@@ -184,11 +202,15 @@ final class BatchPipeline[T: Encoder](
     if (state == "STARTED") {
       state = "STOPPED" // reject new puts first, like the CAS in v1 stop()
       pendingLock.synchronized { pendingLock.notifyAll() }
-      if (waitForCompletion) BatchPipeline.raised(source.draining)(query.processAllAvailable())
-      query.stop()
-      query.awaitTermination(config.stopTimeout.toMillis)
-      spark.streams.removeListener(listener)
-      Limiters.remove(config.name)
+      try {
+        if (waitForCompletion) BatchPipeline.raised(source.draining)(query.processAllAvailable())
+        query.stop()
+        query.awaitTermination(config.stopTimeout.toMillis)
+      } finally {
+        spark.streams.removeListener(listener)
+        Limiters.remove(config.name)
+        CheckpointFs.delete(checkpoint)
+      }
     }
   }
 

@@ -486,8 +486,9 @@ class PipelineSpec extends SparkSpec {
       flushInterval = 400.millis, triggerInterval = Some(100.millis))
     val p = pipeline(cfg).start()
     p.put("x"); p.put("y")
-    // 2 << minBatchSize: only the interval arm (watchdog, since no more
-    // data arrives to trigger a micro-batch) can flush these
+    // 2 << minBatchSize and no more data arrives: only the source's
+    // force arm (flushInterval since the last cut or empty poll) admits
+    // these two rows
     awaitDelivered(2, timeoutMs = 5000)
     assert(delivered.asScala.toSet == Set("x", "y"))
     p.stop()
@@ -573,6 +574,76 @@ class PipelineSpec extends SparkSpec {
     p.flush()
     assert(delivered.asScala.toSet == items.toSet && delivered.size == items.size)
     p.stop()
+  }
+
+  /** The checkpoint directories in `java.io.tmpdir`. */
+  private def checkpointDirs(): Set[java.io.File] =
+    Option(new java.io.File(System.getProperty("java.io.tmpdir")).listFiles())
+      .map(_.filter(_.getName.startsWith("graft-pipeline-ckpt-")).toSet).getOrElse(Set.empty)
+
+  test("micro-batches fork no process") {
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    val cfg = PipelineConfig(name = freshName(), flushInterval = 100.millis)
+    val p = pipeline(cfg).start()
+    p.put("warm-up")
+    p.flush()
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    val dump = java.nio.file.Files.createTempFile("pipeline-forks", ".jfr")
+    try {
+      rec.start()
+      (1 to 20).foreach { i => p.put(s"c$i"); p.flush() }
+      // control: one fork through Hadoop, so a recording that sees no
+      // process start at all cannot pass
+      org.apache.hadoop.util.Shell.execCommand("true")
+      rec.stop()
+      rec.dump(dump)
+      val hadoopForks = RecordingFile.readAllEvents(dump).asScala.filter { e =>
+        Option(e.getStackTrace).exists(_.getFrames.asScala.exists(
+          _.getMethod.getType.getName.startsWith("org.apache.hadoop")))
+      }
+      val (control, strays) = hadoopForks.map(_.getString("command")).partition(_ == "true")
+      assert(control.size == 1, "the recording saw no control fork")
+      assert(strays.size == 0, s"${strays.size} Hadoop forks during 20 micro-batches, " +
+        s"first: ${strays.take(3).mkString("; ")}")
+    } finally {
+      rec.close()
+      java.nio.file.Files.deleteIfExists(dump)
+      p.stop()
+    }
+    assert(delivered.size == 21)
+  }
+
+  test("the checkpoint directory is gone after stop() and after stop(false)") {
+    for (graceful <- Seq(true, false)) {
+      val before = checkpointDirs()
+      val p = pipeline(PipelineConfig(name = freshName(), flushInterval = 100.millis)).start()
+      p.put("x")
+      p.flush()
+      val dirs = checkpointDirs() -- before
+      assert(dirs.size == 1, s"expected one new checkpoint directory, saw $dirs")
+      assert(Set("offsets", "commits").subsetOf(dirs.head.list().toSet),
+        s"no logs in ${dirs.head}: ${dirs.head.list().toList}")
+      p.stop(graceful)
+      assert(!dirs.head.exists(), s"${dirs.head} left after stop($graceful)")
+    }
+  }
+
+  test("file: resolves to the same file systems before and after a pipeline starts") {
+    import org.apache.hadoop.fs.{AbstractFileSystem, FileSystem}
+    val file = java.net.URI.create("file:///")
+    def resolved() = Seq(spark.sparkContext.hadoopConfiguration, spark.sessionState.newHadoopConf())
+      .flatMap(conf => Seq(FileSystem.getFileSystemClass("file", conf),
+        AbstractFileSystem.get(file, conf).getClass))
+    val before = resolved()
+    val p = pipeline(PipelineConfig(name = freshName(), flushInterval = 100.millis)).start()
+    try {
+      p.put("x")
+      p.flush()
+      assert(resolved() == before)
+      assert(!before.exists(_.getName.startsWith("graft.")), before)
+    } finally p.stop()
   }
 
   // ---- A13/A14 rate limiting (≅ reference MixedLimiter.java:11-43) ----
